@@ -59,8 +59,8 @@ object Bench {
     * distinct plans and every round produced sub-3 s phantom
     * "regressions" with unchanged code (r10 measured the full
     * interleave at 1.6x inflation; the r13 one-JVM artifact flagged
-    * four >2x upticks that the isolated protocol then cleared). The
-    * builder-side tools/bench_sharded.sh fixed this for the committed
+    * four >2x upticks that the isolated protocol then cleared). An
+    * external shell orchestrator (since removed) fixed this for the committed
     * BENCH_FULL.json, but the DRIVER-visible artifact still came from
     * one JVM — so the orchestrator now lives IN Bench: a bare
     * `runMain graft.Bench` forks one fresh child JVM per alphabetical
@@ -118,7 +118,7 @@ object Bench {
         s"[bench] shard $i/$nShards exited $rc (log: $log) — retrying once")
       rc
     })
-    // Merge (the tools/merge_bench.py shape): per-query medians union,
+    // Merge: per-query medians union,
     // total = sum of successful medians, failed = union.
     val fRe = """"failed":\[([^\]]*)\]""".r
     val merged = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -267,8 +267,8 @@ object Bench {
     // cache and every round produces a couple of sub-3 s phantom
     // "regressions" that an isolated re-bench then has to adjudicate;
     // fresh-JVM cohorts of ~57 plans keep each query's environment
-    // reproducible. tools/bench_sharded.sh runs the cohorts and merges
-    // their detail files into the BENCH_FULL.json shape.
+    // reproducible. selfShard runs the cohorts and merges their detail
+    // files into the BENCH_FULL.json shape.
     val names = sys.env.get("SPARK_GRAFT_BENCH_SHARD") match {
       case Some(spec) =>
         val Array(i, nS) = spec.split("/").map(_.toInt)

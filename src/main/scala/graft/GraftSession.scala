@@ -23,6 +23,13 @@ object GraftSession {
       // events.ts is INT64 TIMESTAMP(NANOS) parquet (see Tables.events).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // Generated-class cache (static conf, default 100 entries). One warm
+      // `Pipeline.run` pca call compiled 192 classes when its operators
+      // built one Window per column (~2 s of Janino per call on 4 cores),
+      // and still 49 (~0.6 s) with one Window per spec, because each call
+      // evicts code the next one needs. 1000 entries hold a whole call:
+      // warm calls compile nothing.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** Builder for streaming jobs with large state: RocksDB state store
     * (spills keyed state to local disk instead of executor heap) +

@@ -29,7 +29,13 @@ case class PipelineConfig(
     model: String = "pca",
     mlpHidden: Int = 8,
     lstmHidden: Int = 8,
-    lstmBottleneck: Int = 4)
+    lstmBottleneck: Int = 4) {
+  require(Set("first", "last")(duplicateHandling),
+    s"duplicateHandling must be first or last, got '$duplicateHandling'")
+  require(Set("ffill", "bfill", "mean", "median", "zero")(missingStrategy),
+    s"missingStrategy must be one of ffill, bfill, mean, median, zero, got '$missingStrategy'")
+  require(Set("pca", "mlp", "lstm")(model), s"model must be pca, mlp or lstm, got '$model'")
+}
 
 /** The reference's `run_pipeline` (main.py:58-233) as one composable
   * call: index -> clean -> features -> dropna -> scale -> sequence ->
@@ -89,7 +95,6 @@ object Pipeline {
         operators.LstmAutoencoder.detectMulti(scaled, cfg.seriesKeys, cfg.order,
           scaledCols, cfg.seqLen, cfg.lstmHidden, cfg.lstmBottleneck,
           flagFactor = cfg.flagFactor)
-      case other => throw new IllegalArgumentException(s"unknown model: $other")
     }
   }
 }

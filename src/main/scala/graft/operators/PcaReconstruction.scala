@@ -41,10 +41,29 @@ object PcaReconstruction {
              seqLen: Int = GraftConfig.SequenceLength, k: Int = 4,
              flagFactor: Double = 4.0): DataFrame = {
     require(k > 0 && k <= seqLen, s"k=$k must be in [1, seqLen=$seqLen]")
-    // Cache the sequenced input BEFORE the mean pass: the mean aggregate,
-    // the PCA fit, and the scoring pass all reread it, and sequencing is
-    // the expensive window shuffle.
-    val seqs = TimeSeriesOps.sequences(df, keys, order, target, seqLen, "seq").cache()
+    // Materialize the sequenced input BEFORE the mean pass: the mean
+    // aggregate, the PCA fit, and the scoring pass all reread it, and
+    // sequencing is the expensive window shuffle. An eager localCheckpoint,
+    // not cache() (as in DistributedSgd.detectOnSequences): a CacheManager
+    // entry is keyed by plan and was never released, so a later call with
+    // the same plan over rewritten input files got the first call's
+    // sequences.
+    //
+    // AQE is off for the checkpoint (restored in `finally`; nothing of this
+    // plan runs outside the window). Under AQE the checkpoint coalesced the
+    // final shuffle, so the mean's and the PCA fit's double sums ran over
+    // other partitions and the scores changed bits; and an AQE plan reports
+    // UnknownPartitioning, so the flag window below shuffled the scored rows
+    // again. Without AQE the checkpoint keeps the window's hash-by-key
+    // layout, the one cache() gave (Spark plans cached data without
+    // final-stage coalescing): same bits, no exchange for the flag window.
+    // The trade: joins inside `df` are planned statically here.
+    val spark = df.sparkSession
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    val seqs = try TimeSeriesOps.sequences(df, keys, order, target, seqLen, "seq").localCheckpoint()
+      finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
 
     // Per-dimension mean: one aggregate, one L-element row to the driver.
     val meanRow = seqs.select(

@@ -54,6 +54,7 @@ object ProductQuantizer {
                   dim: Int, m: Int, k: Int,
                   iters: Int): Seq[Seq[(Int, Array[Float])]] = {
     require(m >= 1 && dim % m == 0, s"dim=$dim must split evenly into m=$m subspaces")
+    require(fullInit.size == k, s"fullInit has ${fullInit.size} centroids, expected k=$k")
     val sub = dim / m
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val SumDec = DecimalType(28, 6)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -43,41 +45,51 @@ object TimeSeriesOps {
     ))
   }
 
+  /** Adds (or replaces in place, like `withColumn`) every named column in
+    * ONE projection, in the given order. Window expressions added this way
+    * share one logical `Window` per window spec; a `withColumn` chain
+    * builds one `Window` per column, and each distinct plan node costs its
+    * own generated classes on every call.
+    */
+  private def withColumnsInOrder(df: DataFrame, cols: Seq[(String, Column)]): DataFrame =
+    df.withColumns(ListMap(cols: _*))
+
   /** Lag features per series (ref: preprocessing.py:198-221
-    * add_lag_features). One window spec shared by every lag -> a single
-    * shuffle + sort regardless of how many lags are requested.
+    * add_lag_features). Every lag is added in one projection over one
+    * window spec -> one `Window` operator and a single shuffle + sort
+    * regardless of how many lags are requested.
     */
   def addLags(df: DataFrame, keys: Seq[String], order: Seq[String],
               target: String, lags: Seq[Int]): DataFrame = {
     val w = seriesWindow(keys, order)
-    lags.filter(_ > 0).foldLeft(df) { (d, l) =>
-      d.withColumn(s"${target}_lag_$l", lag(col(target), l).over(w))
-    }
+    withColumnsInOrder(df,
+      lags.filter(_ > 0).map(l => s"${target}_lag_$l" -> lag(col(target), l).over(w)))
   }
 
   /** Rolling features over PAST-only rows — the reference computes
     * rolling stats on shift(1) so the current row never leaks
     * (ref: preprocessing.py:223-260 add_rolling_features). Frame is
     * ROWS [-w, -1], min_periods=1 falls out of SQL null semantics.
+    * Every (window, agg) column is added in one projection: the frames
+    * differ but the partition + order spec is shared, so all of them are
+    * evaluated by one `Window` operator.
     */
   def addRolling(df: DataFrame, keys: Seq[String], order: Seq[String],
                  target: String, windows: Seq[Int],
                  aggs: Seq[String] = graft.GraftConfig.RollingAggs): DataFrame = {
     val base = seriesWindow(keys, order)
-    windows.filter(_ > 0).foldLeft(df) { (d, win) =>
+    withColumnsInOrder(df, for (win <- windows.filter(_ > 0); a <- aggs) yield {
       val w = base.rowsBetween(-win, -1)
-      aggs.foldLeft(d) { (dd, a) =>
-        val c = a match {
-          case "mean" => graft.functions.CleanFunctions.exactMeanOver(col(target), w)
-          case "std"  => stddev_samp(col(target)).over(w)
-          case "min"  => min(col(target)).over(w)
-          case "max"  => max(col(target)).over(w)
-          case "sum"  => sum(col(target)).over(w)
-          case other  => throw new IllegalArgumentException(s"unknown rolling agg: $other")
-        }
-        dd.withColumn(s"${target}_roll_${a}_${win}h", c)
+      val c = a match {
+        case "mean" => graft.functions.CleanFunctions.exactMeanOver(col(target), w)
+        case "std"  => stddev_samp(col(target)).over(w)
+        case "min"  => min(col(target)).over(w)
+        case "max"  => max(col(target)).over(w)
+        case "sum"  => sum(col(target)).over(w)
+        case other  => throw new IllegalArgumentException(s"unknown rolling agg: $other")
       }
-    }
+      s"${target}_roll_${a}_${win}h" -> c
+    })
   }
 
   /** Missing-value strategies (ref: preprocessing.py:125-173
@@ -316,16 +328,34 @@ object TimeSeriesOps {
   }
 
   /** MinMax over a whole feature set at once (ref main.py:168-181 scales
-    * every numeric column): one window pass per key, all columns' min/max
-    * computed in the same shuffle.
+    * every numeric column), in two `Window` operators over one partition
+    * spec, so one shuffle whatever the column count: the first computes
+    * every column's min and max, the second emits each scaled value as a
+    * window output over a single-row frame, `max(scaled).over(ROWS [0, 0])`,
+    * which is exactly the scaled value of that row.
+    *
+    * Measured negative (kept here so it is not retried): the plain shape,
+    * one stats `Window` and then one projection holding all scaled
+    * expressions as aliases, ran out of memory on a 3 GB heap on the lstm
+    * path. `detectMulti`'s `na.drop` on the scaled columns is pushed below
+    * that projection, and Catalyst's constraint propagation
+    * (`UnaryNode.getAllValidConstraints`) then doubles the constraint set
+    * once per alias: 2^23 constraints for the pipeline's 23 columns. A
+    * filter on window outputs stops above the `Window`, and the `Window`
+    * adds no aliases for the constraints to multiply through. (Turning off
+    * `spark.sql.constraintPropagation.enabled` also avoids it, but users'
+    * sessions keep it on.)
     */
   def minMaxScaleAll(df: DataFrame, keys: Seq[String], cols: Seq[String],
                      suffix: String = "_scaled"): DataFrame = {
     val w = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
-    cols.foldLeft(df) { (d, c) =>
-      d.withColumn(c + suffix,
-        safeDiv(col(c) - min(col(c)).over(w), max(col(c)).over(w) - min(col(c)).over(w)))
-    }
+    val (mn, mx) = (cols.indices.map(i => s"__mm_min_$i"), cols.indices.map(i => s"__mm_max_$i"))
+    val stats = withColumnsInOrder(df, cols.indices.flatMap(i =>
+      Seq(mn(i) -> min(col(cols(i))).over(w), mx(i) -> max(col(cols(i))).over(w))))
+    val row = w.rowsBetween(Window.currentRow, Window.currentRow)
+    withColumnsInOrder(stats, cols.indices.map(i => cols(i) + suffix ->
+        max(safeDiv(col(cols(i)) - col(mn(i)), col(mx(i)) - col(mn(i)))).over(row)))
+      .drop(mn ++ mx: _*)
   }
 
   /** Standard (z) scaling per series; sample stddev for oracle parity. */

@@ -1090,7 +1090,7 @@ object SimilarityQueries {
               element_at(col("lm"), lit(j * PqK) + col(s"c$j")).cast(DecimalType(18, 6)))
             .reduceLeft(_ + _).cast("double").as("adc"))
       val short = adc.withColumn("ark", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("adc"), col("n_id"))))
+          Window.partitionBy("q_id").orderBy(col("adc").asc_nulls_last, col("n_id"))))
         .filter(col("ark") <= AdcShortlist)
         .select(col("q_id"), col("n_id"))
       val sc = short

@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.CleanFunctions
+import graft.sources.CsvSource
 
 class PipelineSpec extends AnyFunSuite {
   import SparkTestSession.{sfDir, spark}
@@ -40,5 +46,66 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.count() > 0)
     assert(out.filter(col("recon_err").isNull || col("recon_err") < 0).count() == 0)
     assert(out.filter(!col("is_anomaly").isin(0L, 1L)).count() == 0)
+  }
+
+  test("prepare's optimized plan has one Window per window spec (<= 6)") {
+    val plan = Pipeline.prepare(graft.sources.Tables.events(spark, sfDir), PipelineConfig())
+      .queryExecution.optimizedPlan
+    val windows = plan.collect { case w: Window => w }.size
+    assert(windows <= 6, s"$windows Window nodes in the optimized plan of Pipeline.prepare")
+  }
+
+  test("pca run reads rewritten input and leaves no cached data behind") {
+    // Test suites run one after another in the forked test JVM, so clearing
+    // the shared session's cache here cannot race another suite.
+    spark.catalog.clearCache()
+    val dir = Files.createTempDirectory("graft-pipeline-csv")
+    def csv(name: String, spike: Double): String = {
+      val rows = for (u <- 1 to 2; i <- 0 until 120) yield {
+        val ts = java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusHours(i)
+          .format(java.time.format.DateTimeFormatter.ofPattern("MMM d, yyyy h:mm a",
+            java.util.Locale.ENGLISH))
+        val v = 10.0 + 5.0 * math.sin(2 * math.Pi * (i % 24) / 24.0) +
+          (if (u == 1 && i == 90) spike else 0.0)
+        s"${u * 1000 + i};$u;$ts;${f"$v%.3f".replace('.', ',')}"
+      }
+      val path = dir.resolve(name)
+      Files.write(path, ("event_id;user_id;Start date;value" +: rows).mkString("\n").getBytes)
+      path.toString
+    }
+    val cfg = PipelineConfig(lags = Seq(1, 2), rollingWindows = Seq(3), seqLen = 12, pcaComponents = 2)
+    def result(path: String): Seq[String] = {
+      val events = CsvSource.load(spark, path, ";", Seq("Start date"))
+        .select(col("event_id").cast("long").as("event_id"),
+          col("user_id").cast("long").as("user_id"), col("Start date").as("ts"),
+          CleanFunctions.cleanNumeric(col("value")).as("value"))
+      val rows = Pipeline.run(events, cfg).select("event_id", "recon_err", "is_anomaly")
+        .collect().map(_.mkString(",")).sorted.toSeq
+      assert(spark.sharedState.cacheManager.isEmpty, "Pipeline.run left a cache entry")
+      rows
+    }
+    val path = csv("ts.csv", spike = 0.0)
+    val first = result(path)
+    val expected = result(csv("other.csv", spike = 60.0))
+    assert(first != expected)
+    csv("ts.csv", spike = 60.0)
+    assert(result(path) == expected, "second call over the rewritten file returned stale rows")
+    dir.toFile.listFiles.foreach(_.delete())
+    dir.toFile.delete()
+  }
+
+  test("PipelineConfig rejects an unknown duplicateHandling") {
+    val e = intercept[IllegalArgumentException](PipelineConfig(duplicateHandling = "mean"))
+    assert(e.getMessage.contains("duplicateHandling"))
+  }
+
+  test("PipelineConfig rejects an unknown missingStrategy") {
+    val e = intercept[IllegalArgumentException](PipelineConfig(missingStrategy = "linear"))
+    assert(e.getMessage.contains("missingStrategy"))
+  }
+
+  test("PipelineConfig rejects an unknown model") {
+    val e = intercept[IllegalArgumentException](PipelineConfig(model = "gru"))
+    assert(e.getMessage.contains("model"))
   }
 }
