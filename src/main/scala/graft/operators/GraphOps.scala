@@ -63,12 +63,15 @@ object GraphOps {
     // join re-planning they buy, even at 1 shuffle partition.
     try {
       // Pre-partition the symmetrized edges by x ONCE (r16 optimization,
-      // guide §2.4): localCheckpoint preserves the hash partitioning, so
-      // the seed aggregation (groupBy x) and every round's neighbor-min
-      // join (on x) reuse the layout — the EDGE table, the only
-      // corpus-proportional side of the loop, is never exchanged again.
-      // The old shape re-shuffled sym TWICE per round (the prop subtree
-      // was duplicated under the pointer-jump self-join).
+      // guide §2.4), meant to let the seed aggregation (groupBy x) and
+      // every round's neighbor-min join (on x) reuse the layout. MEASURED:
+      // with AQE on (the default), localCheckpoint of this plan reports
+      // UnknownPartitioning(0), so every round's executed plan still has
+      // an Exchange hashpartitioning(x) directly over the sym scan — the
+      // EDGE table is re-exchanged once per round (sf0.001,
+      // customer_components and dedup_clusters, every round). The old
+      // shape re-shuffled sym TWICE per round (the prop subtree was
+      // duplicated under the pointer-jump self-join).
       val sym = sym0.repartition(parts.toInt, col("x")).localCheckpoint()
       // Seed with min(id, min neighbor) — the result of the first
       // identity-label round, folded into one aggregate. groupBy(x) over

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Write-path data-layout primitives.
   *
@@ -52,41 +53,29 @@ object LayoutOps {
     * alternative is rejecting the blob).
     *
     * The skip-to-next-shard decision depends on every prior placement,
-    * so this is a keyed O(1)-state sorted fold (the cusumReset shape),
-    * NOT a window — and being all-integer it replays exactly in a
-    * recursive CTE. Appends `shard_file` and `byte_offset`.
+    * so this is a keyed O(1)-state sorted fold (the cusumReset shape, on
+    * `TimeSeriesOps.scanSeries`), NOT a window — and being all-integer it
+    * replays exactly in a recursive CTE. Appends `shard_file` and
+    * `byte_offset`; a blob with a null size gets a null placement and
+    * leaves the shard state untouched.
     */
   def packFirstFit(df: DataFrame, keys: Seq[String], order: Seq[String],
-                   sizeCol: String, capacity: Long,
-                   numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "packFirstFit needs stream keys")
+                   sizeCol: String, capacity: Long): DataFrame = {
     require(capacity > 0, s"capacity=$capacity must be positive")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn("__pf_n", col(sizeCol).cast(LongType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields ++
-      Seq(StructField("shard_file", LongType), StructField("byte_offset", LongType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val nIdx = sorted.schema.fieldIndex("__pf_n")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var file = 0L; var free = 0L
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; file = 0L; free = 0L }
-          val n = r.getLong(nIdx)
+    TimeSeriesOps.scanSeries(df, keys, order, Seq(col(sizeCol).cast(LongType)),
+        Seq(StructField("shard_file", LongType), StructField("byte_offset", LongType)),
+        perRow = true) { run =>
+      var file = 0L; var free = 0L
+      run.map { r =>
+        if (r.isNullAt(0)) Seq(null, null)
+        else {
+          val n = r.getLong(0)
           if (free > 0L && free + n > capacity) { file += 1L; free = 0L }
           val off = free
           free += n
-          // Drop the shadow column (last) and append the placement.
-          Row.fromSeq(r.toSeq.init ++ Seq[Any](file, off))
+          Seq(file, off)
         }
-      }, schema)
+      }
+    }
   }
 }

@@ -2,9 +2,10 @@ package graft.operators
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.CleanFunctions.safeDiv
 
@@ -444,6 +445,66 @@ object TimeSeriesOps {
     df.withColumn(outCol, safeDiv(num, den))
   }
 
+  /** The keyed series scan behind every recurrence no window expression
+    * can carry ([[ewmaRecursive]] … [[burstPath]], `LayoutOps.packFirstFit`
+    * and the `ts_lttb_downsample` fold): repartition on the series keys
+    * into `spark.sql.shuffle.partitions` partitions, sort within each on
+    * (keys ++ order), then one pass per partition that hands each series'
+    * run of rows to `run`. Each key's rows are contiguous in exactly one
+    * partition, so results do not depend on the partition count.
+    *
+    * `run` is called once per series, so any state it declares is fresh
+    * for every series. Each row it reads holds the typed `inputs` (casts
+    * of the operator's columns) at positions 0 until inputs.length: they
+    * lead the projection and are read by position, never by name, so no
+    * input column can collide with them. It returns the `outs` values of
+    * each output row:
+    *   - perRow: exactly one output per input row, lazily and in order
+    *     (a `run.map`); the result is the input row with `outs` appended;
+    *   - otherwise any number of rows per series; the result is
+    *     `keys ++ outs` (a series with no input row emits nothing).
+    * Output names must be new to the result: a fold never emits a
+    * duplicate column.
+    */
+  private[graft] def scanSeries(df: DataFrame, keys: Seq[String], order: Seq[String],
+                                inputs: Seq[Column], outs: Seq[StructField], perRow: Boolean)(
+      run: Iterator[Row] => Iterator[Seq[Any]]): DataFrame = {
+    require(keys.nonEmpty, "a series scan needs series keys (single-series mode: add a literal key)")
+    val spark = df.sparkSession
+    val kept = if (perRow) df.schema.fields.toSeq else keys.map(df.schema(_))
+    // Compared case-insensitively, as Spark resolves column names by default.
+    val lower = (f: StructField) => f.name.toLowerCase(java.util.Locale.ROOT)
+    val outNames = outs.map(lower)
+    require(outNames.distinct.size == outNames.size && !kept.map(lower).exists(outNames.contains),
+      s"output columns [${outs.map(_.name).mkString(", ")}] must be distinct and new " +
+        s"to the input [${kept.map(_.name).mkString(", ")}]")
+    val n = inputs.length
+    val scanned = df
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, keys.map(col): _*)
+      .sortWithinPartitions((keys ++ order).map(col): _*)
+      .select(inputs ++ (if (perRow) Seq(col("*")) else keys.map(col)): _*)
+    val keyIdx =
+      if (perRow) keys.map(k => n + df.schema.fieldIndex(k)) else keys.indices.map(n + _)
+    spark.createDataFrame(
+      scanned.rdd.mapPartitions { rows =>
+        val in = rows.map(r => (keyIdx.map(r.get), r)).buffered
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val key = in.head._1
+          val series = new Iterator[Row] {
+            def hasNext: Boolean = in.hasNext && in.head._1 == key
+            def next(): Row = in.next()._2
+          }
+          val out =
+            if (perRow) {
+              val (rs, ins) = series.duplicate
+              rs.zip(run(ins)).map { case (r, o) => Row.fromSeq(r.toSeq.drop(n) ++ o) }
+            } else run(series).map(o => Row.fromSeq(key ++ o))
+          // Drain whatever `run` left, so the next run starts at a new key.
+          out ++ { series.foreach(_ => ()); Iterator.empty }
+        }
+      }, StructType(kept ++ outs))
+  }
+
   /** Recursive (full-history) EWMA — the long-span path the lag-kernel
     * [[ewma]] guards against: state-scan recurrence
     *   num_t = [x_t] + (1-alpha) * num_{t-1}
@@ -452,123 +513,62 @@ object TimeSeriesOps {
     * which is exactly pandas `ewm(adjust=True)` with position-aged weights
     * (a null row ages the weights but contributes nothing). No window
     * expression can carry this state, so this is the documented
-    * mapPartitions case: repartition on the series key, sort within
-    * partitions on (key, order), one O(1)-state pass per partition.
-    * Distribution-safe: each key's rows are contiguous in exactly one
-    * partition, so results are independent of partition count.
+    * [[scanSeries]] case: one O(1)-state pass per series.
     */
   def ewmaRecursive(df: DataFrame, keys: Seq[String], order: Seq[String],
                     target: String, alpha: Double,
-                    outCol: String = "ewma", numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "ewmaRecursive needs series keys (single-series mode: add a literal key)")
+                    outCol: String = "ewma"): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
-    // The shadow column is dropped POSITIONALLY (last field) after the
-    // scan; a pre-existing column with either name would make withColumn
-    // replace-in-place and silently misalign every row.
-    require(!df.columns.contains("__ewma_in"),
-      "ewmaRecursive: input already has a __ewma_in column")
-    require(!df.columns.contains(outCol),
-      s"ewmaRecursive: input already has the output column '$outCol'")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Append a double-cast shadow of the target so any numeric type
-    // (decimal/float/int) works — getDouble on the raw column would
-    // ClassCastException for non-double numerics.
-    val sorted = df.withColumn("__ewma_in", col(target).cast(DoubleType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields :+ StructField(outCol, DoubleType))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val tIdx = sorted.schema.fieldIndex("__ewma_in")
     val decay = 1.0 - alpha
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var num = 0.0
-        var den = 0.0
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; num = 0.0; den = 0.0 }
-          num *= decay
-          den *= decay
-          if (!r.isNullAt(tIdx)) { num += r.getDouble(tIdx); den += 1.0 }
-          // Drop the shadow column (last) and append the smoothed value.
-          Row.fromSeq(r.toSeq.init :+ (if (den == 0.0) null else num / den))
-        }
-      }, schema)
+    // The double cast lets any numeric target (decimal/float/int) in —
+    // getDouble on the raw column would ClassCastException for
+    // non-double numerics.
+    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField(outCol, DoubleType)), perRow = true) { run =>
+      var num = 0.0
+      var den = 0.0
+      run.map { r =>
+        num *= decay
+        den *= decay
+        if (!r.isNullAt(0)) { num += r.getDouble(0); den += 1.0 }
+        Seq(if (den == 0.0) null else num / den)
+      }
+    }
   }
 
   /** Holt's linear-trend (double exponential) smoothing, FINAL state per
     * series: level/trend after folding the whole ordered series, plus the
     * h-step-ahead forecast level + h*trend. The recurrence
     * (l' = a*x + (1-a)(l+b); b' = g*(l'-l) + (1-g)*b, init l=x0, b=0)
-    * is stateful, so like [[ewmaRecursive]] it runs as a keyed
-    * repartition + in-partition sorted fold with O(1) state per series —
-    * no per-series buffering, streams at any series length. Unlike the
-    * EWMA (which emits every row) the output here is ONE row per series,
-    * which makes the fold expressible in DuckDB as a `list_reduce` in
-    * the same left-to-right IEEE order — an EXACT oracle for a recursive
-    * operator. Null targets are skipped on both engines.
+    * is stateful, so like [[ewmaRecursive]] it runs on [[scanSeries]]
+    * with O(1) state per series — no per-series buffering, streams at any
+    * series length. Unlike the EWMA (which emits every row) the output
+    * here is ONE row per series, which makes the fold expressible in
+    * DuckDB as a `list_reduce` in the same left-to-right IEEE order — an
+    * EXACT oracle for a recursive operator. Null targets are skipped on
+    * both engines, so a series with no non-null target emits no row.
     */
   def holtSmooth(df: DataFrame, keys: Seq[String], order: Seq[String],
-                 target: String, alpha: Double, gamma: Double,
-                 numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "holtSmooth needs series keys")
+                 target: String, alpha: Double, gamma: Double): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
     require(gamma > 0 && gamma < 1, s"gamma=$gamma must be in (0, 1)")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
-      .where(col(target).isNotNull)
-      .select((keys.map(col) ++ order.map(col) :+ col(target).cast(DoubleType).as("__holt_in")): _*)
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val keyFields = keys.map(k => sorted.schema(k))
-    val schema = StructType(keyFields ++ Seq(
-      StructField("level", DoubleType), StructField("trend", DoubleType),
-      StructField("n", LongType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val tIdx = sorted.schema.fieldIndex("__holt_in")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var level = 0.0; var trend = 0.0; var n = 0L
-        // Seq[Any] is load-bearing: Seq(level, trend, n) would unify to
-        // Seq[Double] and numerically WIDEN the Long count to a Double,
-        // which the LongType row encoder then rejects.
-        def emit(): Row = Row.fromSeq(curKey ++ Seq[Any](level, trend, n))
-        new Iterator[Row] {
-          private var pending: Row = null
-          private var done = false
-          private def advance(): Unit = {
-            while (pending == null && rows.hasNext) {
-              val r = rows.next()
-              val k = keyIdx.map(r.get)
-              if (k != curKey) {
-                if (curKey != null) pending = emit()
-                curKey = k; level = r.getDouble(tIdx); trend = 0.0; n = 1L
-              } else {
-                val x = r.getDouble(tIdx)
-                val nl = alpha * x + (1.0 - alpha) * (level + trend)
-                trend = gamma * (nl - level) + (1.0 - gamma) * trend
-                level = nl
-                n += 1L
-              }
-            }
-            if (pending == null && !done && !rows.hasNext && curKey != null) {
-              pending = emit(); done = true
-            }
-          }
-          def hasNext: Boolean = { advance(); pending != null }
-          def next(): Row = { advance(); val r = pending; pending = null; r }
-        }
-      }, schema)
+    scanSeries(df.where(col(target).isNotNull), keys, order,
+        Seq(col(target).cast(DoubleType)),
+        Seq(StructField("level", DoubleType), StructField("trend", DoubleType),
+          StructField("n", LongType)), perRow = false) { run =>
+      var level = run.next().getDouble(0); var trend = 0.0; var n = 1L
+      run.foreach { r =>
+        val x = r.getDouble(0)
+        val nl = alpha * x + (1.0 - alpha) * (level + trend)
+        trend = gamma * (nl - level) + (1.0 - gamma) * trend
+        level = nl
+        n += 1L
+      }
+      // Seq[Any] is load-bearing: Seq(level, trend, n) would unify to
+      // Seq[Double] and numerically WIDEN the Long count to a Double,
+      // which the LongType row encoder then rejects.
+      Iterator.single(Seq[Any](level, trend, n))
+    }
   }
 
   /** Croston's method for INTERMITTENT demand (sparse series where most
@@ -579,67 +579,31 @@ object TimeSeriesOps {
     * p = 1 (the first interval is unobservable — documented convention).
     * Input rows are (keys, integral `bucketCol`, `qtyCol`) DEMAND points
     * (zero periods are implicit — no spine materialization, the whole
-    * scale point). Output ONE row per key: n_demands, level, interval,
+    * scale point); a row with a null quantity or bucket is no demand
+    * point. Output ONE row per key: n_demands, level, interval,
     * forecast. Same keyed O(1)-state fold + recursive-CTE exact oracle
     * contract as [[holtSmooth]].
     */
   def crostonSmooth(df: DataFrame, keys: Seq[String], bucketCol: String,
-                    qtyCol: String, alpha: Double,
-                    numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "crostonSmooth needs series keys")
+                    qtyCol: String, alpha: Double): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
-      .where(col(qtyCol).isNotNull)
-      .select((keys.map(col) :+ col(bucketCol).cast(LongType).as("__cr_b")
-        :+ col(qtyCol).cast(DoubleType).as("__cr_q")): _*)
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys :+ "__cr_b").map(col): _*)
-    val keyFields = keys.map(k => sorted.schema(k))
-    val schema = StructType(keyFields ++ Seq(
-      StructField("n_demands", LongType), StructField("level", DoubleType),
-      StructField("interval", DoubleType), StructField("forecast", DoubleType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val bIdx = sorted.schema.fieldIndex("__cr_b")
-    val qIdx = sorted.schema.fieldIndex("__cr_q")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var z = 0.0; var p = 0.0; var prevB = 0L; var n = 0L
-        def emit(): Row =
-          Row.fromSeq(curKey ++ Seq[Any](n, z, p, z / p))
-        new Iterator[Row] {
-          private var pending: Row = null
-          private var done = false
-          private def advance(): Unit = {
-            while (pending == null && rows.hasNext) {
-              val r = rows.next()
-              val k = keyIdx.map(r.get)
-              if (k != curKey) {
-                if (curKey != null) pending = emit()
-                curKey = k; z = r.getDouble(qIdx); p = 1.0
-                prevB = r.getLong(bIdx); n = 1L
-              } else {
-                val q = r.getDouble(qIdx)
-                val b = r.getLong(bIdx)
-                z = alpha * q + (1.0 - alpha) * z
-                p = alpha * (b - prevB).toDouble + (1.0 - alpha) * p
-                prevB = b
-                n += 1L
-              }
-            }
-            if (pending == null && !done && !rows.hasNext && curKey != null) {
-              pending = emit(); done = true
-            }
-          }
-          def hasNext: Boolean = { advance(); pending != null }
-          def next(): Row = { advance(); val r = pending; pending = null; r }
-        }
-      }, schema)
+    scanSeries(df.where(col(qtyCol).isNotNull && col(bucketCol).isNotNull), keys, Seq(bucketCol),
+        Seq(col(bucketCol).cast(LongType), col(qtyCol).cast(DoubleType)),
+        Seq(StructField("n_demands", LongType), StructField("level", DoubleType),
+          StructField("interval", DoubleType), StructField("forecast", DoubleType)),
+        perRow = false) { run =>
+      val first = run.next()
+      var z = first.getDouble(1); var p = 1.0; var prevB = first.getLong(0); var n = 1L
+      run.foreach { r =>
+        val q = r.getDouble(1)
+        val b = r.getLong(0)
+        z = alpha * q + (1.0 - alpha) * z
+        p = alpha * (b - prevB).toDouble + (1.0 - alpha) * p
+        prevB = b
+        n += 1L
+      }
+      Iterator.single(Seq[Any](n, z, p, z / p))
+    }
   }
 
   /** Per-row Holt path: the same level/trend recurrence as [[holtSmooth]]
@@ -648,48 +612,27 @@ object TimeSeriesOps {
     * emit null state and leave the fold untouched.
     */
   def holtPath(df: DataFrame, keys: Seq[String], order: Seq[String],
-               target: String, alpha: Double, gamma: Double,
-               numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "holtPath needs series keys")
+               target: String, alpha: Double, gamma: Double): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
     require(gamma > 0 && gamma < 1, s"gamma=$gamma must be in (0, 1)")
-    require(!df.columns.contains("level") && !df.columns.contains("trend"),
-      "holtPath: input already has a level/trend column")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn("__holt_in", col(target).cast(DoubleType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields ++
-      Seq(StructField("level", DoubleType), StructField("trend", DoubleType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val tIdx = sorted.schema.fieldIndex("__holt_in")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var level = 0.0; var trend = 0.0; var seen = false
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; seen = false }
-          val state: Seq[Any] =
-            if (r.isNullAt(tIdx)) Seq(null, null)
-            else {
-              val x = r.getDouble(tIdx)
-              if (!seen) { level = x; trend = 0.0; seen = true }
-              else {
-                val nl = alpha * x + (1.0 - alpha) * (level + trend)
-                trend = gamma * (nl - level) + (1.0 - gamma) * trend
-                level = nl
-              }
-              Seq(level, trend)
-            }
-          // Drop the shadow column (last) and append the state pair.
-          Row.fromSeq(r.toSeq.init ++ state)
+    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField("level", DoubleType), StructField("trend", DoubleType)),
+        perRow = true) { run =>
+      var level = 0.0; var trend = 0.0; var seen = false
+      run.map { r =>
+        if (r.isNullAt(0)) Seq(null, null)
+        else {
+          val x = r.getDouble(0)
+          if (!seen) { level = x; trend = 0.0; seen = true }
+          else {
+            val nl = alpha * x + (1.0 - alpha) * (level + trend)
+            trend = gamma * (nl - level) + (1.0 - gamma) * trend
+            level = nl
+          }
+          Seq(level, trend)
         }
-      }, schema)
+      }
+    }
   }
 
   /** 1-D Kalman filter (local-level / random-walk-plus-noise model),
@@ -697,56 +640,35 @@ object TimeSeriesOps {
     * denoising and online level tracking. Recurrence per observation z:
     * predict p' = p + q; gain k = p'/(p' + r); update est += k(z − est);
     * p = (1 − k)p'. Init: est = z₀, p = r, gain 1. Like [[holtPath]]
-    * this is a keyed repartition + sorted in-partition scan with O(1)
-    * state per series (the recurrence is not window-expressible), and
-    * the DuckDB twin replays the identical IEEE fold with a recursive
-    * CTE — exact parity. Null targets emit null and leave the fold
-    * untouched. Note p and k depend only on (q, r, step index), never on
-    * the data — the gain path is deterministic, which the spec exploits.
+    * this is a [[scanSeries]] fold with O(1) state per series (the
+    * recurrence is not window-expressible), and the DuckDB twin replays
+    * the identical IEEE fold with a recursive CTE — exact parity. Null
+    * targets emit null and leave the fold untouched. Note p and k depend
+    * only on (q, r, step index), never on the data — the gain path is
+    * deterministic, which the spec exploits.
     */
   def kalmanPath(df: DataFrame, keys: Seq[String], order: Seq[String],
-                 target: String, q: Double, r: Double,
-                 numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "kalmanPath needs series keys")
+                 target: String, q: Double, r: Double): DataFrame = {
     require(q > 0 && r > 0, s"variances must be positive: q=$q r=$r")
-    require(!df.columns.contains("estimate") && !df.columns.contains("gain"),
-      "kalmanPath: input already has an estimate/gain column")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn("__kal_in", col(target).cast(DoubleType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields ++
-      Seq(StructField("estimate", DoubleType), StructField("gain", DoubleType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val tIdx = sorted.schema.fieldIndex("__kal_in")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var est = 0.0; var p = 0.0; var seen = false
-        rows.map { row =>
-          val k = keyIdx.map(row.get)
-          if (k != curKey) { curKey = k; seen = false }
-          val state: Seq[Any] =
-            if (row.isNullAt(tIdx)) Seq(null, null)
-            else {
-              val z = row.getDouble(tIdx)
-              if (!seen) { est = z; p = r; seen = true; Seq(est, 1.0) }
-              else {
-                val pp = p + q
-                val kk = pp / (pp + r)
-                est = est + kk * (z - est)
-                p = (1.0 - kk) * pp
-                Seq(est, kk)
-              }
-            }
-          // Drop the shadow column (last) and append (estimate, gain).
-          Row.fromSeq(row.toSeq.init ++ state)
+    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField("estimate", DoubleType), StructField("gain", DoubleType)),
+        perRow = true) { run =>
+      var est = 0.0; var p = 0.0; var seen = false
+      run.map { row =>
+        if (row.isNullAt(0)) Seq(null, null)
+        else {
+          val z = row.getDouble(0)
+          if (!seen) { est = z; p = r; seen = true; Seq(est, 1.0) }
+          else {
+            val pp = p + q
+            val kk = pp / (pp + r)
+            est = est + kk * (z - est)
+            p = (1.0 - kk) * pp
+            Seq(est, kk)
+          }
         }
-      }, schema)
+      }
+    }
   }
 
   /** GARCH(1,1) conditional-variance path with FIXED parameters, emitted
@@ -763,54 +685,32 @@ object TimeSeriesOps {
     * which is exactly this operator.
     *
     * The recurrence is not window-expressible (state multiplies by β
-    * each step), so this is the documented keyed repartition + sorted
-    * in-partition O(1)-state scan — same contract as [[kalmanPath]],
-    * with the identical left-to-right IEEE fold replayed by the oracle's
-    * recursive CTE for exact parity (the update is written `ω + α·r² +
-    * β·σ²`, left-associated, on both engines). Null returns emit null
-    * and leave the state untouched.
+    * each step), so this is a [[scanSeries]] fold with O(1) state — same
+    * contract as [[kalmanPath]], with the identical left-to-right IEEE
+    * fold replayed by the oracle's recursive CTE for exact parity. Null
+    * returns emit null and leave the state untouched.
     */
   def garchPath(df: DataFrame, keys: Seq[String], order: Seq[String],
-                target: String, omega: Double, alpha: Double, beta: Double,
-                numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "garchPath needs series keys")
+                target: String, omega: Double, alpha: Double, beta: Double): DataFrame = {
     require(omega > 0, s"omega=$omega must be positive")
     require(alpha >= 0 && beta >= 0 && alpha + beta < 1,
       s"need alpha,beta >= 0 and alpha+beta < 1 for stationarity: alpha=$alpha beta=$beta")
-    require(!df.columns.contains("sigma2"),
-      "garchPath: input already has a sigma2 column")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn("__garch_in", col(target).cast(DoubleType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields :+ StructField("sigma2", DoubleType))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val tIdx = sorted.schema.fieldIndex("__garch_in")
     val uncond = omega / (1.0 - alpha - beta)
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var s2 = 0.0; var prevR = 0.0; var seen = false
-        rows.map { row =>
-          val k = keyIdx.map(row.get)
-          if (k != curKey) { curKey = k; seen = false }
-          val state: Any =
-            if (row.isNullAt(tIdx)) null
-            else {
-              val r = row.getDouble(tIdx)
-              if (!seen) { s2 = uncond; seen = true }
-              else s2 = omega + alpha * (prevR * prevR) + beta * s2
-              prevR = r
-              s2
-            }
-          // Drop the shadow column (last) and append sigma2.
-          Row.fromSeq(row.toSeq.init :+ state)
+    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField("sigma2", DoubleType)), perRow = true) { run =>
+      var s2 = 0.0; var prevR = 0.0; var seen = false
+      run.map { row =>
+        if (row.isNullAt(0)) Seq(null)
+        else {
+          val r = row.getDouble(0)
+          // Written `ω + α·r² + β·σ²`, left-associated, on both engines.
+          if (!seen) { s2 = uncond; seen = true }
+          else s2 = omega + alpha * (prevR * prevR) + beta * s2
+          prevR = r
+          Seq(s2)
         }
-      }, schema)
+      }
+    }
   }
 
   /** Two-threshold hysteresis (Schmitt-trigger) alert state per key —
@@ -818,8 +718,8 @@ object TimeSeriesOps {
     * threshold (which chatters when the signal hovers at the line):
     * enter the alert state when x > hi, leave it only when x < lo
     * (lo <= x <= hi holds the current state). The state recurrence is
-    * non-window-expressible (same family as [[cusumReset]]), so a keyed
-    * repartition + sorted in-partition scan with one Boolean of state.
+    * non-window-expressible (same family as [[cusumReset]]), so a
+    * [[scanSeries]] fold with one Boolean of state.
     * Feed a PRE-ROUNDED x (e.g. a 4dp |z|): the state flips on float
     * comparisons, and rounding fences on both engines make every
     * comparison decision engine-identical. Null x emits null and leaves
@@ -828,90 +728,48 @@ object TimeSeriesOps {
     */
   def hysteresis(df: DataFrame, keys: Seq[String], order: Seq[String],
                  target: String, lo: Double, hi: Double,
-                 outCol: String = "in_alert", numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "hysteresis needs series keys")
+                 outCol: String = "in_alert"): DataFrame = {
     require(lo <= hi, s"hysteresis needs lo <= hi, got $lo > $hi")
-    require(!df.columns.contains(outCol), s"hysteresis: column '$outCol' exists")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn("__hy_x", col(target).cast(DoubleType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields :+ StructField(outCol, LongType))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val xI = sorted.schema.fieldIndex("__hy_x")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var in = 0L
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; in = 0L }
-          val out: Any =
-            if (r.isNullAt(xI)) null
-            else {
-              val x = r.getDouble(xI)
-              in = if (in == 0L) { if (x > hi) 1L else 0L }
-                   else { if (x < lo) 0L else 1L }
-              in
-            }
-          Row.fromSeq(r.toSeq.init :+ out)
+    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField(outCol, LongType)), perRow = true) { run =>
+      var in = 0L
+      run.map { r =>
+        if (r.isNullAt(0)) Seq(null)
+        else {
+          val x = r.getDouble(0)
+          in = if (in == 0L) { if (x > hi) 1L else 0L }
+               else { if (x < lo) 0L else 1L }
+          Seq(in)
         }
-      }, schema)
+      }
+    }
   }
 
   /** One-sided upper CUSUM with reset (the SPC control-chart statistic):
     * s_t = max(0, s_{t-1} + (x_t - target_t - slack_t)), emitted PER ROW.
     * The reset (max with 0) makes the recurrence non-window-expressible,
-    * so like [[ewmaRecursive]] it's a keyed repartition + sorted
-    * in-partition scan with O(1) state; target/slack ride along as row
-    * columns (typically per-series mean and a fraction of sigma, joined
-    * on beforehand). Null x, target or slack passes the previous state
-    * through unchanged and emits null. The DuckDB twin replays the fold
-    * with a recursive CTE — exact parity (see ts_holt_forecast).
+    * so like [[ewmaRecursive]] it's a [[scanSeries]] fold with O(1)
+    * state; target/slack ride along as row columns (typically per-series
+    * mean and a fraction of sigma, joined on beforehand). Null x, target
+    * or slack passes the previous state through unchanged and emits
+    * null. The DuckDB twin replays the fold with a recursive CTE — exact
+    * parity (see ts_holt_forecast).
     */
   def cusumReset(df: DataFrame, keys: Seq[String], order: Seq[String],
                  target: String, targetMean: String, slack: String,
-                 outCol: String = "cusum_hi", numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "cusumReset needs series keys")
-    require(!df.columns.contains(outCol), s"cusumReset: column '$outCol' exists")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val shadows = Seq(target, targetMean, slack).map(c => col(c).cast(DoubleType))
-    val sorted = df
-      .withColumn("__cu_x", shadows(0)).withColumn("__cu_m", shadows(1))
-      .withColumn("__cu_k", shadows(2))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields :+ StructField(outCol, DoubleType))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val xI = sorted.schema.fieldIndex("__cu_x")
-    val mI = sorted.schema.fieldIndex("__cu_m")
-    val kI = sorted.schema.fieldIndex("__cu_k")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var s = 0.0
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; s = 0.0 }
-          val out: Any =
-            if (r.isNullAt(xI) || r.isNullAt(mI) || r.isNullAt(kI)) null
-            else {
-              s = math.max(0.0, s + (r.getDouble(xI) - r.getDouble(mI) - r.getDouble(kI)))
-              s
-            }
-          // Drop the three shadow columns (last) and append the statistic.
-          Row.fromSeq(r.toSeq.dropRight(3) :+ out)
+                 outCol: String = "cusum_hi"): DataFrame =
+    scanSeries(df, keys, order,
+        Seq(target, targetMean, slack).map(c => col(c).cast(DoubleType)),
+        Seq(StructField(outCol, DoubleType)), perRow = true) { run =>
+      var s = 0.0
+      run.map { r =>
+        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) Seq(null)
+        else {
+          s = math.max(0.0, s + (r.getDouble(0) - r.getDouble(1) - r.getDouble(2)))
+          Seq(s)
         }
-      }, schema)
-  }
+      }
+    }
 
   /** Additive Holt-Winters (triple exponential) smoothing per key — the
     * seasonal member of the smoothing family (SES = [[ewma]], double =
@@ -922,9 +780,9 @@ object TimeSeriesOps {
     *   s[idx]' = γ(x − l') + (1−γ)s[idx]
     * initialized l = x₁, b = 0, s = 0⃗ (simple-init convention; the first
     * m observations warm the seasonal vector). Non-window-expressible
-    * (vector state), so a keyed repartition + sorted scan with O(m)
-    * state; the DuckDB twin replays the fold in a recursive CTE carrying
-    * the seasonal LIST via index-aware list_transform — exact parity.
+    * (vector state), so a [[scanSeries]] fold with O(m) state; the
+    * DuckDB twin replays the fold in a recursive CTE carrying the
+    * seasonal LIST via index-aware list_transform — exact parity.
     * 1−α etc. are COMPUTED (1.0 - alpha), never pre-folded literals: the
     * IEEE result differs from the decimal literal in the last ulp, and
     * the SQL twin writes the same subtraction. A null target emits null
@@ -932,54 +790,35 @@ object TimeSeriesOps {
     */
   def holtWinters(df: DataFrame, keys: Seq[String], order: Seq[String],
                   target: String, period: Int,
-                  alpha: Double, beta: Double, gamma: Double,
-                  numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "holtWinters needs series keys")
+                  alpha: Double, beta: Double, gamma: Double): DataFrame = {
     require(period >= 2, s"seasonal period must be >= 2, got $period")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn("__hw_x", col(target).cast(DoubleType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields ++ Seq(
-      StructField("hw_fitted", DoubleType), StructField("hw_level", DoubleType),
-      StructField("hw_trend", DoubleType), StructField("hw_seasonal", DoubleType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val xI = sorted.schema.fieldIndex("__hw_x")
     val (omA, omB, omG) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var l = 0.0; var b = 0.0; var cnt = 0L
-        var s: Array[Double] = null
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; cnt = 0L; s = Array.fill(period)(0.0) }
-          val out: Seq[Any] =
-            if (r.isNullAt(xI)) Seq(null, null, null, null)
-            else {
-              val x = r.getDouble(xI)
-              cnt += 1
-              val idx = ((cnt - 1) % period).toInt
-              if (cnt == 1L) {
-                l = x; b = 0.0
-                Seq[Any](null, l, b, s(idx))
-              } else {
-                val sI = s(idx)
-                val fitted = l + b + sI
-                val lNew = alpha * (x - sI) + omA * (l + b)
-                b = beta * (lNew - l) + omB * b
-                l = lNew
-                s(idx) = gamma * (x - l) + omG * sI
-                Seq[Any](fitted, l, b, s(idx))
-              }
-            }
-          Row.fromSeq(r.toSeq.init ++ out)
+    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq("hw_fitted", "hw_level", "hw_trend", "hw_seasonal").map(StructField(_, DoubleType)),
+        perRow = true) { run =>
+      var l = 0.0; var b = 0.0; var cnt = 0L
+      val s = Array.fill(period)(0.0)
+      run.map { r =>
+        if (r.isNullAt(0)) Seq(null, null, null, null)
+        else {
+          val x = r.getDouble(0)
+          cnt += 1
+          val idx = ((cnt - 1) % period).toInt
+          if (cnt == 1L) {
+            l = x; b = 0.0
+            Seq[Any](null, l, b, s(idx))
+          } else {
+            val sI = s(idx)
+            val fitted = l + b + sI
+            val lNew = alpha * (x - sI) + omA * (l + b)
+            b = beta * (lNew - l) + omB * b
+            l = lNew
+            s(idx) = gamma * (x - l) + omG * sI
+            Seq[Any](fitted, l, b, s(idx))
+          }
         }
-      }, schema)
+      }
+    }
   }
 
   /** MULTIPLICATIVE Holt-Winters (Winters 1960): the seasonal component
@@ -995,54 +834,35 @@ object TimeSeriesOps {
     */
   def holtWintersMult(df: DataFrame, keys: Seq[String], order: Seq[String],
                       target: String, period: Int,
-                      alpha: Double, beta: Double, gamma: Double,
-                      numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "holtWintersMult needs series keys")
+                      alpha: Double, beta: Double, gamma: Double): DataFrame = {
     require(period >= 2, s"seasonal period must be >= 2, got $period")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn("__hw_x", col(target).cast(DoubleType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields ++ Seq(
-      StructField("hw_fitted", DoubleType), StructField("hw_level", DoubleType),
-      StructField("hw_trend", DoubleType), StructField("hw_seasonal", DoubleType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val xI = sorted.schema.fieldIndex("__hw_x")
     val (omA, omB, omG) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var l = 0.0; var b = 0.0; var cnt = 0L
-        var s: Array[Double] = null
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; cnt = 0L; s = Array.fill(period)(1.0) }
-          val out: Seq[Any] =
-            if (r.isNullAt(xI)) Seq(null, null, null, null)
-            else {
-              val x = r.getDouble(xI)
-              cnt += 1
-              val idx = ((cnt - 1) % period).toInt
-              if (cnt == 1L) {
-                l = x; b = 0.0
-                Seq[Any](null, l, b, s(idx))
-              } else {
-                val sI = s(idx)
-                val fitted = (l + b) * sI
-                val lNew = alpha * (x / sI) + omA * (l + b)
-                b = beta * (lNew - l) + omB * b
-                l = lNew
-                s(idx) = gamma * (x / lNew) + omG * sI
-                Seq[Any](fitted, l, b, s(idx))
-              }
-            }
-          Row.fromSeq(r.toSeq.init ++ out)
+    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq("hw_fitted", "hw_level", "hw_trend", "hw_seasonal").map(StructField(_, DoubleType)),
+        perRow = true) { run =>
+      var l = 0.0; var b = 0.0; var cnt = 0L
+      val s = Array.fill(period)(1.0)
+      run.map { r =>
+        if (r.isNullAt(0)) Seq(null, null, null, null)
+        else {
+          val x = r.getDouble(0)
+          cnt += 1
+          val idx = ((cnt - 1) % period).toInt
+          if (cnt == 1L) {
+            l = x; b = 0.0
+            Seq[Any](null, l, b, s(idx))
+          } else {
+            val sI = s(idx)
+            val fitted = (l + b) * sI
+            val lNew = alpha * (x / sI) + omA * (l + b)
+            b = beta * (lNew - l) + omB * b
+            l = lNew
+            s(idx) = gamma * (x / lNew) + omG * sI
+            Seq[Any](fitted, l, b, s(idx))
+          }
         }
-      }, schema)
+      }
+    }
   }
 
   /** Token-bucket rate-limit replay (the API-gateway admission audit):
@@ -1050,51 +870,39 @@ object TimeSeriesOps {
     * tokens = min(capacity, tokens + refillPerSec * (Δt_us / 1e6)),
     * then admits iff tokens >= 1 (consuming one). The clamped recurrence
     * is non-window-expressible (same family as [[cusumReset]]), so it
-    * runs as a keyed repartition + sorted in-partition scan with O(1)
-    * state; the DuckDB twin replays the identical left-to-right IEEE
-    * fold via a recursive CTE — exact parity. `tsCol` must be a numeric
-    * microsecond column (e.g. epochUs of the event time).
+    * runs as a [[scanSeries]] fold with O(1) state; the DuckDB twin
+    * replays the identical left-to-right IEEE fold via a recursive CTE —
+    * exact parity. `tsCol` must be a numeric microsecond column (e.g.
+    * epochUs of the event time); a row with a null time emits null and
+    * leaves the bucket untouched.
     */
   def tokenBucket(df: DataFrame, keys: Seq[String], order: Seq[String],
                   tsCol: String, capacity: Double, refillPerSec: Double,
-                  tokensCol: String = "tokens", admitCol: String = "admitted",
-                  numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "tokenBucket needs series keys")
+                  tokensCol: String = "tokens", admitCol: String = "admitted"): DataFrame = {
     require(capacity >= 1.0, "tokenBucket: capacity must admit at least one event")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
-      .withColumn("__tb_ts", col(tsCol).cast(LongType))
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields :+
-      StructField(tokensCol, DoubleType) :+ StructField(admitCol, LongType))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val tsI = sorted.schema.fieldIndex("__tb_ts")
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var tokens = 0.0
-        var lastTs = 0L
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          val t = r.getLong(tsI)
-          if (k != curKey) { curKey = k; tokens = capacity }
-          else {
+    scanSeries(df, keys, order, Seq(col(tsCol).cast(LongType)),
+        Seq(StructField(tokensCol, DoubleType), StructField(admitCol, LongType)),
+        perRow = true) { run =>
+      var tokens = capacity
+      var lastTs = 0L
+      var seen = false
+      run.map { r =>
+        if (r.isNullAt(0)) Seq(null, null)
+        else {
+          val t = r.getLong(0)
+          if (seen) {
             tokens = math.min(capacity,
               tokens + refillPerSec * ((t - lastTs).toDouble / 1000000.0))
           }
+          seen = true
           lastTs = t
           val admitted = if (tokens >= 1.0) { tokens -= 1.0; 1L } else 0L
-          // Drop the shadow ts column (last) and append (tokens, admitted).
           // Seq[Any]: Seq(Double, Long) would infer Seq[Double] and
           // silently WIDEN the Long — the encoder then rejects it.
-          Row.fromSeq(r.toSeq.init ++ Seq[Any](tokens, admitted))
+          Seq[Any](tokens, admitted)
         }
-      }, schema)
+      }
+    }
   }
 
   /** Gap-based sessionization: a new session starts when the time since
@@ -1201,22 +1009,6 @@ object TimeSeriesOps {
         col("valid_to"), col("is_current"))): _*)
   }
 
-  /** Two-state burst-detection Viterbi forward pass (Kleinberg 2002,
-    * enumerating variant): per key, fold the per-bucket emission costs
-    * `e0Col` (base state) / `e1Col` (burst state) through
-    *   C0ₜ = min(C0ₜ₋₁, C1ₜ₋₁) + e0ₜ
-    *   C1ₜ = min(C0ₜ₋₁ + γ, C1ₜ₋₁) + e1ₜ
-    * (γ = the cost of ENTERING the burst state; leaving is free) and
-    * emit the running costs plus the forward-filtered state decision
-    * (c1 < c0). Init: C0 = e0, C1 = γ + e1. Emission costs are
-    * pre-quantized by the caller, so the fold is pure adds and exact
-    * mins — the recursive-CTE oracle replays the identical IEEE ops.
-    * Same scale shape as [[holtPath]]: keyed repartition + sorted
-    * in-partition scan, O(1) state per key. The full-Viterbi backtrack
-    * is deliberately NOT done — the forward-filtered decision is the
-    * streaming-capable variant (no unbounded path state), which is the
-    * posture that matters at fleet scale.
-    */
   /** Exponential-decay event-count fold (the Hawkes-process excitation
     * recursion): per key over ordered events, A₁ = 0 and
     * Aₖ = dₖ·(Aₖ₋₁ + 1), where `decayCol` carries the pre-computed
@@ -1227,83 +1019,59 @@ object TimeSeriesOps {
     * is one multiply-add per event, so the recursive-CTE oracle replays
     * it exactly. Null decay (the series' first row has no Δt) resets
     * nothing — A simply starts at 0 per key. Same scale shape as
-    * [[holtPath]]: keyed repartition, sorted in-partition scan, O(1)
-    * state.
+    * [[holtPath]]: a [[scanSeries]] fold with O(1) state.
     */
   def hawkesPath(df: DataFrame, keys: Seq[String], order: Seq[String],
-                 decayCol: String, numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "hawkesPath needs series keys")
-    require(!df.columns.contains("excitation"),
-      "hawkesPath: input already has an excitation column")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields :+
-      StructField("excitation", DoubleType))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val dIdx = sorted.schema.fieldIndex(decayCol)
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var a = 0.0; var seen = false
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; seen = false }
-          if (!seen) { a = 0.0; seen = true }
-          else if (!r.isNullAt(dIdx)) a = r.getDouble(dIdx) * (a + 1.0)
-          Row.fromSeq(r.toSeq :+ a)
-        }
-      }, schema)
-  }
+                 decayCol: String): DataFrame =
+    scanSeries(df, keys, order, Seq(col(decayCol).cast(DoubleType)),
+        Seq(StructField("excitation", DoubleType)), perRow = true) { run =>
+      var a = 0.0; var seen = false
+      run.map { r =>
+        if (!seen) seen = true
+        else if (!r.isNullAt(0)) a = r.getDouble(0) * (a + 1.0)
+        Seq(a)
+      }
+    }
 
+  /** Two-state burst-detection Viterbi forward pass (Kleinberg 2002,
+    * enumerating variant): per key, fold the per-bucket emission costs
+    * `e0Col` (base state) / `e1Col` (burst state) through
+    *   C0ₜ = min(C0ₜ₋₁, C1ₜ₋₁) + e0ₜ
+    *   C1ₜ = min(C0ₜ₋₁ + γ, C1ₜ₋₁) + e1ₜ
+    * (γ = the cost of ENTERING the burst state; leaving is free) and
+    * emit the running costs plus the forward-filtered state decision
+    * (c1 < c0). Init: C0 = e0, C1 = γ + e1. Emission costs are
+    * pre-quantized by the caller, so the fold is pure adds and exact
+    * mins — the recursive-CTE oracle replays the identical IEEE ops.
+    * Same scale shape as [[holtPath]]: a [[scanSeries]] fold, O(1)
+    * state per key. The full-Viterbi backtrack is deliberately NOT
+    * done — the forward-filtered decision is the streaming-capable
+    * variant (no unbounded path state), which is the posture that
+    * matters at fleet scale. A row with a null cost emits null and
+    * leaves the state untouched.
+    */
   def burstPath(df: DataFrame, keys: Seq[String], order: Seq[String],
-                e0Col: String, e1Col: String, gamma: Double,
-                numPartitions: Int = 0): DataFrame = {
-    require(keys.nonEmpty, "burstPath needs series keys")
+                e0Col: String, e1Col: String, gamma: Double): DataFrame = {
     require(gamma >= 0, s"gamma=$gamma must be nonnegative")
-    require(!df.columns.contains("c0") && !df.columns.contains("c1"),
-      "burstPath: input already has a c0/c1 column")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-                else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df
-      .repartition(parts, keys.map(col): _*)
-      .sortWithinPartitions((keys ++ order).map(col): _*)
-    val schema = StructType(df.schema.fields ++
-      Seq(StructField("c0", DoubleType), StructField("c1", DoubleType),
-        StructField("in_burst", LongType)))
-    val keyIdx = keys.map(sorted.schema.fieldIndex)
-    val e0Idx = sorted.schema.fieldIndex(e0Col)
-    val e1Idx = sorted.schema.fieldIndex(e1Col)
-    spark.createDataFrame(
-      sorted.rdd.mapPartitions { rows =>
-        var curKey: Seq[Any] = null
-        var c0 = 0.0; var c1 = 0.0; var seen = false
-        rows.map { r =>
-          val k = keyIdx.map(r.get)
-          if (k != curKey) { curKey = k; seen = false }
-          val state: Seq[Any] =
-            if (r.isNullAt(e0Idx) || r.isNullAt(e1Idx)) Seq(null, null, null)
-            else {
-              val e0 = r.getDouble(e0Idx); val e1 = r.getDouble(e1Idx)
-              if (!seen) { c0 = e0; c1 = gamma + e1; seen = true }
-              else {
-                val n0 = math.min(c0, c1) + e0
-                val n1 = math.min(c0 + gamma, c1) + e1
-                c0 = n0; c1 = n1
-              }
-              Seq(c0, c1, if (c1 < c0) 1L else 0L)
-            }
-          Row.fromSeq(r.toSeq ++ state)
+    scanSeries(df, keys, order, Seq(e0Col, e1Col).map(c => col(c).cast(DoubleType)),
+        Seq(StructField("c0", DoubleType), StructField("c1", DoubleType),
+          StructField("in_burst", LongType)), perRow = true) { run =>
+      var c0 = 0.0; var c1 = 0.0; var seen = false
+      run.map { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Seq(null, null, null)
+        else {
+          val e0 = r.getDouble(0); val e1 = r.getDouble(1)
+          if (!seen) { c0 = e0; c1 = gamma + e1; seen = true }
+          else {
+            val n0 = math.min(c0, c1) + e0
+            val n1 = math.min(c0 + gamma, c1) + e1
+            c0 = n0; c1 = n1
+          }
+          // Seq[Any]: Seq(Double, Double, Long) would WIDEN the Long.
+          Seq[Any](c0, c1, if (c1 < c0) 1L else 0L)
         }
-      }, schema)
+      }
+    }
   }
 
   /** Banded DTW distance (Sakoe-Chiba band) between two 1-D series:

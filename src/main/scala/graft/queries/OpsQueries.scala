@@ -161,6 +161,94 @@ object OpsQueries {
   private def ev(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).withColumn("tsu", epochUs(col("ts")))
 
+  /** LTTB downsampling (Largest-Triangle-Three-Buckets, Steinarsson
+    * 2013 — the perceptual line-chart downsampler next to M4's
+    * pixel-exact one): per series keep first + last + one point per
+    * interior bucket, each chosen to maximize the triangle area with
+    * the PREVIOUSLY SELECTED point and the NEXT bucket's centroid.
+    * The selection chain is a sequential DP over buckets; it runs as
+    * ONE keyed sorted fold (TS.scanSeries, with an O(series)
+    * per-key buffer like ts_matrix_profile): the old shape coordinated
+    * LttbBuckets-2 driver rounds — 16 window/join/checkpoint passes
+    * over the table — where one pass per key computes the identical
+    * chain. x = row index (the equal-spacing LTTB variant); centroids
+    * replicate exactMean bit-for-bit (per-value DECIMAL(18,6)
+    * quantization via dec6, exact BigDecimal sum — order-blind — one
+    * doubleValue cast, double divide); areas round6Jvm'd before the
+    * argmax with the (tsu, event_id) tiebreak (ascending scan keeps
+    * the earliest strict max), so both engines pick identical points;
+    * the oracle unrolls the same rounds as chained CTEs, unchanged.
+    *
+    * Input: `events` with user_id, tsu, event_id and value; output: the
+    * (user_id, bucket, event_id, value) picks ordered by user and bucket.
+    */
+  private[graft] def lttbDownsample(events: DataFrame): DataFrame = {
+    import java.math.{BigDecimal => JBD}
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
+    val nb = LttbBuckets - 2
+    val minRows = LttbBuckets
+    TS.scanSeries(events.where(col("value").isNotNull), K, Ord,
+        Seq(col("event_id"), col("value").cast(DoubleType)),
+        Seq(StructField("bucket", LongType), StructField("event_id", LongType),
+          StructField("value", DoubleType)), perRow = false) { run =>
+      // One series' LTTB picks from its (tsu, event_id)-ordered rows:
+      // (eventId, value) per row; rn = index+1.
+      val rows = run.map(r => (r.getLong(0), r.getDouble(1))).toArray
+      val (ev, va) = (rows.map(_._1), rows.map(_._2))
+      val cnt = rows.length
+      if (cnt < minRows) Iterator.empty
+      else {
+        // bucket(rn) for interior rn in 2..cnt-1, exactly the old
+        // floor(((rn-2)*nb)/double(cnt-2)) + 1 expression.
+        def bucketOf(rn: Long): Int =
+          (math.floor(((rn - 2L) * nb).toDouble / (cnt - 2).toDouble) + 1.0).toInt
+        // Per-bucket centroid = exactMean replica: sum of dec6-
+        // quantized values as exact BigDecimals, one doubleValue
+        // cast of the sum, double divide by the count.
+        val sx = Array.fill(nb + 2)(JBD.ZERO)
+        val sy = Array.fill(nb + 2)(JBD.ZERO)
+        val bn = new Array[Long](nb + 2)
+        var i = 1
+        while (i < cnt - 1) {
+          val b = bucketOf(i + 1L)
+          sx(b) = sx(b).add(CleanFunctions.dec6((i + 1L).toDouble))
+          sy(b) = sy(b).add(CleanFunctions.dec6(va(i)))
+          bn(b) += 1L
+          i += 1
+        }
+        val out = new Array[Seq[Any]](nb + 2)
+        out(0) = Seq[Any](0L, ev(0), va(0))
+        out(nb + 1) = Seq[Any]((nb + 1).toLong, ev(cnt - 1), va(cnt - 1))
+        var px = 1.0
+        var py = va(0)
+        var lo = 1 // first interior index of the current bucket
+        var b = 1
+        while (b <= nb) {
+          val (cx, cy) =
+            if (b < nb) (sx(b + 1).doubleValue / bn(b + 1),
+                         sy(b + 1).doubleValue / bn(b + 1))
+            else (cnt.toDouble, va(cnt - 1))
+          var bestArea = Double.NegativeInfinity
+          var bestIdx = -1
+          var j = lo
+          while (j < cnt - 1 && bucketOf(j + 1L) == b) {
+            val area = CleanFunctions.round6Jvm(math.abs(
+              (px - cx) * (va(j) - py) -
+                (px - (j + 1L).toDouble) * (cy - py)) * 0.5)
+            if (area > bestArea) { bestArea = area; bestIdx = j }
+            j += 1
+          }
+          lo = j
+          out(b) = Seq[Any](b.toLong, ev(bestIdx), va(bestIdx))
+          px = (bestIdx + 1L).toDouble
+          py = va(bestIdx)
+          b += 1
+        }
+        out.iterator
+      }
+    }.orderBy("user_id", "bucket")
+  }
+
   /** One M4 oracle builder for the batch `ts_m4_downsample` (all rows)
     * and the streaming replay `streaming_m4` (null-filtered, because the
     * Event feed carries primitive doubles) — a single SQL body so the
@@ -567,126 +655,8 @@ object OpsQueries {
         .orderBy("user_id")
     },
 
-    // LTTB downsampling (Largest-Triangle-Three-Buckets, Steinarsson
-    // 2013 — the perceptual line-chart downsampler next to M4's
-    // pixel-exact one): per series keep first + last + one point per
-    // interior bucket, each chosen to maximize the triangle area with
-    // the PREVIOUSLY SELECTED point and the NEXT bucket's centroid.
-    // The selection chain is a sequential DP over buckets; since r16 it
-    // runs as ONE keyed repartition + in-partition sorted fold (the
-    // ewmaRecursive/holtSmooth discipline, with an O(series) per-key
-    // buffer like ts_matrix_profile): the old shape coordinated
-    // LttbBuckets-2 driver rounds — 16 window/join/checkpoint passes
-    // over the table — where one pass per key computes the identical
-    // chain. x = row index (the equal-spacing LTTB variant); centroids
-    // replicate exactMean bit-for-bit (per-value DECIMAL(18,6)
-    // quantization via dec6, exact BigDecimal sum — order-blind — one
-    // doubleValue cast, double divide); areas round6Jvm'd before the
-    // argmax with the (tsu, event_id) tiebreak (ascending scan keeps
-    // the earliest strict max), so both engines pick identical points;
-    // the oracle unrolls the same rounds as chained CTEs, unchanged.
-    "ts_lttb_downsample" -> { (s, d) =>
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-      val nb = LttbBuckets - 2
-      val minRows = LttbBuckets
-      val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val sorted = ev(s, d).where(col("value").isNotNull)
-        .select(col("user_id"), col("tsu"), col("event_id"),
-          col("value").cast(DoubleType).as("value"))
-        .repartition(parts, col("user_id"))
-        .sortWithinPartitions("user_id", "tsu", "event_id")
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("bucket", LongType),
-        StructField("event_id", LongType), StructField("value", DoubleType)))
-      val picked = s.createDataFrame(
-        sorted.rdd.mapPartitions { rows =>
-          import java.math.{BigDecimal => JBD}
-          // One series' LTTB picks from its (tsu, event_id)-ordered rows:
-          // (eventId, value) per row; rn = index+1.
-          def lttb(uid: Long, ev: Array[Long], va: Array[Double]): Iterator[Row] = {
-            val cnt = ev.length
-            if (cnt < minRows) Iterator.empty
-            else {
-              // bucket(rn) for interior rn in 2..cnt-1, exactly the old
-              // floor(((rn-2)*nb)/double(cnt-2)) + 1 expression.
-              def bucketOf(rn: Long): Int =
-                (math.floor(((rn - 2L) * nb).toDouble / (cnt - 2).toDouble) + 1.0).toInt
-              // Per-bucket centroid = exactMean replica: sum of dec6-
-              // quantized values as exact BigDecimals, one doubleValue
-              // cast of the sum, double divide by the count.
-              val sx = Array.fill(nb + 2)(JBD.ZERO)
-              val sy = Array.fill(nb + 2)(JBD.ZERO)
-              val bn = new Array[Long](nb + 2)
-              var i = 1
-              while (i < cnt - 1) {
-                val b = bucketOf(i + 1L)
-                sx(b) = sx(b).add(CleanFunctions.dec6((i + 1L).toDouble))
-                sy(b) = sy(b).add(CleanFunctions.dec6(va(i)))
-                bn(b) += 1L
-                i += 1
-              }
-              val out = new Array[Row](nb + 2)
-              out(0) = Row(uid, 0L, ev(0), va(0))
-              out(nb + 1) = Row(uid, (nb + 1).toLong, ev(cnt - 1), va(cnt - 1))
-              var px = 1.0
-              var py = va(0)
-              var lo = 1 // first interior index of the current bucket
-              var b = 1
-              while (b <= nb) {
-                val (cx, cy) =
-                  if (b < nb) (sx(b + 1).doubleValue / bn(b + 1),
-                               sy(b + 1).doubleValue / bn(b + 1))
-                  else (cnt.toDouble, va(cnt - 1))
-                var bestArea = Double.NegativeInfinity
-                var bestIdx = -1
-                var j = lo
-                while (j < cnt - 1 && bucketOf(j + 1L) == b) {
-                  val area = CleanFunctions.round6Jvm(math.abs(
-                    (px - cx) * (va(j) - py) -
-                      (px - (j + 1L).toDouble) * (cy - py)) * 0.5)
-                  if (area > bestArea) { bestArea = area; bestIdx = j }
-                  j += 1
-                }
-                lo = j
-                out(b) = Row(uid, b.toLong, ev(bestIdx), va(bestIdx))
-                px = (bestIdx + 1L).toDouble
-                py = va(bestIdx)
-                b += 1
-              }
-              out.iterator
-            }
-          }
-          // Buffer one series at a time (rows are key-contiguous and
-          // ordered within the partition).
-          new Iterator[Row] {
-            private var pending: Iterator[Row] = Iterator.empty
-            private var curUid = 0L
-            private var haveCur = false
-            private val evBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-            private val vaBuf = scala.collection.mutable.ArrayBuffer.empty[Double]
-            private def flush(): Iterator[Row] = {
-              val it = lttb(curUid, evBuf.toArray, vaBuf.toArray)
-              evBuf.clear(); vaBuf.clear()
-              it
-            }
-            private def advance(): Unit = {
-              while (!pending.hasNext && rows.hasNext) {
-                val r = rows.next()
-                val uid = r.getLong(0)
-                if (!haveCur) { curUid = uid; haveCur = true }
-                else if (uid != curUid) { pending = flush(); curUid = uid }
-                evBuf += r.getLong(2)
-                vaBuf += r.getDouble(3)
-              }
-              if (!pending.hasNext && haveCur && evBuf.nonEmpty) pending = flush()
-            }
-            override def hasNext: Boolean = { advance(); pending.hasNext }
-            override def next(): Row = { advance(); pending.next() }
-          }
-        }, schema)
-      picked.orderBy("user_id", "bucket")
-    },
+    // LTTB downsampling: see [[lttbDownsample]].
+    "ts_lttb_downsample" -> { (s, d) => lttbDownsample(ev(s, d)) },
 
     // SCD Type-2 history of each user's event_type: validity intervals
     // over change points, open interval flagged current.

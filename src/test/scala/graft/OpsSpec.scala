@@ -13,6 +13,7 @@ import graft.sources.Tables
 class OpsSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   import spark.implicits._
+  import SparkTestSession.withShufflePartitions
 
   private val K   = Seq("k")
   private val Ord = Seq("tsu", "id")
@@ -112,10 +113,11 @@ class OpsSpec extends AnyFunSuite {
       Seq((i, (i % 7) * H, i % 5, math.sin(i.toDouble) * 100.0))
     }
     val df = rows.toDF("id", "tsu", "k", "v")
-    val a = TimeSeriesOps.holtSmooth(df, K, Ord, "v", 0.5, 0.3, numPartitions = 2)
-      .orderBy("k").collect().toSeq
-    val b = TimeSeriesOps.holtSmooth(df, K, Ord, "v", 0.5, 0.3, numPartitions = 13)
-      .orderBy("k").collect().toSeq
+    def run(p: Int) = withShufflePartitions(p) {
+      TimeSeriesOps.holtSmooth(df, K, Ord, "v", 0.5, 0.3).orderBy("k").collect().toSeq
+    }
+    val a = run(2)
+    val b = run(13)
     assert(a === b)
   }
 
@@ -223,10 +225,11 @@ class OpsSpec extends AnyFunSuite {
       (i, (i * 7 % 97) + (i % 3) * 100, i % 6, rng.nextInt(50) + 1.0))
     val df = rows.toDF("id", "bucket", "k", "q")
       .groupBy("k", "bucket").agg(sum("q").as("q")) // unique (k, bucket)
-    val a = TimeSeriesOps.crostonSmooth(df, K, "bucket", "q", 0.3, numPartitions = 2)
-      .orderBy("k").collect().toSeq
-    val b = TimeSeriesOps.crostonSmooth(df, K, "bucket", "q", 0.3, numPartitions = 13)
-      .orderBy("k").collect().toSeq
+    def run(p: Int) = withShufflePartitions(p) {
+      TimeSeriesOps.crostonSmooth(df, K, "bucket", "q", 0.3).orderBy("k").collect().toSeq
+    }
+    val a = run(2)
+    val b = run(13)
     assert(a === b)
   }
 
@@ -255,10 +258,12 @@ class OpsSpec extends AnyFunSuite {
       (i, (i % 13) * H, i % 5, v)
     }
     val df = rows.toDF("id", "tsu", "k", "v")
-    val a = TimeSeriesOps.kalmanPath(df, K, Ord, "v", 4.0, 25.0, numPartitions = 2)
-      .orderBy("id").select("id", "estimate", "gain").collect().toSeq
-    val b = TimeSeriesOps.kalmanPath(df, K, Ord, "v", 4.0, 25.0, numPartitions = 11)
-      .orderBy("id").select("id", "estimate", "gain").collect().toSeq
+    def run(p: Int) = withShufflePartitions(p) {
+      TimeSeriesOps.kalmanPath(df, K, Ord, "v", 4.0, 25.0)
+        .orderBy("id").select("id", "estimate", "gain").collect().toSeq
+    }
+    val a = run(2)
+    val b = run(11)
     assert(a === b)
     val nullRows = TimeSeriesOps.kalmanPath(df, K, Ord, "v", 4.0, 25.0)
       .where(col("v").isNull)
@@ -300,10 +305,12 @@ class OpsSpec extends AnyFunSuite {
       (i, (i % 17) * H, i % 4, v)
     }
     val df = rows.toDF("id", "tsu", "k", "r")
-    val a = TimeSeriesOps.garchPath(df, K, Ord, "r", 2.0, 0.2, 0.7, numPartitions = 3)
-      .orderBy("id").select("id", "sigma2").collect().toSeq
-    val b = TimeSeriesOps.garchPath(df, K, Ord, "r", 2.0, 0.2, 0.7, numPartitions = 13)
-      .orderBy("id").select("id", "sigma2").collect().toSeq
+    def run(p: Int) = withShufflePartitions(p) {
+      TimeSeriesOps.garchPath(df, K, Ord, "r", 2.0, 0.2, 0.7)
+        .orderBy("id").select("id", "sigma2").collect().toSeq
+    }
+    val a = run(3)
+    val b = run(13)
     assert(a === b)
     assert(TimeSeriesOps.garchPath(df, K, Ord, "r", 2.0, 0.2, 0.7)
       .where(col("r").isNull && col("sigma2").isNotNull).count() == 0)
@@ -338,12 +345,14 @@ class OpsSpec extends AnyFunSuite {
   test("tokenBucket is partition-invariant and refill caps at capacity") {
     val ev = Tables.events(spark, SparkTestSession.sfDir)
       .withColumn("tsu", graft.functions.CleanFunctions.epochUs(col("ts")))
-    def run(p: Int) = TimeSeriesOps.tokenBucket(
-        ev, Seq("user_id"), Seq("tsu", "event_id"), "tsu",
-        capacity = 3.0, refillPerSec = 1.0 / 3600.0, numPartitions = p)
-      .select(col("event_id"), col("tokens"), col("admitted"))
-      .as[(Long, Double, Long)].collect()
-      .map { case (i, t, a) => i -> (t, a) }.toMap
+    def run(p: Int) = withShufflePartitions(p) {
+      TimeSeriesOps.tokenBucket(
+          ev, Seq("user_id"), Seq("tsu", "event_id"), "tsu",
+          capacity = 3.0, refillPerSec = 1.0 / 3600.0)
+        .select(col("event_id"), col("tokens"), col("admitted"))
+        .as[(Long, Double, Long)].collect()
+        .map { case (i, t, a) => i -> (t, a) }.toMap
+    }
     val a = run(2); val b = run(16)
     assert(a == b, "tokenBucket result depends on partitioning")
     assert(a.values.forall { case (t, _) => t >= 0.0 && t <= 3.0 },
@@ -412,10 +421,12 @@ class OpsSpec extends AnyFunSuite {
       .withColumn("day", expr("tsu DIV 86400000000"))
       .groupBy(col("user_id").as("k"), col("day"))
       .agg(avg("value").as("x"))
-    def run(p: Int) = TimeSeriesOps.holtWinters(ev, K, Seq("day"), "x",
-        period = 7, alpha = 0.3, beta = 0.1, gamma = 0.2, numPartitions = p)
-      .select(col("k"), col("day"), col("hw_level"))
-      .as[(Long, Long, Double)].collect().sorted.toSeq
+    def run(p: Int) = withShufflePartitions(p) {
+      TimeSeriesOps.holtWinters(ev, K, Seq("day"), "x",
+          period = 7, alpha = 0.3, beta = 0.1, gamma = 0.2)
+        .select(col("k"), col("day"), col("hw_level"))
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+    }
     assert(run(2) == run(16), "holtWinters depends on partitioning")
     // A deterministic period-2 alternating signal: after warm-up the
     // one-step forecast error must shrink vs the naive last-value error.

@@ -16,4 +16,13 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` on the
+    * shared session, restoring the previous value afterwards. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, prev)
+  }
 }
