@@ -505,6 +505,50 @@ object TimeSeriesOps {
       }, StructType(kept ++ outs))
   }
 
+  /** [[scanSeries]] for a per-row recurrence: `step` folds each row whose
+    * inputs are all non-null into the series state (null until the
+    * series' first such row) and `emit` reads that row's outputs off the
+    * new state; a row with a null input emits null outputs and leaves the
+    * state untouched.
+    */
+  private def stepSeries[S >: Null](df: DataFrame, keys: Seq[String], order: Seq[String],
+                                    inputs: Seq[Column], outs: Seq[StructField])(
+      step: (S, Row) => S)(emit: S => Seq[Any]): DataFrame = {
+    val (n, nulls) = (inputs.length, Seq.fill(outs.length)(null))
+    scanSeries(df, keys, order, inputs, outs, perRow = true) { run =>
+      var st: S = null
+      run.map { r =>
+        if ((0 until n).exists(r.isNullAt)) nulls
+        else { st = step(st, r); emit(st) }
+      }
+    }
+  }
+
+  // Each recurrence below is written once, as a `*Step` factory: it checks
+  // the parameters (so a bad value fails when the operator is built) and
+  // returns the update step, which maps the series state (null before the
+  // series' first row) and one row's inputs to the new state. The batch
+  // fold here and its `StreamingAnomaly` twin both run that step, so their
+  // IEEE op order cannot drift apart. A step whose null input still
+  // advances the state takes an Option; otherwise the caller skips nulls.
+
+  /** Recursive-EWMA numerator/denominator — TWO doubles of state per key. */
+  case class EwmaState(num: Double, den: Double)
+
+  private[graft] def ewmaStep(alpha: Double): (EwmaState, Option[Double]) => EwmaState = {
+    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
+    val decay = 1.0 - alpha
+    (st, x) =>
+      if (st == null && x.isEmpty) null
+      else {
+        val (num, den) = if (st == null) (0.0, 0.0) else (st.num, st.den)
+        x match {
+          case Some(v) => EwmaState(num * decay + v, den * decay + 1.0)
+          case None    => EwmaState(num * decay, den * decay)
+        }
+      }
+  }
+
   /** Recursive (full-history) EWMA — the long-span path the lag-kernel
     * [[ewma]] guards against: state-scan recurrence
     *   num_t = [x_t] + (1-alpha) * num_{t-1}
@@ -518,57 +562,76 @@ object TimeSeriesOps {
   def ewmaRecursive(df: DataFrame, keys: Seq[String], order: Seq[String],
                     target: String, alpha: Double,
                     outCol: String = "ewma"): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
-    val decay = 1.0 - alpha
+    val step = ewmaStep(alpha)
     // The double cast lets any numeric target (decimal/float/int) in —
     // getDouble on the raw column would ClassCastException for
     // non-double numerics.
     scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
         Seq(StructField(outCol, DoubleType)), perRow = true) { run =>
-      var num = 0.0
-      var den = 0.0
+      var st: EwmaState = null
       run.map { r =>
-        num *= decay
-        den *= decay
-        if (!r.isNullAt(0)) { num += r.getDouble(0); den += 1.0 }
-        Seq(if (den == 0.0) null else num / den)
+        st = step(st, if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+        Seq(if (st == null || st.den == 0.0) null else st.num / st.den)
       }
     }
+  }
+
+  /** Holt level + trend — TWO doubles of state per key. */
+  case class HoltState(level: Double, trend: Double)
+
+  /** l' = a*x + (1-a)(l+b); b' = g*(l'-l) + (1-g)*b, init l = x0, b = 0
+    * (each 1−· computed, never a pre-folded literal).
+    */
+  private[graft] def holtStep(alpha: Double, gamma: Double): (HoltState, Double) => HoltState = {
+    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
+    require(gamma > 0 && gamma < 1, s"gamma=$gamma must be in (0, 1)")
+    (st, x) =>
+      if (st == null) HoltState(x, 0.0)
+      else {
+        val nl = alpha * x + (1.0 - alpha) * (st.level + st.trend)
+        HoltState(nl, gamma * (nl - st.level) + (1.0 - gamma) * st.trend)
+      }
   }
 
   /** Holt's linear-trend (double exponential) smoothing, FINAL state per
     * series: level/trend after folding the whole ordered series, plus the
     * h-step-ahead forecast level + h*trend. The recurrence
-    * (l' = a*x + (1-a)(l+b); b' = g*(l'-l) + (1-g)*b, init l=x0, b=0)
-    * is stateful, so like [[ewmaRecursive]] it runs on [[scanSeries]]
-    * with O(1) state per series — no per-series buffering, streams at any
-    * series length. Unlike the EWMA (which emits every row) the output
-    * here is ONE row per series, which makes the fold expressible in
-    * DuckDB as a `list_reduce` in the same left-to-right IEEE order — an
-    * EXACT oracle for a recursive operator. Null targets are skipped on
-    * both engines, so a series with no non-null target emits no row.
+    * ([[holtStep]]) is stateful, so like [[ewmaRecursive]] it runs on
+    * [[scanSeries]] with O(1) state per series — no per-series buffering,
+    * streams at any series length. Unlike the EWMA (which emits every row)
+    * the output here is ONE row per series, which makes the fold
+    * expressible in DuckDB as a `list_reduce` in the same left-to-right
+    * IEEE order — an EXACT oracle for a recursive operator. Null targets
+    * are skipped on both engines, so a series with no non-null target
+    * emits no row.
     */
   def holtSmooth(df: DataFrame, keys: Seq[String], order: Seq[String],
                  target: String, alpha: Double, gamma: Double): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
-    require(gamma > 0 && gamma < 1, s"gamma=$gamma must be in (0, 1)")
+    val step = holtStep(alpha, gamma)
     scanSeries(df.where(col(target).isNotNull), keys, order,
         Seq(col(target).cast(DoubleType)),
         Seq(StructField("level", DoubleType), StructField("trend", DoubleType),
           StructField("n", LongType)), perRow = false) { run =>
-      var level = run.next().getDouble(0); var trend = 0.0; var n = 1L
-      run.foreach { r =>
-        val x = r.getDouble(0)
-        val nl = alpha * x + (1.0 - alpha) * (level + trend)
-        trend = gamma * (nl - level) + (1.0 - gamma) * trend
-        level = nl
-        n += 1L
-      }
+      var st: HoltState = null; var n = 0L
+      run.foreach { r => st = step(st, r.getDouble(0)); n += 1L }
       // Seq[Any] is load-bearing: Seq(level, trend, n) would unify to
       // Seq[Double] and numerically WIDEN the Long count to a Double,
       // which the LongType row encoder then rejects.
-      Iterator.single(Seq[Any](level, trend, n))
+      Iterator.single(Seq[Any](st.level, st.trend, n))
     }
+  }
+
+  /** Croston fold state: demand-size and inter-demand-interval smoothers
+    * plus the last demand bucket and the demand count — O(1) per key.
+    */
+  case class CrostonState(z: Double, p: Double, prevB: Long, n: Long)
+
+  private[graft] def crostonStep(alpha: Double): (CrostonState, Long, Double) => CrostonState = {
+    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
+    (st, b, q) =>
+      if (st == null) CrostonState(q, 1.0, b, 1L)
+      else CrostonState(alpha * q + (1.0 - alpha) * st.z,
+        alpha * (b - st.prevB).toDouble + (1.0 - alpha) * st.p, b, st.n + 1L)
   }
 
   /** Croston's method for INTERMITTENT demand (sparse series where most
@@ -586,23 +649,14 @@ object TimeSeriesOps {
     */
   def crostonSmooth(df: DataFrame, keys: Seq[String], bucketCol: String,
                     qtyCol: String, alpha: Double): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
+    val step = crostonStep(alpha)
     scanSeries(df.where(col(qtyCol).isNotNull && col(bucketCol).isNotNull), keys, Seq(bucketCol),
         Seq(col(bucketCol).cast(LongType), col(qtyCol).cast(DoubleType)),
         Seq(StructField("n_demands", LongType), StructField("level", DoubleType),
           StructField("interval", DoubleType), StructField("forecast", DoubleType)),
         perRow = false) { run =>
-      val first = run.next()
-      var z = first.getDouble(1); var p = 1.0; var prevB = first.getLong(0); var n = 1L
-      run.foreach { r =>
-        val q = r.getDouble(1)
-        val b = r.getLong(0)
-        z = alpha * q + (1.0 - alpha) * z
-        p = alpha * (b - prevB).toDouble + (1.0 - alpha) * p
-        prevB = b
-        n += 1L
-      }
-      Iterator.single(Seq[Any](n, z, p, z / p))
+      val st = run.foldLeft(null: CrostonState)((s, r) => step(s, r.getLong(0), r.getDouble(1)))
+      Iterator.single(Seq[Any](st.n, st.z, st.p, st.z / st.p))
     }
   }
 
@@ -613,26 +667,26 @@ object TimeSeriesOps {
     */
   def holtPath(df: DataFrame, keys: Seq[String], order: Seq[String],
                target: String, alpha: Double, gamma: Double): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
-    require(gamma > 0 && gamma < 1, s"gamma=$gamma must be in (0, 1)")
-    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
-        Seq(StructField("level", DoubleType), StructField("trend", DoubleType)),
-        perRow = true) { run =>
-      var level = 0.0; var trend = 0.0; var seen = false
-      run.map { r =>
-        if (r.isNullAt(0)) Seq(null, null)
-        else {
-          val x = r.getDouble(0)
-          if (!seen) { level = x; trend = 0.0; seen = true }
-          else {
-            val nl = alpha * x + (1.0 - alpha) * (level + trend)
-            trend = gamma * (nl - level) + (1.0 - gamma) * trend
-            level = nl
-          }
-          Seq(level, trend)
-        }
+    val step = holtStep(alpha, gamma)
+    stepSeries[HoltState](df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField("level", DoubleType), StructField("trend", DoubleType)))(
+      (st, r) => step(st, r.getDouble(0)))(st => Seq(st.level, st.trend))
+  }
+
+  /** Kalman posterior state: level estimate + error variance, and the
+    * gain of the update that produced them — O(1)/key.
+    */
+  case class KalmanState(est: Double, p: Double, gain: Double)
+
+  private[graft] def kalmanStep(q: Double, r: Double): (KalmanState, Double) => KalmanState = {
+    require(q > 0 && r > 0, s"variances must be positive: q=$q r=$r")
+    (st, z) =>
+      if (st == null) KalmanState(z, r, 1.0)
+      else {
+        val pp = st.p + q
+        val kk = pp / (pp + r)
+        KalmanState(st.est + kk * (z - st.est), (1.0 - kk) * pp, kk)
       }
-    }
   }
 
   /** 1-D Kalman filter (local-level / random-walk-plus-noise model),
@@ -649,26 +703,25 @@ object TimeSeriesOps {
     */
   def kalmanPath(df: DataFrame, keys: Seq[String], order: Seq[String],
                  target: String, q: Double, r: Double): DataFrame = {
-    require(q > 0 && r > 0, s"variances must be positive: q=$q r=$r")
-    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
-        Seq(StructField("estimate", DoubleType), StructField("gain", DoubleType)),
-        perRow = true) { run =>
-      var est = 0.0; var p = 0.0; var seen = false
-      run.map { row =>
-        if (row.isNullAt(0)) Seq(null, null)
-        else {
-          val z = row.getDouble(0)
-          if (!seen) { est = z; p = r; seen = true; Seq(est, 1.0) }
-          else {
-            val pp = p + q
-            val kk = pp / (pp + r)
-            est = est + kk * (z - est)
-            p = (1.0 - kk) * pp
-            Seq(est, kk)
-          }
-        }
-      }
-    }
+    val step = kalmanStep(q, r)
+    stepSeries[KalmanState](df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField("estimate", DoubleType), StructField("gain", DoubleType)))(
+      (st, row) => step(st, row.getDouble(0)))(st => Seq(st.est, st.gain))
+  }
+
+  /** GARCH(1,1) state: conditional variance + previous return. */
+  case class GarchState(s2: Double, prevR: Double)
+
+  private[graft] def garchStep(omega: Double, alpha: Double,
+                               beta: Double): (GarchState, Double) => GarchState = {
+    require(omega > 0, s"omega=$omega must be positive")
+    require(alpha >= 0 && beta >= 0 && alpha + beta < 1,
+      s"need alpha,beta >= 0 and alpha+beta < 1 for stationarity: alpha=$alpha beta=$beta")
+    val uncond = omega / (1.0 - alpha - beta)
+    // Written `ω + α·r² + β·σ²`, left-associated, on both engines.
+    (st, r) =>
+      if (st == null) GarchState(uncond, r)
+      else GarchState(omega + alpha * (st.prevR * st.prevR) + beta * st.s2, r)
   }
 
   /** GARCH(1,1) conditional-variance path with FIXED parameters, emitted
@@ -692,25 +745,20 @@ object TimeSeriesOps {
     */
   def garchPath(df: DataFrame, keys: Seq[String], order: Seq[String],
                 target: String, omega: Double, alpha: Double, beta: Double): DataFrame = {
-    require(omega > 0, s"omega=$omega must be positive")
-    require(alpha >= 0 && beta >= 0 && alpha + beta < 1,
-      s"need alpha,beta >= 0 and alpha+beta < 1 for stationarity: alpha=$alpha beta=$beta")
-    val uncond = omega / (1.0 - alpha - beta)
-    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
-        Seq(StructField("sigma2", DoubleType)), perRow = true) { run =>
-      var s2 = 0.0; var prevR = 0.0; var seen = false
-      run.map { row =>
-        if (row.isNullAt(0)) Seq(null)
-        else {
-          val r = row.getDouble(0)
-          // Written `ω + α·r² + β·σ²`, left-associated, on both engines.
-          if (!seen) { s2 = uncond; seen = true }
-          else s2 = omega + alpha * (prevR * prevR) + beta * s2
-          prevR = r
-          Seq(s2)
-        }
-      }
-    }
+    val step = garchStep(omega, alpha, beta)
+    stepSeries[GarchState](df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField("sigma2", DoubleType)))(
+      (st, row) => step(st, row.getDouble(0)))(st => Seq(st.s2))
+  }
+
+  /** Hysteresis alarm state: ONE long per key (0 = clear, 1 = in alert). */
+  case class HystState(in: Long)
+
+  private[graft] def hysteresisStep(lo: Double, hi: Double): (HystState, Double) => HystState = {
+    require(lo <= hi, s"hysteresis needs lo <= hi, got $lo > $hi")
+    (st, x) =>
+      if (st == null || st.in == 0L) HystState(if (x > hi) 1L else 0L)
+      else HystState(if (x < lo) 0L else 1L)
   }
 
   /** Two-threshold hysteresis (Schmitt-trigger) alert state per key —
@@ -729,21 +777,18 @@ object TimeSeriesOps {
   def hysteresis(df: DataFrame, keys: Seq[String], order: Seq[String],
                  target: String, lo: Double, hi: Double,
                  outCol: String = "in_alert"): DataFrame = {
-    require(lo <= hi, s"hysteresis needs lo <= hi, got $lo > $hi")
-    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
-        Seq(StructField(outCol, LongType)), perRow = true) { run =>
-      var in = 0L
-      run.map { r =>
-        if (r.isNullAt(0)) Seq(null)
-        else {
-          val x = r.getDouble(0)
-          in = if (in == 0L) { if (x > hi) 1L else 0L }
-               else { if (x < lo) 0L else 1L }
-          Seq(in)
-        }
-      }
-    }
+    val step = hysteresisStep(lo, hi)
+    stepSeries[HystState](df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq(StructField(outCol, LongType)))(
+      (st, r) => step(st, r.getDouble(0)))(st => Seq(st.in))
   }
+
+  /** One-sided upper CUSUM statistic — a single double of state per key. */
+  case class CusumState(s: Double)
+
+  /** s' = max(0, s + (x − mean − slack)), s starting at 0. */
+  private[graft] def cusumStep(st: CusumState, x: Double, mean: Double, slack: Double): CusumState =
+    CusumState(math.max(0.0, (if (st == null) 0.0 else st.s) + (x - mean - slack)))
 
   /** One-sided upper CUSUM with reset (the SPC control-chart statistic):
     * s_t = max(0, s_{t-1} + (x_t - target_t - slack_t)), emitted PER ROW.
@@ -758,18 +803,36 @@ object TimeSeriesOps {
   def cusumReset(df: DataFrame, keys: Seq[String], order: Seq[String],
                  target: String, targetMean: String, slack: String,
                  outCol: String = "cusum_hi"): DataFrame =
-    scanSeries(df, keys, order,
+    stepSeries[CusumState](df, keys, order,
         Seq(target, targetMean, slack).map(c => col(c).cast(DoubleType)),
-        Seq(StructField(outCol, DoubleType)), perRow = true) { run =>
-      var s = 0.0
-      run.map { r =>
-        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) Seq(null)
-        else {
-          s = math.max(0.0, s + (r.getDouble(0) - r.getDouble(1) - r.getDouble(2)))
-          Seq(s)
-        }
+        Seq(StructField(outCol, DoubleType)))(
+      (st, r) => cusumStep(st, r.getDouble(0), r.getDouble(1), r.getDouble(2)))(st => Seq(st.s))
+
+  /** Holt-Winters state: level, trend, the m-slot seasonal vector (updated
+    * in place), the observation counter that indexes it, and the
+    * one-step-ahead fit of the last observation (None on the first) —
+    * O(period) per key.
+    */
+  case class HwState(level: Double, trend: Double, season: Array[Double], cnt: Long,
+                     fitted: Option[Double]) {
+    /** The seasonal slot the last observation updated. */
+    def seasonal: Double = season(((cnt - 1) % season.length).toInt)
+  }
+
+  private[graft] def holtWintersStep(period: Int, alpha: Double, beta: Double,
+                                     gamma: Double): (HwState, Double) => HwState = {
+    require(period >= 2, s"seasonal period must be >= 2, got $period")
+    val (omA, omB, omG) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
+    (st, x) =>
+      if (st == null) HwState(x, 0.0, Array.fill(period)(0.0), 1L, None)
+      else {
+        val (l, b, s, idx) = (st.level, st.trend, st.season, (st.cnt % period).toInt)
+        val sI = s(idx)
+        val lNew = alpha * (x - sI) + omA * (l + b)
+        s(idx) = gamma * (x - lNew) + omG * sI
+        HwState(lNew, beta * (lNew - l) + omB * b, s, st.cnt + 1L, Some(l + b + sI))
       }
-    }
+  }
 
   /** Additive Holt-Winters (triple exponential) smoothing per key — the
     * seasonal member of the smoothing family (SES = [[ewma]], double =
@@ -790,35 +853,30 @@ object TimeSeriesOps {
     */
   def holtWinters(df: DataFrame, keys: Seq[String], order: Seq[String],
                   target: String, period: Int,
-                  alpha: Double, beta: Double, gamma: Double): DataFrame = {
+                  alpha: Double, beta: Double, gamma: Double): DataFrame =
+    hwSeries(df, keys, order, target, holtWintersStep(period, alpha, beta, gamma))
+
+  /** The per-row Holt-Winters scan shared by both seasonal models. */
+  private def hwSeries(df: DataFrame, keys: Seq[String], order: Seq[String], target: String,
+                       step: (HwState, Double) => HwState): DataFrame =
+    stepSeries[HwState](df, keys, order, Seq(col(target).cast(DoubleType)),
+        Seq("hw_fitted", "hw_level", "hw_trend", "hw_seasonal").map(StructField(_, DoubleType)))(
+      (st, r) => step(st, r.getDouble(0)))(
+      st => Seq[Any](st.fitted.getOrElse(null), st.level, st.trend, st.seasonal))
+
+  private[graft] def holtWintersMultStep(period: Int, alpha: Double, beta: Double,
+                                         gamma: Double): (HwState, Double) => HwState = {
     require(period >= 2, s"seasonal period must be >= 2, got $period")
     val (omA, omB, omG) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
-    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
-        Seq("hw_fitted", "hw_level", "hw_trend", "hw_seasonal").map(StructField(_, DoubleType)),
-        perRow = true) { run =>
-      var l = 0.0; var b = 0.0; var cnt = 0L
-      val s = Array.fill(period)(0.0)
-      run.map { r =>
-        if (r.isNullAt(0)) Seq(null, null, null, null)
-        else {
-          val x = r.getDouble(0)
-          cnt += 1
-          val idx = ((cnt - 1) % period).toInt
-          if (cnt == 1L) {
-            l = x; b = 0.0
-            Seq[Any](null, l, b, s(idx))
-          } else {
-            val sI = s(idx)
-            val fitted = l + b + sI
-            val lNew = alpha * (x - sI) + omA * (l + b)
-            b = beta * (lNew - l) + omB * b
-            l = lNew
-            s(idx) = gamma * (x - l) + omG * sI
-            Seq[Any](fitted, l, b, s(idx))
-          }
-        }
+    (st, x) =>
+      if (st == null) HwState(x, 0.0, Array.fill(period)(1.0), 1L, None)
+      else {
+        val (l, b, s, idx) = (st.level, st.trend, st.season, (st.cnt % period).toInt)
+        val sI = s(idx)
+        val lNew = alpha * (x / sI) + omA * (l + b)
+        s(idx) = gamma * (x / lNew) + omG * sI
+        HwState(lNew, beta * (lNew - l) + omB * b, s, st.cnt + 1L, Some((l + b) * sI))
       }
-    }
   }
 
   /** MULTIPLICATIVE Holt-Winters (Winters 1960): the seasonal component
@@ -834,34 +892,25 @@ object TimeSeriesOps {
     */
   def holtWintersMult(df: DataFrame, keys: Seq[String], order: Seq[String],
                       target: String, period: Int,
-                      alpha: Double, beta: Double, gamma: Double): DataFrame = {
-    require(period >= 2, s"seasonal period must be >= 2, got $period")
-    val (omA, omB, omG) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
-    scanSeries(df, keys, order, Seq(col(target).cast(DoubleType)),
-        Seq("hw_fitted", "hw_level", "hw_trend", "hw_seasonal").map(StructField(_, DoubleType)),
-        perRow = true) { run =>
-      var l = 0.0; var b = 0.0; var cnt = 0L
-      val s = Array.fill(period)(1.0)
-      run.map { r =>
-        if (r.isNullAt(0)) Seq(null, null, null, null)
-        else {
-          val x = r.getDouble(0)
-          cnt += 1
-          val idx = ((cnt - 1) % period).toInt
-          if (cnt == 1L) {
-            l = x; b = 0.0
-            Seq[Any](null, l, b, s(idx))
-          } else {
-            val sI = s(idx)
-            val fitted = (l + b) * sI
-            val lNew = alpha * (x / sI) + omA * (l + b)
-            b = beta * (lNew - l) + omB * b
-            l = lNew
-            s(idx) = gamma * (x / lNew) + omG * sI
-            Seq[Any](fitted, l, b, s(idx))
-          }
-        }
-      }
+                      alpha: Double, beta: Double, gamma: Double): DataFrame =
+    hwSeries(df, keys, order, target, holtWintersMultStep(period, alpha, beta, gamma))
+
+  /** Token-bucket state: balance + last-arrival micros, and whether the
+    * last arrival was admitted — O(1)/key.
+    */
+  case class BucketState(tokens: Double, lastUs: Long, admitted: Long)
+
+  /** The bucket starts FULL at a key's first event; each event refills
+    * min(capacity, tokens + refillPerSec·Δt) first, then admits iff
+    * tokens >= 1, consuming one.
+    */
+  private[graft] def tokenBucketStep(capacity: Double,
+                                     refillPerSec: Double): (BucketState, Long) => BucketState = {
+    require(capacity >= 1.0, "tokenBucket: capacity must admit at least one event")
+    (st, t) => {
+      val tokens = if (st == null) capacity
+        else math.min(capacity, st.tokens + refillPerSec * ((t - st.lastUs).toDouble / 1000000.0))
+      if (tokens >= 1.0) BucketState(tokens - 1.0, t, 1L) else BucketState(tokens, t, 0L)
     }
   }
 
@@ -879,30 +928,13 @@ object TimeSeriesOps {
   def tokenBucket(df: DataFrame, keys: Seq[String], order: Seq[String],
                   tsCol: String, capacity: Double, refillPerSec: Double,
                   tokensCol: String = "tokens", admitCol: String = "admitted"): DataFrame = {
-    require(capacity >= 1.0, "tokenBucket: capacity must admit at least one event")
-    scanSeries(df, keys, order, Seq(col(tsCol).cast(LongType)),
-        Seq(StructField(tokensCol, DoubleType), StructField(admitCol, LongType)),
-        perRow = true) { run =>
-      var tokens = capacity
-      var lastTs = 0L
-      var seen = false
-      run.map { r =>
-        if (r.isNullAt(0)) Seq(null, null)
-        else {
-          val t = r.getLong(0)
-          if (seen) {
-            tokens = math.min(capacity,
-              tokens + refillPerSec * ((t - lastTs).toDouble / 1000000.0))
-          }
-          seen = true
-          lastTs = t
-          val admitted = if (tokens >= 1.0) { tokens -= 1.0; 1L } else 0L
-          // Seq[Any]: Seq(Double, Long) would infer Seq[Double] and
-          // silently WIDEN the Long — the encoder then rejects it.
-          Seq[Any](tokens, admitted)
-        }
-      }
-    }
+    val step = tokenBucketStep(capacity, refillPerSec)
+    stepSeries[BucketState](df, keys, order, Seq(col(tsCol).cast(LongType)),
+        Seq(StructField(tokensCol, DoubleType), StructField(admitCol, LongType)))(
+      (st, r) => step(st, r.getLong(0)))(
+      // Seq[Any]: Seq(Double, Long) would infer Seq[Double] and
+      // silently WIDEN the Long — the encoder then rejects it.
+      st => Seq[Any](st.tokens, st.admitted))
   }
 
   /** Gap-based sessionization: a new session starts when the time since
@@ -1009,6 +1041,13 @@ object TimeSeriesOps {
         col("valid_to"), col("is_current"))): _*)
   }
 
+  /** Hawkes fold state: ONE double per key (the decayed count). */
+  case class HawkesState(a: Double)
+
+  /** A₁ = 0, Aₖ = dₖ·(Aₖ₋₁ + 1); a null decay advances nothing. */
+  private[graft] def hawkesStep(st: HawkesState, decay: Option[Double]): HawkesState =
+    if (st == null) HawkesState(0.0) else decay.fold(st)(d => HawkesState(d * (st.a + 1.0)))
+
   /** Exponential-decay event-count fold (the Hawkes-process excitation
     * recursion): per key over ordered events, A₁ = 0 and
     * Aₖ = dₖ·(Aₖ₋₁ + 1), where `decayCol` carries the pre-computed
@@ -1025,13 +1064,25 @@ object TimeSeriesOps {
                  decayCol: String): DataFrame =
     scanSeries(df, keys, order, Seq(col(decayCol).cast(DoubleType)),
         Seq(StructField("excitation", DoubleType)), perRow = true) { run =>
-      var a = 0.0; var seen = false
+      var st: HawkesState = null
       run.map { r =>
-        if (!seen) seen = true
-        else if (!r.isNullAt(0)) a = r.getDouble(0) * (a + 1.0)
-        Seq(a)
+        st = hawkesStep(st, if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+        Seq(st.a)
       }
     }
+
+  /** Burst fold state: the two Viterbi path costs — TWO doubles per key. */
+  case class BurstState(c0: Double, c1: Double) {
+    /** The forward-filtered state decision. */
+    def inBurst: Long = if (c1 < c0) 1L else 0L
+  }
+
+  private[graft] def burstStep(gamma: Double): (BurstState, Double, Double) => BurstState = {
+    require(gamma >= 0, s"gamma=$gamma must be nonnegative")
+    (st, e0, e1) =>
+      if (st == null) BurstState(e0, gamma + e1)
+      else BurstState(math.min(st.c0, st.c1) + e0, math.min(st.c0 + gamma, st.c1) + e1)
+  }
 
   /** Two-state burst-detection Viterbi forward pass (Kleinberg 2002,
     * enumerating variant): per key, fold the per-bucket emission costs
@@ -1052,26 +1103,13 @@ object TimeSeriesOps {
     */
   def burstPath(df: DataFrame, keys: Seq[String], order: Seq[String],
                 e0Col: String, e1Col: String, gamma: Double): DataFrame = {
-    require(gamma >= 0, s"gamma=$gamma must be nonnegative")
-    scanSeries(df, keys, order, Seq(e0Col, e1Col).map(c => col(c).cast(DoubleType)),
+    val step = burstStep(gamma)
+    stepSeries[BurstState](df, keys, order, Seq(e0Col, e1Col).map(c => col(c).cast(DoubleType)),
         Seq(StructField("c0", DoubleType), StructField("c1", DoubleType),
-          StructField("in_burst", LongType)), perRow = true) { run =>
-      var c0 = 0.0; var c1 = 0.0; var seen = false
-      run.map { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Seq(null, null, null)
-        else {
-          val e0 = r.getDouble(0); val e1 = r.getDouble(1)
-          if (!seen) { c0 = e0; c1 = gamma + e1; seen = true }
-          else {
-            val n0 = math.min(c0, c1) + e0
-            val n1 = math.min(c0 + gamma, c1) + e1
-            c0 = n0; c1 = n1
-          }
-          // Seq[Any]: Seq(Double, Double, Long) would WIDEN the Long.
-          Seq[Any](c0, c1, if (c1 < c0) 1L else 0L)
-        }
-      }
-    }
+          StructField("in_burst", LongType)))(
+      (st, r) => step(st, r.getDouble(0), r.getDouble(1)))(
+      // Seq[Any]: Seq(Double, Double, Long) would WIDEN the Long.
+      st => Seq[Any](st.c0, st.c1, st.inBurst))
   }
 
   /** Banded DTW distance (Sakoe-Chiba band) between two 1-D series:

@@ -2,11 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.GraftConfig
+import graft.operators.TimeSeriesOps
+import graft.operators.TimeSeriesOps.{BucketState, BurstState, CrostonState, CusumState,
+  EwmaState, GarchState, HawkesState, HoltState, HwState, HystState, KalmanState}
 
 /** A single event of the keyed time series (the streaming face of the
   * `events` table: `user_id` = series key, `ts` = event time, `value` =
@@ -31,14 +34,8 @@ case class FlaggedEvent(event_id: Long, ts: Timestamp, user_id: Long, flag: Long
 /** Per-row Kalman output (streaming twin of TimeSeriesOps.kalmanPath). */
 case class KalmanEvent(event_id: Long, user_id: Long, estimate: Double, gain: Double)
 
-/** Kalman posterior state: level estimate + error variance — O(1)/key. */
-case class KalmanState(est: Double, p: Double)
-
 /** Per-row Holt output (streaming twin of TimeSeriesOps.holtPath). */
 case class HoltEvent(event_id: Long, user_id: Long, level: Double, trend: Double)
-
-/** Holt level + trend — TWO doubles of state per key. */
-case class HoltState(level: Double, trend: Double)
 
 /** A pre-differenced return sample (the GARCH observable). In production
   * the differencing is its own tiny stateful stage (one previous value per
@@ -53,9 +50,6 @@ case class RetSample(event_id: Long, ts: Timestamp, user_id: Long, ret: Double)
   */
 case class GarchEvent(event_id: Long, user_id: Long, ret: Double, sigma2: Double)
 
-/** GARCH(1,1) state: conditional variance + previous return. */
-case class GarchState(s2: Double, prevR: Double)
-
 /** One observation of a pre-bucketed seasonal series (the Holt-Winters
   * input grain — e.g. a daily mean from an upstream windowed aggregation).
   */
@@ -68,21 +62,11 @@ case class DaySample(user_id: Long, day: Long, m: Double)
 case class HwEvent(user_id: Long, day: Long, m: Double, fitted: Option[Double],
                    level: Double, trend: Double, seasonal: Double)
 
-/** Holt-Winters state: level, trend, the m-slot seasonal vector, and the
-  * observation counter that indexes it — O(period) per key.
-  */
-case class HwState(level: Double, trend: Double, season: Seq[Double], cnt: Long)
-
 /** One bucketed intermittent-demand observation (the Croston input grain
   * — hourly purchase demand from an upstream windowed aggregation). `ts`
   * is the bucket start, the event-time anchor for the emit-once close.
   */
 case class DemandSample(user_id: Long, ts: Timestamp, bucket: Long, q: Double)
-
-/** Croston fold state: demand-size and inter-demand-interval smoothers
-  * plus the last demand bucket and the demand count — O(1) per key.
-  */
-case class CrostonState(z: Double, p: Double, prevB: Long, n: Long)
 
 /** Terminal Croston summary per series (raw smoothers; the entry derives
   * the rounded level/interval/forecast like the batch twin).
@@ -104,9 +88,6 @@ case class BurstSample(event_type: String, day: Long,
 case class BurstEvent(event_type: String, day: Long, c0: Option[Double],
                       c1: Option[Double], in_burst: Option[Long])
 
-/** Burst fold state: the two path costs — TWO doubles per key. */
-case class BurstState(c0: Double, c1: Double)
-
 /** One event entering the streaming Hawkes excitation fold: the
   * pre-quantized inter-event decay e^(−β·Δt) rides on the row (computed
   * at ingest; None on a series' first arrival, where lag has no prior).
@@ -119,9 +100,6 @@ case class HawkesSample(event_id: Long, user_id: Long, tsu: Long,
   * batch twin).
   */
 case class HawkesEvent(event_id: Long, user_id: Long, excitation: Double)
-
-/** Hawkes fold state: ONE double per key (the decayed count). */
-case class HawkesState(a: Double)
 
 /** One routed ANN query probe entering the streaming vector search: the
   * query embedding + its L2 norm (computed once at ingest by the same
@@ -159,7 +137,10 @@ case class PhEvent(event_id: Long, user_id: Long, ph: Double, is_drift: Long)
   * encoder round-trip — plus the running min of the double-cast PH path.
   * O(1) per key (the strings grow with log10 of the sum, not with rows).
   */
-case class PhState(n: Long, sum6: String, phSum6: String, phMin: Double)
+case class PhState(n: Long, sum6: String, phSum6: String, phMin: Double) {
+  /** The double cast of the PH sum (the path value the alarm compares). */
+  def ph: Double = new java.math.BigDecimal(phSum6).doubleValue()
+}
 
 /** One pre-scored sample entering the streaming hysteresis alarm: `za`
   * is the batch entry's 4dp |z| — in production scored by a stream-static
@@ -171,9 +152,6 @@ case class ZaSample(event_id: Long, ts: Timestamp, user_id: Long, za: Double)
 
 /** Per-row hysteresis output (streaming twin of TimeSeriesOps.hysteresis). */
 case class HystEvent(event_id: Long, user_id: Long, za: Double, in_alert: Long)
-
-/** Hysteresis alarm state: ONE long per key (0 = clear, 1 = in alert). */
-case class HystState(in: Long)
 
 /** SPRT fold state: click count (= the batch idx), the DECIMAL(·,6)
   * running LLR (plain-string BigDecimal, the PhState convention), and
@@ -190,9 +168,6 @@ case class SprtOut(user_id: Long, n_obs: Long, llr: Double,
   */
 case class EwmaEvent(event_id: Long, user_id: Long, value: Double, ewma: Double)
 
-/** Recursive-EWMA numerator/denominator — TWO doubles of state per key. */
-case class EwmaState(num: Double, den: Double)
-
 /** A sample with its per-series control parameters (mean + slack),
   * entering the streaming CUSUM chart.
   */
@@ -202,14 +177,8 @@ case class ControlSample(event_id: Long, ts: Timestamp, user_id: Long,
 /** Per-row CUSUM output (streaming twin of TimeSeriesOps.cusumReset). */
 case class CusumEvent(event_id: Long, user_id: Long, cusum_hi: Double)
 
-/** One-sided upper CUSUM statistic — a single double of state per key. */
-case class CusumState(s: Double)
-
 /** Per-row admission decision (streaming twin of TimeSeriesOps.tokenBucket). */
 case class RateLimitEvent(event_id: Long, user_id: Long, tokens: Double, admitted: Long)
-
-/** Token-bucket state: balance + last-arrival micros — O(1)/key. */
-case class BucketState(tokens: Double, lastUs: Long)
 
 /** One closed alert episode (run of consecutive flagged events). */
 case class Episode(user_id: Long, n_events: Long, start_us: Long, end_us: Long)
@@ -274,13 +243,6 @@ object StreamingAnomaly {
     * and the sf1eq scaling decade with an order of magnitude to spare.
     */
   val ReplayCap: Int = 2000000
-
-  /** Epoch microseconds of a Timestamp — the batch operators' epochUs.
-    * Sorting on this (NOT getTime, which truncates to milliseconds) keeps
-    * sub-millisecond ties ordered exactly like the batch (ts, event_id)
-    * window sort.
-    */
-  private def us(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
   /** Watermarked tumbling-window event aggregation — the streaming twin of
     * the batch `ts_event_counts` query. Append-mode: a window row is
@@ -451,11 +413,14 @@ object StreamingAnomaly {
     p.toString
   }
 
-  /** Epoch micros of a timestamp — the fold ordering key, exposed so
-    * replay entries can derive their punctuation point from the already-
-    * collected feed instead of re-scanning the table for max(ts).
+  /** Epoch microseconds of a Timestamp — the batch operators' epochUs and
+    * the folds' ordering key. Sorting on this (NOT getTime, which
+    * truncates to milliseconds) keeps sub-millisecond ties ordered exactly
+    * like the batch (ts, event_id) window sort. Replay entries also derive
+    * their punctuation point from it on the already-collected feed instead
+    * of re-scanning the table for max(ts).
     */
-  def tsUs(t: Timestamp): Long = us(t)
+  def tsUs(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
   /** The far-future marker event used by watermark-bounded replays: its
     * own id/key, so its open window/session never reaches the output.
@@ -525,8 +490,8 @@ object StreamingAnomaly {
         (key: Long, it: Iterator[FlaggedEvent], state: GroupState[EpisodeState]) =>
           var open = state.getOption
           val out = scala.collection.mutable.ArrayBuffer[Episode]()
-          it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
-            val t = us(e.ts)
+          it.toIndexedSeq.sortBy(e => (tsUs(e.ts), e.event_id)).foreach { e =>
+            val t = tsUs(e.ts)
             if (e.flag == 1L) {
               // min/max span: a flagged event arriving LATE across
               // micro-batches joins the open episode without regressing
@@ -586,46 +551,40 @@ object StreamingAnomaly {
       }
       .start()
 
-  /** Stateful trailing-window z-score per series key: each event is scored
-    * against the mean/sample-stddev of the previous `win` values of its
-    * series (shift-1 semantics, exactly the batch `Anomaly.rollingZscore`).
-    *
-    * Events are ordered by event time within each micro-batch; late data
-    * across batches scores against the state as of arrival (documented
-    * streaming relaxation — exact event-time order would need
-    * watermark-buffered state).
+  /** The keyed per-row state-fold under the streaming twins: group `in`
+    * by `key`, sort each micro-batch's rows of a key by `order`, and run
+    * `step` over them from the key's stored state (null for a key not
+    * seen yet); `emit` reads each row's output off the new state. The
+    * state is saved after every batch that advanced it.
     */
-  /** Streaming 1-D Kalman filter (local-level model) — the streaming twin
-    * of `TimeSeriesOps.kalmanPath`, carrying TWO doubles of state per key
-    * (the whole point of Kalman over windowed smoothers: O(1) state, no
-    * buffer). Identical IEEE recurrence and (event-time, event_id)
-    * in-batch ordering, so a single-batch replay equals the batch fold
-    * bit-for-bit; late data across batches folds in arrival order (same
-    * documented relaxation as [[rollingZscore]]).
-    */
-  def kalman(events: Dataset[Event], q: Double, r: Double): Dataset[KalmanEvent] = {
-    import events.sparkSession.implicits._
-    require(q > 0 && r > 0, s"variances must be positive: q=$q r=$r")
-    events
-      .groupByKey(_.user_id)
+  private def keyedFold[K: Encoder, I, T: Ordering, S <: AnyRef : Encoder, O: Encoder](
+      in: Dataset[I])(key: I => K, order: I => T)(step: (S, I) => S)(
+      emit: (I, S) => O): Dataset[O] =
+    in.groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[Event], state: GroupState[KalmanState]) =>
-          var st = state.getOption.orNull
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            if (st == null) {
-              st = KalmanState(e.value, r)
-              KalmanEvent(e.event_id, e.user_id, e.value, 1.0)
-            } else {
-              val pp = st.p + q
-              val kk = pp / (pp + r)
-              val est = st.est + kk * (e.value - st.est)
-              st = KalmanState(est, (1.0 - kk) * pp)
-              KalmanEvent(e.event_id, e.user_id, est, kk)
-            }
-          }
+        (_: K, it: Iterator[I], state: GroupState[S]) =>
+          var st = state.getOption.getOrElse(null.asInstanceOf[S])
+          val out = it.toIndexedSeq.sortBy(order).map { e => st = step(st, e); emit(e, st) }
           if (st != null) state.update(st)
           out.iterator
       }
+
+  /** (event-time, event_id): the batch folds' in-series order. */
+  private def eventOrder(e: Event): (Long, Long) = (tsUs(e.ts), e.event_id)
+
+  /** Streaming 1-D Kalman filter (local-level model) — the streaming twin
+    * of `TimeSeriesOps.kalmanPath`, carrying O(1) state per key (the
+    * whole point of Kalman over windowed smoothers: no buffer). It runs
+    * the batch fold's own step (`TimeSeriesOps.kalmanStep`) in the same
+    * (event-time, event_id) in-batch order, so a single-batch replay
+    * equals the batch fold bit-for-bit; late data across batches folds in
+    * arrival order (same documented relaxation as [[rollingZscore]]).
+    */
+  def kalman(events: Dataset[Event], q: Double, r: Double): Dataset[KalmanEvent] = {
+    import events.sparkSession.implicits._
+    val step = TimeSeriesOps.kalmanStep(q, r)
+    keyedFold(events)(_.user_id, eventOrder)((st: KalmanState, e) => step(st, e.value))(
+      (e, st) => KalmanEvent(e.event_id, e.user_id, st.est, st.gain))
   }
 
   /** Streaming RECURSIVE EWMA — the streaming twin of
@@ -635,246 +594,115 @@ object StreamingAnomaly {
     * key, the canonical infinite-horizon smoother that a window
     * expression cannot carry. Nulls never reach this operator
     * (Event.value is primitive; the batch twin's null-aging branch
-    * lives upstream of any stream). Same in-batch (event-time,
-    * event_id) ordering contract as [[kalman]]: a single-batch replay
-    * equals the batch mapPartitions pass bit-for-bit — the identical
-    * (num·decay + x) float tree in the identical order.
+    * lives upstream of any stream). Same shared step and in-batch
+    * ordering contract as [[kalman]].
     */
   def ewmaRecursive(events: Dataset[Event], alpha: Double): Dataset[EwmaEvent] = {
     import events.sparkSession.implicits._
-    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
-    val decay = 1.0 - alpha
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[Event], state: GroupState[EwmaState]) =>
-          var num = state.getOption.map(_.num).getOrElse(0.0)
-          var den = state.getOption.map(_.den).getOrElse(0.0)
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            num = num * decay + e.value
-            den = den * decay + 1.0
-            EwmaEvent(e.event_id, e.user_id, e.value, num / den)
-          }
-          state.update(EwmaState(num, den))
-          out.iterator
-      }
+    val step = TimeSeriesOps.ewmaStep(alpha)
+    keyedFold(events)(_.user_id, eventOrder)((st: EwmaState, e) => step(st, Some(e.value)))(
+      (e, st) => EwmaEvent(e.event_id, e.user_id, e.value, st.num / st.den))
   }
 
   /** Streaming Holt linear-trend smoothing — the streaming twin of
     * `TimeSeriesOps.holtPath`, the forecasting fold a live monitoring
     * deployment actually runs: TWO doubles of state per key (level +
-    * trend), per-row smoothed state out. Identical IEEE recurrence
-    * (nl = α·x + (1−α)(l+b); b' = γ(nl−l) + (1−γ)b — each 1−· computed,
-    * never a pre-folded literal) and the same (event-time, event_id)
-    * in-batch ordering contract as [[kalman]], so a single-batch replay
-    * equals the batch keyed fold bit-for-bit and shares its recursive-CTE
-    * oracle verbatim. Nulls never reach this operator (Event.value is
+    * trend), per-row smoothed state out. Same shared step and in-batch
+    * ordering contract as [[kalman]], so a single-batch replay equals the
+    * batch keyed fold bit-for-bit and shares its recursive-CTE oracle
+    * verbatim. Nulls never reach this operator (Event.value is
     * primitive; the entry filters upstream, like [[ewmaRecursive]]).
     */
   def holt(events: Dataset[Event], alpha: Double, gamma: Double): Dataset[HoltEvent] = {
     import events.sparkSession.implicits._
-    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
-    require(gamma > 0 && gamma < 1, s"gamma=$gamma must be in (0, 1)")
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[Event], state: GroupState[HoltState]) =>
-          var st = state.getOption.orNull
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            if (st == null) st = HoltState(e.value, 0.0)
-            else {
-              val nl = alpha * e.value + (1.0 - alpha) * (st.level + st.trend)
-              val nt = gamma * (nl - st.level) + (1.0 - gamma) * st.trend
-              st = HoltState(nl, nt)
-            }
-            HoltEvent(e.event_id, e.user_id, st.level, st.trend)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+    val step = TimeSeriesOps.holtStep(alpha, gamma)
+    keyedFold(events)(_.user_id, eventOrder)((st: HoltState, e) => step(st, e.value))(
+      (e, st) => HoltEvent(e.event_id, e.user_id, st.level, st.trend))
   }
 
   /** Streaming GARCH(1,1) conditional variance — the streaming twin of
     * `TimeSeriesOps.garchPath` over pre-differenced returns: σ²' = ω +
     * α·r²_prev + β·σ², initialized at the unconditional level
-    * ω/(1−α−β). TWO doubles of state per key; identical IEEE op order
-    * (α·(r·r) with the explicit inner product, matching the batch fold
-    * and the oracle CTE) and the same in-batch (event-time, event_id)
-    * ordering contract as [[kalman]].
+    * ω/(1−α−β). TWO doubles of state per key; same shared step and
+    * in-batch (event-time, event_id) ordering contract as [[kalman]].
     */
   def garch(rets: Dataset[RetSample], omega: Double, alpha: Double,
             beta: Double): Dataset[GarchEvent] = {
     import rets.sparkSession.implicits._
-    require(omega > 0, s"omega=$omega must be positive")
-    require(alpha >= 0 && beta >= 0 && alpha + beta < 1,
-      s"need alpha,beta >= 0 and alpha+beta < 1: alpha=$alpha beta=$beta")
-    val uncond = omega / (1.0 - alpha - beta)
-    rets
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[RetSample], state: GroupState[GarchState]) =>
-          var st = state.getOption.orNull
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            st =
-              if (st == null) GarchState(uncond, e.ret)
-              else GarchState(
-                omega + alpha * (st.prevR * st.prevR) + beta * st.s2, e.ret)
-            GarchEvent(e.event_id, e.user_id, e.ret, st.s2)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+    val step = TimeSeriesOps.garchStep(omega, alpha, beta)
+    keyedFold(rets)(_.user_id, e => (tsUs(e.ts), e.event_id))(
+      (st: GarchState, e) => step(st, e.ret))(
+      (e, st) => GarchEvent(e.event_id, e.user_id, e.ret, st.s2))
   }
 
   /** Streaming additive Holt-Winters — the streaming twin of
     * `TimeSeriesOps.holtWinters` over a pre-bucketed seasonal grid
     * (daily means from an upstream windowed aggregation): level + trend
     * + an m-slot seasonal vector advanced one slot per observation,
-    * O(period) state per key. Identical recurrence, init (l = x₁, b = 0,
-    * s = 0⃗, fitted None on row 1), and slot indexing ((cnt−1) mod m) as
-    * the batch fold; in-batch ordering is by the bucket column (the
-    * series' event-time grain), so a single-batch replay equals the
-    * batch keyed fold bit-for-bit and shares its recursive-CTE oracle.
+    * O(period) state per key. The batch fold's step (init l = x₁, b = 0,
+    * s = 0⃗, fitted None on row 1, slot (cnt−1) mod m); in-batch
+    * ordering is by the bucket column (the series' event-time grain), so
+    * a single-batch replay equals the batch keyed fold bit-for-bit and
+    * shares its recursive-CTE oracle.
     */
   def holtWinters(days: Dataset[DaySample], period: Int, alpha: Double,
-                  beta: Double, gamma: Double): Dataset[HwEvent] = {
-    import days.sparkSession.implicits._
-    require(period >= 2, s"seasonal period must be >= 2, got $period")
-    val (omA, omB, omG) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
-    days
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[DaySample], state: GroupState[HwState]) =>
-          var st = state.getOption.getOrElse(
-            HwState(0.0, 0.0, Seq.fill(period)(0.0), 0L))
-          val season = st.season.toArray
-          var l = st.level; var b = st.trend; var cnt = st.cnt
-          val out = it.toIndexedSeq.sortBy(e => e.day).map { e =>
-            cnt += 1
-            val idx = ((cnt - 1) % period).toInt
-            if (cnt == 1L) {
-              l = e.m; b = 0.0
-              HwEvent(e.user_id, e.day, e.m, None, l, b, season(idx))
-            } else {
-              val sI = season(idx)
-              val fitted = l + b + sI
-              val lNew = alpha * (e.m - sI) + omA * (l + b)
-              b = beta * (lNew - l) + omB * b
-              l = lNew
-              season(idx) = gamma * (e.m - l) + omG * sI
-              HwEvent(e.user_id, e.day, e.m, Some(fitted), l, b, season(idx))
-            }
-          }
-          state.update(HwState(l, b, season.toSeq, cnt))
-          out.iterator
-      }
-  }
+                  beta: Double, gamma: Double): Dataset[HwEvent] =
+    hwFold(days, TimeSeriesOps.holtWintersStep(period, alpha, beta, gamma))
 
   /** Streaming MULTIPLICATIVE Holt-Winters — the streaming twin of
     * `TimeSeriesOps.holtWintersMult` over the same pre-bucketed daily
     * grid as [[holtWinters]]: seasonals start at 1, level updates on
-    * x/s, seasonal on x/l'. Identical recurrence, init and slot
-    * indexing as the batch fold (each 1−· computed, never pre-folded;
-    * `alpha * (x / s)` with the explicit inner quotient), so a
-    * single-batch replay equals the batch keyed fold bit-for-bit and
-    * shares its recursive-CTE oracle verbatim. O(period) state per key.
+    * x/s, seasonal on x/l'. The batch fold's step, so a single-batch
+    * replay equals the batch keyed fold bit-for-bit and shares its
+    * recursive-CTE oracle verbatim. O(period) state per key.
     */
   def holtWintersMult(days: Dataset[DaySample], period: Int, alpha: Double,
-                      beta: Double, gamma: Double): Dataset[HwEvent] = {
+                      beta: Double, gamma: Double): Dataset[HwEvent] =
+    hwFold(days, TimeSeriesOps.holtWintersMultStep(period, alpha, beta, gamma))
+
+  private def hwFold(days: Dataset[DaySample],
+                     step: (HwState, Double) => HwState): Dataset[HwEvent] = {
     import days.sparkSession.implicits._
-    require(period >= 2, s"seasonal period must be >= 2, got $period")
-    val (omA, omB, omG) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
-    days
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[DaySample], state: GroupState[HwState]) =>
-          var st = state.getOption.getOrElse(
-            HwState(0.0, 0.0, Seq.fill(period)(1.0), 0L))
-          val season = st.season.toArray
-          var l = st.level; var b = st.trend; var cnt = st.cnt
-          val out = it.toIndexedSeq.sortBy(e => e.day).map { e =>
-            cnt += 1
-            val idx = ((cnt - 1) % period).toInt
-            if (cnt == 1L) {
-              l = e.m; b = 0.0
-              HwEvent(e.user_id, e.day, e.m, None, l, b, season(idx))
-            } else {
-              val sI = season(idx)
-              val fitted = (l + b) * sI
-              val lNew = alpha * (e.m / sI) + omA * (l + b)
-              b = beta * (lNew - l) + omB * b
-              l = lNew
-              season(idx) = gamma * (e.m / lNew) + omG * sI
-              HwEvent(e.user_id, e.day, e.m, Some(fitted), l, b, season(idx))
-            }
-          }
-          state.update(HwState(l, b, season.toSeq, cnt))
-          out.iterator
-      }
+    keyedFold(days)(_.user_id, _.day)((st: HwState, e) => step(st, e.m))(
+      (e, st) => HwEvent(e.user_id, e.day, e.m, st.fitted, st.level, st.trend, st.seasonal))
   }
 
   /** Streaming Kleinberg burst automaton — the streaming twin of
     * `TimeSeriesOps.burstPath` over a pre-bucketed daily grid with the
     * two Poisson emission costs computed at ingest (the [[holtWinters]]
     * daily-grid precedent): c0' = min(c0, c1) + e0, c1' = min(c0 + γ,
-    * c1) + e1, burst iff c1 < c0. TWO doubles of state per key;
-    * identical IEEE op order and first-row init (c0 = e0, c1 = γ + e1)
-    * as the batch fold, null emissions passed through WITHOUT advancing
+    * c1) + e1, burst iff c1 < c0. TWO doubles of state per key; the
+    * batch fold's step, null emissions passed through WITHOUT advancing
     * state exactly like the batch scan — a single-batch replay equals
     * it bit-for-bit and shares its recursive-CTE oracle verbatim.
     */
   def burstViterbi(samples: Dataset[BurstSample],
                    gamma: Double): Dataset[BurstEvent] = {
     import samples.sparkSession.implicits._
-    require(gamma >= 0, s"gamma=$gamma must be nonnegative")
-    samples
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, it: Iterator[BurstSample], state: GroupState[BurstState]) =>
-          var st = state.getOption.orNull
-          val out = it.toIndexedSeq.sortBy(e => e.day).map { e =>
-            (e.e0, e.e1) match {
-              case (Some(e0), Some(e1)) =>
-                st =
-                  if (st == null) BurstState(e0, gamma + e1)
-                  else BurstState(
-                    math.min(st.c0, st.c1) + e0,
-                    math.min(st.c0 + gamma, st.c1) + e1)
-                BurstEvent(e.event_type, e.day, Some(st.c0), Some(st.c1),
-                  Some(if (st.c1 < st.c0) 1L else 0L))
-              case _ =>
-                BurstEvent(e.event_type, e.day, None, None, None)
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+    val step = TimeSeriesOps.burstStep(gamma)
+    keyedFold(samples)(_.event_type, _.day)((st: BurstState, e) =>
+      (e.e0, e.e1) match {
+        case (Some(e0), Some(e1)) => step(st, e0, e1)
+        case _                    => st
+      })((e, st) =>
+      if (e.e0.isEmpty || e.e1.isEmpty) BurstEvent(e.event_type, e.day, None, None, None)
+      else BurstEvent(e.event_type, e.day, Some(st.c0), Some(st.c1), Some(st.inBurst)))
   }
 
   /** Streaming Hawkes excitation — the streaming twin of
     * `TimeSeriesOps.hawkesPath`: A₁ = 0, Aₖ = dₖ·(Aₖ₋₁ + 1) with the
     * pre-quantized decay dₖ riding on each row (the transcendental
     * stays OUTSIDE the fold, as in the batch path). ONE double of
-    * state per key; a null decay advances nothing (the batch scan's
+    * state per key; a null decay advances nothing (the batch step's
     * first-row/no-Δt rule), in-batch ordering by (tsu, event_id) — a
     * single-batch replay equals the batch fold bit-for-bit and shares
     * its recursive-CTE oracle verbatim.
     */
   def hawkes(samples: Dataset[HawkesSample]): Dataset[HawkesEvent] = {
     import samples.sparkSession.implicits._
-    samples
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[HawkesSample], state: GroupState[HawkesState]) =>
-          var st = state.getOption.orNull
-          val out = it.toIndexedSeq.sortBy(e => (e.tsu, e.event_id)).map { e =>
-            if (st == null) st = HawkesState(0.0)
-            else e.decay.foreach(d => st = HawkesState(d * (st.a + 1.0)))
-            HawkesEvent(e.event_id, e.user_id, st.a)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+    keyedFold(samples)(_.user_id, e => (e.tsu, e.event_id))(
+      (st: HawkesState, e) => TimeSeriesOps.hawkesStep(st, e.decay))(
+      (e, st) => HawkesEvent(e.event_id, e.user_id, st.a))
   }
 
   /** Streaming SPC CUSUM with reset — the streaming twin of
@@ -882,58 +710,39 @@ object StreamingAnomaly {
     * ONE double of state per key. The per-series control parameters
     * (mean, slack) ride on each sample — in production they come from a
     * slowly-refreshed reference join upstream of this operator. Same
-    * in-batch (event-time, event_id) ordering contract as [[kalman]]:
-    * a single-batch replay equals the batch fold bit-for-bit.
+    * shared step and in-batch ordering contract as [[kalman]].
     */
   def cusumReset(samples: Dataset[ControlSample]): Dataset[CusumEvent] = {
     import samples.sparkSession.implicits._
-    samples
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[ControlSample], state: GroupState[CusumState]) =>
-          var s = state.getOption.map(_.s).getOrElse(0.0)
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            s = math.max(0.0, s + (e.value - e.target_mean - e.slack))
-            CusumEvent(e.event_id, e.user_id, s)
-          }
-          state.update(CusumState(s))
-          out.iterator
-      }
+    keyedFold(samples)(_.user_id, e => (tsUs(e.ts), e.event_id))(
+      (st: CusumState, e) => TimeSeriesOps.cusumStep(st, e.value, e.target_mean, e.slack))(
+      (e, st) => CusumEvent(e.event_id, e.user_id, st.s))
   }
 
   /** Streaming token-bucket rate limiter — the continuous face of
     * `TimeSeriesOps.tokenBucket`: refill min(cap, tokens + rate·Δt),
     * admit iff >= 1 (consuming one); the bucket starts FULL at a key's
-    * first-ever event. TWO scalars of state per key. The arithmetic is
-    * the IDENTICAL IEEE sequence to the batch fold, so a single-batch
-    * replay reproduces it with exact double equality (like kalman /
-    * cusumReset).
+    * first-ever event. O(1) state per key. The batch fold's step (and
+    * its capacity check), so a single-batch replay reproduces it with
+    * exact double equality (like kalman / cusumReset).
     */
   def tokenBucket(events: Dataset[Event], capacity: Double,
                   refillPerSec: Double): Dataset[RateLimitEvent] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[Event], state: GroupState[BucketState]) =>
-          var (tokens, lastUs, seen) = state.getOption
-            .map(s => (s.tokens, s.lastUs, true)).getOrElse((0.0, 0L, false))
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            val t = us(e.ts)
-            if (!seen) { tokens = capacity; seen = true }
-            else {
-              tokens = math.min(capacity,
-                tokens + refillPerSec * ((t - lastUs).toDouble / 1000000.0))
-            }
-            lastUs = t
-            val admitted = if (tokens >= 1.0) { tokens -= 1.0; 1L } else 0L
-            RateLimitEvent(e.event_id, e.user_id, tokens, admitted)
-          }
-          state.update(BucketState(tokens, lastUs))
-          out.iterator
-      }
+    val step = TimeSeriesOps.tokenBucketStep(capacity, refillPerSec)
+    keyedFold(events)(_.user_id, eventOrder)((st: BucketState, e) => step(st, tsUs(e.ts)))(
+      (e, st) => RateLimitEvent(e.event_id, e.user_id, st.tokens, st.admitted))
   }
 
+  /** Stateful trailing-window z-score per series key: each event is scored
+    * against the mean/sample-stddev of the previous `win` values of its
+    * series (shift-1 semantics, exactly the batch `Anomaly.rollingZscore`).
+    *
+    * Events are ordered by event time within each micro-batch; late data
+    * across batches scores against the state as of arrival (documented
+    * streaming relaxation — exact event-time order would need
+    * watermark-buffered state).
+    */
   def rollingZscore(events: Dataset[Event],
                     win: Int = GraftConfig.SequenceLength,
                     threshold: Double = GraftConfig.AnomalyThreshold): Dataset[ScoredEvent] = {
@@ -946,7 +755,7 @@ object StreamingAnomaly {
           buf ++= state.getOption.map(_.recent).getOrElse(Seq.empty)
           // (ts-in-microseconds, event_id) order — the batch operators'
           // tie-break, so a single-batch replay scores identically.
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
+          val out = it.toIndexedSeq.sortBy(e => (tsUs(e.ts), e.event_id)).map { e =>
             val n = buf.length
             // Raw moments through the same DECIMAL(18,6) quantization as
             // the batch exactSum (CleanFunctions.dec6): the trailing-buffer
@@ -1002,7 +811,7 @@ object StreamingAnomaly {
       .as[(String, Long, Double, Timestamp, Long)]
     emitOnceFold[String, (String, Long, Double, Timestamp, Long),
                  Seq[(Long, Long, Double)], QskEstimate](
-      withH.groupByKey(_._1), r => us(r._4))(
+      withH.groupByKey(_._1), r => tsUs(r._4))(
       // NO dedup across state ++ incoming: delivery inside a
       // checkpointed query is exactly-once per row, so repeats are
       // GENUINE duplicate rows — the batch twin's row_number sample
@@ -1063,7 +872,7 @@ object StreamingAnomaly {
     // merged by max: parallelism is types x m instead of types, and the
     // state store never holds a whole register array in one entry.
     emitOnceFold[(String, Long), (String, Timestamp, Long, Long), Long, HllRegister](
-      prepped.groupByKey(r => (r._1, r._3)), r => us(r._2))(
+      prepped.groupByKey(r => (r._1, r._3)), r => tsUs(r._2))(
       (prev, incoming) =>
         incoming.foldLeft(prev.getOrElse(Long.MinValue))((m, r) => math.max(m, r._4)))(
       (key, r) => Iterator.single(HllRegister(key._1, key._2, r)))
@@ -1088,7 +897,7 @@ object StreamingAnomaly {
     // That d x w is a CONSTANT is the point of the sketch; at volume the
     // per-cell adds are the only cross-partition traffic.
     emitOnceFold[(Int, Long), (Int, Long, Timestamp), Long, CmsCounter](
-      cells.groupByKey(r => (r._1, r._2)), r => us(r._3))(
+      cells.groupByKey(r => (r._1, r._2)), r => tsUs(r._3))(
       (prev, incoming) => prev.getOrElse(0L) + incoming.size)(
       (key, cnt) => Iterator.single(CmsCounter(key._1, key._2, cnt)))
   }
@@ -1114,7 +923,7 @@ object StreamingAnomaly {
           concat(lit("kmv:"), col("user_id"))).as("h"))
       .as[(String, Timestamp, Long)]
     emitOnceFold[String, (String, Timestamp, Long), Seq[Long], KmvHash](
-      prepped.groupByKey(_._1), r => us(r._2))(
+      prepped.groupByKey(_._1), r => tsUs(r._2))(
       (prev, incoming) =>
         (prev.getOrElse(Nil) ++ incoming.map(_._3)).distinct.sorted.take(k))(
       (key, hs) => hs.iterator.map(h => KmvHash(key, h)))
@@ -1143,7 +952,7 @@ object StreamingAnomaly {
           .otherwise(lit(0L)).as("b"))
       .as[(String, Timestamp, Long)]
     emitOnceFold[(String, Long), (String, Timestamp, Long), Long, DdBucket](
-      prepped.groupByKey(r => (r._1, r._3)), r => us(r._2))(
+      prepped.groupByKey(r => (r._1, r._3)), r => tsUs(r._2))(
       (prev, incoming) => prev.getOrElse(0L) + incoming.size)(
       (key, cnt) => Iterator.single(DdBucket(key._1, key._2, cnt)))
   }
@@ -1163,7 +972,7 @@ object StreamingAnomaly {
     import orders.sparkSession.implicits._
     val prepped = orders.withWatermark("ts", watermarkDelay).as[OrderRow]
     emitOnceFold[Long, OrderRow, Seq[(Double, Long)], TopOrder](
-      prepped.groupByKey(_.o_custkey), r => us(r.ts))(
+      prepped.groupByKey(_.o_custkey), r => tsUs(r.ts))(
       // (-price, id) ordering = score desc with id-asc ties, the batch
       // aggregate's comparator (prices are positive decimals, so the
       // negation's -0.0 corner never arises).
@@ -1190,22 +999,12 @@ object StreamingAnomaly {
   def croston(demands: Dataset[DemandSample], alpha: Double,
               watermarkDelay: String = "1 hour"): Dataset[CrostonOut] = {
     import demands.sparkSession.implicits._
-    require(alpha > 0 && alpha < 1, s"alpha=$alpha must be in (0, 1)")
+    val step = TimeSeriesOps.crostonStep(alpha)
     val prepped = demands.withWatermark("ts", watermarkDelay).as[DemandSample]
     emitOnceFold[Long, DemandSample, CrostonState, CrostonOut](
-      prepped.groupByKey(_.user_id), r => us(r.ts))(
-      (prev, incoming) => {
-        var st = prev.orNull
-        incoming.sortBy(_.bucket).foreach { r =>
-          st =
-            if (st == null) CrostonState(r.q, 1.0, r.bucket, 1L)
-            else CrostonState(
-              alpha * r.q + (1.0 - alpha) * st.z,
-              alpha * (r.bucket - st.prevB).toDouble + (1.0 - alpha) * st.p,
-              r.bucket, st.n + 1L)
-        }
-        st
-      })(
+      prepped.groupByKey(_.user_id), r => tsUs(r.ts))(
+      (prev, incoming) =>
+        incoming.sortBy(_.bucket).foldLeft(prev.orNull)((st, r) => step(st, r.bucket, r.q)))(
       (key, st) => Iterator.single(CrostonOut(key, st.n, st.z, st.p)))
   }
 
@@ -1232,30 +1031,23 @@ object StreamingAnomaly {
     import events.sparkSession.implicits._
     import graft.functions.CleanFunctions.{dec6, round6Jvm}
     require(lambda > 0, s"lambda=$lambda must be positive")
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[Event], state: GroupState[PhState]) =>
-          var st = state.getOption.orNull
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            val sum = (if (st == null) java.math.BigDecimal.ZERO
-                       else new java.math.BigDecimal(st.sum6)).add(dec6(e.value))
-            val n = (if (st == null) 0L else st.n) + 1L
-            // exactMeanOver: CAST(decimal sum AS DOUBLE) / count.
-            val rmean = sum.doubleValue() / n.toDouble
-            val term = round6Jvm(e.value - rmean - delta)
-            val phSum = (if (st == null) java.math.BigDecimal.ZERO
-                         else new java.math.BigDecimal(st.phSum6)).add(dec6(term))
-            val ph = phSum.doubleValue()
-            // min() over the UNBOUNDED..CURRENT frame includes this row.
-            val phMin = if (st == null) ph else math.min(st.phMin, ph)
-            st = PhState(n, sum.toPlainString, phSum.toPlainString, phMin)
-            PhEvent(e.event_id, e.user_id, ph,
-              if (ph - phMin > lambda) 1L else 0L)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+    keyedFold(events)(_.user_id, eventOrder)((st: PhState, e) => {
+      val sum = (if (st == null) java.math.BigDecimal.ZERO
+                 else new java.math.BigDecimal(st.sum6)).add(dec6(e.value))
+      val n = (if (st == null) 0L else st.n) + 1L
+      // exactMeanOver: CAST(decimal sum AS DOUBLE) / count.
+      val rmean = sum.doubleValue() / n.toDouble
+      val term = round6Jvm(e.value - rmean - delta)
+      val phSum = (if (st == null) java.math.BigDecimal.ZERO
+                   else new java.math.BigDecimal(st.phSum6)).add(dec6(term))
+      val ph = phSum.doubleValue()
+      // min() over the UNBOUNDED..CURRENT frame includes this row.
+      PhState(n, sum.toPlainString, phSum.toPlainString,
+        if (st == null) ph else math.min(st.phMin, ph))
+    })((e, st) => {
+      val ph = st.ph
+      PhEvent(e.event_id, e.user_id, ph, if (ph - st.phMin > lambda) 1L else 0L)
+    })
   }
 
   /** Streaming drawdown from the running high — the streaming twin of
@@ -1267,19 +1059,9 @@ object StreamingAnomaly {
     */
   def drawdown(events: Dataset[Event]): Dataset[DdEvent] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[Event], state: GroupState[DdState]) =>
-          var st = state.getOption.orNull
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            st = if (st == null) DdState(e.value)
-                 else DdState(math.max(st.runMax, e.value))
-            DdEvent(e.event_id, e.user_id, e.value, st.runMax)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+    keyedFold(events)(_.user_id, eventOrder)((st: DdState, e) =>
+      DdState(if (st == null) e.value else math.max(st.runMax, e.value)))(
+      (e, st) => DdEvent(e.event_id, e.user_id, e.value, st.runMax))
   }
 
   /** Streaming two-threshold hysteresis alarm — the streaming twin of
@@ -1294,20 +1076,9 @@ object StreamingAnomaly {
   def hysteresis(samples: Dataset[ZaSample], lo: Double,
                  hi: Double): Dataset[HystEvent] = {
     import samples.sparkSession.implicits._
-    require(lo <= hi, s"hysteresis needs lo <= hi, got $lo > $hi")
-    samples
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[ZaSample], state: GroupState[HystState]) =>
-          var in = state.getOption.map(_.in).getOrElse(0L)
-          val out = it.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-            in = if (in == 0L) { if (e.za > hi) 1L else 0L }
-                 else { if (e.za < lo) 0L else 1L }
-            HystEvent(e.event_id, e.user_id, e.za, in)
-          }
-          state.update(HystState(in))
-          out.iterator
-      }
+    val step = TimeSeriesOps.hysteresisStep(lo, hi)
+    keyedFold(samples)(_.user_id, e => (tsUs(e.ts), e.event_id))(
+      (st: HystState, e) => step(st, e.za))((e, st) => HystEvent(e.event_id, e.user_id, e.za, st.in))
   }
 
   /** Streaming ANN top-k — the retrieval half of a live vector-search
@@ -1328,7 +1099,7 @@ object StreamingAnomaly {
     import cands.sparkSession.implicits._
     require(k > 0, s"k=$k must be positive")
     emitOnceFold[Long, AnnCand, Seq[(Double, Long)], AnnHit](
-      cands.groupByKey(_.q_id), r => us(r.ts))(
+      cands.groupByKey(_.q_id), r => tsUs(r.ts))(
       (prev, incoming) =>
         (prev.getOrElse(Nil) ++ incoming.map(r => (r.score, r.n_id)))
           .sortBy(t => (-t._1, t._2)).take(k))(
@@ -1358,10 +1129,10 @@ object StreamingAnomaly {
     require(lower < upper, s"need lower < upper, got $lower >= $upper")
     val prepped = clicks.withWatermark("ts", watermarkDelay).as[Event]
     emitOnceFold[Long, Event, SprtState, SprtOut](
-      prepped.groupByKey(_.user_id), r => us(r.ts))(
+      prepped.groupByKey(_.user_id), r => tsUs(r.ts))(
       (prev, incoming) => {
         var st = prev.getOrElse(SprtState(0L, "0", None, None))
-        incoming.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
+        incoming.sortBy(e => (tsUs(e.ts), e.event_id)).foreach { e =>
           val term = round6Jvm(
             ((mu1 - mu0) * e.value - (mu1 * mu1 - mu0 * mu0) / 2.0) / sig2)
           val sum = new java.math.BigDecimal(st.llr6).add(dec6(term))

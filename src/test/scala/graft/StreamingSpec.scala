@@ -1021,6 +1021,61 @@ class StreamingSpec extends AnyFunSuite {
       StreamingAnomaly.hawkes(ds).toDF())
   }
 
+  // The first-generation twins share their batch folds' update steps too;
+  // these cross a micro-batch boundary with the state they carry.
+
+  test("streaming Kalman posterior survives the batch boundary") {
+    assertSplitEqualsSingle(realEvents.toSeq, "kalman_resume")(ds =>
+      StreamingAnomaly.kalman(ds, q = 4.0, r = 25.0).toDF())
+  }
+
+  test("streaming recursive EWMA numerator/denominator survive the batch boundary") {
+    assertSplitEqualsSingle(realEvents.toSeq, "ewma_resume")(ds =>
+      StreamingAnomaly.ewmaRecursive(ds, alpha = 0.3).toDF())
+  }
+
+  test("streaming GARCH variance and previous return survive the batch boundary") {
+    import graft.streaming.RetSample
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val feed = Tables.events(spark, SparkTestSession.sfDir)
+      .withColumn("ret", col("value") - lag(col("value"), 1).over(w))
+      .where(col("ret").isNotNull)
+      .select(col("event_id"), col("ts"), col("user_id"), col("ret").cast("double").as("ret"))
+      .as[RetSample].collect().sortBy(e => (e.ts.getTime, e.event_id)).toSeq
+    assertSplitEqualsSingle(feed, "garch_resume")(ds =>
+      StreamingAnomaly.garch(ds, omega = 200.0, alpha = 0.10, beta = 0.85).toDF())
+  }
+
+  test("streaming token bucket balance survives the batch boundary") {
+    assertSplitEqualsSingle(realEvents.toSeq, "tb_resume")(ds =>
+      StreamingAnomaly.tokenBucket(ds, capacity = 3.0, refillPerSec = 1.0 / 3600.0).toDF())
+  }
+
+  test("streaming CUSUM statistic survives the batch boundary") {
+    import graft.functions.CleanFunctions
+    val e = Tables.events(spark, SparkTestSession.sfDir).where(col("value").isNotNull)
+    val stats = e.groupBy("user_id").agg(
+      CleanFunctions.exactSum(col("value")).as("sx"),
+      CleanFunctions.exactSum(col("value") * col("value")).as("sxx"),
+      count(col("value")).cast("double").as("n"))
+    val feed = e.join(stats, "user_id")
+      .select(col("event_id"), col("ts"), col("user_id"), col("value"),
+        (col("sx") / col("n")).as("target_mean"),
+        (lit(0.5) * CleanFunctions.momentStd(col("n"), col("sx"), col("sxx"))).as("slack"))
+      .as[ControlSample].collect().sortBy(s => (s.ts.getTime, s.event_id)).toSeq
+    assertSplitEqualsSingle(feed, "cusum_resume")(ds =>
+      StreamingAnomaly.cusumReset(ds).toDF())
+  }
+
+  test("streaming token bucket rejects a capacity below one, like its batch fold") {
+    val ms = MemoryStream[Event](spark)
+    val e = intercept[IllegalArgumentException] {
+      StreamingAnomaly.tokenBucket(ms.toDS(), capacity = 0.5, refillPerSec = 1.0)
+    }
+    assert(e.getMessage.contains("capacity must admit at least one event"))
+  }
+
   test("streaming_ann_topk replay batch is fenced: bounded by the id cap, no-op at test scale") {
     import org.apache.spark.sql.functions.col
     val cap = graft.queries.SimilarityQueries.AnnStreamQueryIdCap
