@@ -89,10 +89,10 @@ object Pipeline {
         PcaReconstruction.detect(scaled, cfg.seriesKeys, cfg.order,
           s"${cfg.target}_scaled", cfg.seqLen, cfg.pcaComponents, cfg.flagFactor)
       case "mlp" =>
-        operators.MlpAutoencoder.detectMulti(scaled, cfg.seriesKeys, cfg.order,
+        operators.MlpAutoencoder.detect(scaled, cfg.seriesKeys, cfg.order,
           scaledCols, cfg.seqLen, cfg.mlpHidden, flagFactor = cfg.flagFactor)
       case "lstm" =>
-        operators.LstmAutoencoder.detectMulti(scaled, cfg.seriesKeys, cfg.order,
+        operators.LstmAutoencoder.detect(scaled, cfg.seriesKeys, cfg.order,
           scaledCols, cfg.seqLen, cfg.lstmHidden, cfg.lstmBottleneck,
           flagFactor = cfg.flagFactor)
     }

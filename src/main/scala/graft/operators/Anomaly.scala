@@ -26,7 +26,7 @@ object Anomaly {
   /** Global per-series z-score; |z| > threshold flags (ref config.py:23). */
   def zscore(df: DataFrame, keys: Seq[String], target: String,
              threshold: Double = GraftConfig.AnomalyThreshold): DataFrame = {
-    val w  = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+    val w  = Window.partitionBy(keys.map(col): _*)
     val z  = safeDiv(col(target) - avg(col(target)).over(w), stddev_samp(col(target)).over(w))
     df.withColumn("z", z)
       .withColumn("is_anomaly", (abs(col("z")) > threshold).cast("long"))
@@ -141,7 +141,7 @@ object Anomaly {
     val base   = TimeSeriesOps.seriesWindow(keys, order)
     val before = base.rowsBetween(-win, -1)
     val after  = base.rowsBetween(0, win - 1)
-    val keyW   = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+    val keyW   = Window.partitionBy(keys.map(col): _*)
     import graft.functions.CleanFunctions.exactMeanOver
     df.withColumn("cp_score", safeDiv(
         abs(exactMeanOver(col(target), after) - exactMeanOver(col(target), before)),
@@ -181,7 +181,7 @@ object Anomaly {
                           target: String, win: Int = GraftConfig.SequenceLength,
                           flagFactor: Double = 4.0): DataFrame = {
     val scored = reconstructionScores(df, keys, order, target, win)
-    val keyW   = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+    val keyW   = Window.partitionBy(keys.map(col): _*)
     scored
       .withColumn("is_anomaly",
         (col("seq_err") > lit(flagFactor) *
@@ -198,7 +198,7 @@ object Anomaly {
                                   target: String, win: Int = GraftConfig.SequenceLength,
                                   q: Double = 0.95): DataFrame = {
     val scored = reconstructionScores(df, keys, order, target, win)
-    val keyW   = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+    val keyW   = Window.partitionBy(keys.map(col): _*)
     scored
       .withColumn("thr", expr(s"percentile(seq_err, $q)").over(keyW))
       .withColumn("is_anomaly", (col("seq_err") > col("thr")).cast("long"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -19,9 +21,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * Parameters travel as one flat Array[Double] so averaging is layout-blind;
   * each model object owns its own offsets/packing.
   *
-  * [[detectOnSequences]] is the shared center -> train -> score -> flag
-  * shell around a window column: only the D-element mean vector and the
-  * model parameters ever touch the driver.
+  * [[detect]] is the shared window -> center -> train -> score -> flag
+  * shell: only the D-element mean vector and the model parameters ever
+  * touch the driver.
   */
 private[operators] object DistributedSgd {
 
@@ -152,8 +154,9 @@ private[operators] object DistributedSgd {
     }
   }
 
-  /** Shared center + train + score + flag over a D-dimensional window
-    * column `seqCol`.
+  /** Shared window + center + train + score + flag: the model windows of
+    * `featureCols` ([[TimeSeriesOps.featureWindows]], D = seqLen * F
+    * doubles each), then the fit and the flags.
     *
     * `fitOnCentered` receives the repartitioned/sorted training frame
     * (single column "xc") and returns the flat trained parameters;
@@ -167,20 +170,17 @@ private[operators] object DistributedSgd {
     * MLP path keeps center-only (scale already cancels through its linear
     * first layer, and skipping the variance keeps the moment pass lighter).
     */
-  def detectOnSequences(seqs: DataFrame, seqCol: String,
-                        keys: Seq[String], order: Seq[String], dim: Int,
-                        flagFactor: Double, trainPartitions: Int,
-                        fitOnCentered: DataFrame => Array[Double],
-                        scorer: Array[Double] => (Array[Double] => Double),
-                        standardize: Boolean = false)
+  def detect(df: DataFrame, keys: Seq[String], order: Seq[String],
+             featureCols: Seq[String], seqLen: Int,
+             flagFactor: Double, trainPartitions: Int,
+             fitOnCentered: DataFrame => Array[Double],
+             scorer: Array[Double] => (Array[Double] => Double),
+             standardize: Boolean = false)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.CleanFunctions
-    val spark = seqs.sparkSession
-    // Full windows only — a partial window (possible if upstream data
-    // slipped nulls past the pre-filters) would misalign every dimension
-    // past the gap and score plausibly instead of failing.
-    //
+    val spark = df.sparkSession
+    val dim = seqLen * featureCols.length
     // localCheckpoint, NOT cache(): the moment passes, the training pass and
     // the caller's eventual scoring materialization all read this frame, but
     // a CacheManager entry pinned inside the API would leak executor memory
@@ -201,9 +201,9 @@ private[operators] object DistributedSgd {
     // and no downstream result depends on partitioning: moments are exact
     // BigDecimal sums, training re-repartitions by content below, scoring
     // is per-row, flagging is a per-key window.
-    val spreadCols = (keys ++ order).map(col)
-    val full = seqs.filter(size(col(seqCol)) === dim)
-      .repartition(spark.sessionState.conf.numShufflePartitions, spreadCols: _*)
+    val ordCols = (keys ++ order).map(col)
+    val full = TimeSeriesOps.featureWindows(df, keys, order, featureCols, seqLen)
+      .repartition(spark.sessionState.conf.numShufflePartitions, ordCols: _*)
       .localCheckpoint()
     // Per-dimension mean (and, for standardize, population variance) in ONE
     // pass of EXACT BigDecimal arithmetic. Every double is exactly
@@ -221,15 +221,14 @@ private[operators] object DistributedSgd {
     // DECIMAL128 rounding happens once, at the final division.
     import java.math.{BigDecimal => JBD, MathContext}
     val doStd = standardize
-    val dimN = dim
-    val moments = full.select(col(seqCol)).rdd.mapPartitions { rows =>
-      val sx = Array.fill(dimN)(JBD.ZERO)
-      val sxx = Array.fill(dimN)(JBD.ZERO)
+    val moments = full.select(col("seq")).rdd.mapPartitions { rows =>
+      val sx = Array.fill(dim)(JBD.ZERO)
+      val sxx = Array.fill(dim)(JBD.ZERO)
       var n = 0L
       rows.foreach { r =>
         val a = r.getSeq[Double](0)
         var i = 0
-        while (i < dimN) {
+        while (i < dim) {
           val bd = new JBD(a(i))
           sx(i) = sx(i).add(bd)
           if (doStd) sxx(i) = sxx(i).add(bd.multiply(bd))
@@ -240,7 +239,7 @@ private[operators] object DistributedSgd {
       if (n == 0) Iterator.empty else Iterator.single((n, sx, sxx))
     }.collect()
     require(moments.nonEmpty,
-      "autoencoder detect: no complete windows to train on (all inputs null or shorter than seqLen)")
+      "autoencoder detect: no complete windows to train on (all inputs null, NaN or series shorter than seqLen)")
     val nWin = moments.map(_._1).sum
     val sxTot = Array.tabulate(dim)(i =>
       moments.map(_._2(i)).reduce(_.add(_)))
@@ -261,7 +260,7 @@ private[operators] object DistributedSgd {
     val centered = full
       .withColumn("xc",
         zip_with(
-          zip_with(col(seqCol), lit(meanArr), (x, m) => x - m),
+          zip_with(col("seq"), lit(meanArr), (x, m) => x - m),
           lit(invSdArr), (xm, is) => xm * is))
 
     // Scatter by the full (keys, order) tuple, not keys alone: every window
@@ -270,29 +269,36 @@ private[operators] object DistributedSgd {
     // training wall-time is the largest partition). Still deterministic:
     // partition assignment is a pure hash of row content, and the
     // sortWithinPartitions fixes the visit order inside each partition.
-    val ordCols = (keys ++ order).map(col)
     val train = centered
       .repartition(trainPartitions, ordCols: _*)
       .sortWithinPartitions(ordCols: _*)
       .select(col("xc"))
     val params = fitOnCentered(train)
 
-    val bc = spark.sparkContext.broadcast(params)
-    val schema = StructType(centered.schema.fields :+ StructField("recon_err", DoubleType))
-    val xcIdx = centered.schema.fieldIndex("xc")
-    val scored = spark.createDataFrame(
-      centered.rdd.mapPartitions { rows =>
-        val err = scorer(bc.value)
-        rows.map { r =>
-          Row.fromSeq(r.toSeq :+ err(r.getSeq[Double](xcIdx).toArray))
-        }
-      }, schema)
-    val keyW = if (keys.isEmpty) Window.partitionBy()
-               else Window.partitionBy(keys.map(col): _*)
-    scored
+    val keyW = Window.partitionBy(keys.map(col): _*)
+    withReconErr(centered, "xc", params)(scorer)
       .withColumn("is_anomaly",
         (col("recon_err") > lit(flagFactor) *
           CleanFunctions.exactMeanOver(col("recon_err"), keyW)).cast(LongType))
-      .drop(seqCol, "xc")
+      .drop("seq", "xc")
+  }
+
+  /** `seqs` with a `recon_err` column appended: `scorer(params)(window)`
+    * of each row's `seqCol` window. `params` is broadcast once and
+    * `scorer` runs once per partition, so it can allocate scratch there.
+    * One map pass, no shuffle; the detectors' scoring and the
+    * `scoreWith` inference fences share it.
+    */
+  private[operators] def withReconErr[P: ClassTag](seqs: DataFrame, seqCol: String, params: P)(
+      scorer: P => (Array[Double] => Double)): DataFrame = {
+    val spark = seqs.sparkSession
+    val bc = spark.sparkContext.broadcast(params)
+    val idx = seqs.schema.fieldIndex(seqCol)
+    val schema = StructType(seqs.schema.fields :+ StructField("recon_err", DoubleType))
+    spark.createDataFrame(
+      seqs.rdd.mapPartitions { rows =>
+        val err = scorer(bc.value)
+        rows.map(r => Row.fromSeq(r.toSeq :+ err(r.getSeq[Double](idx).toArray)))
+      }, schema)
   }
 }

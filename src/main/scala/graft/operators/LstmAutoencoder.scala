@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.GraftConfig
 
@@ -626,22 +624,13 @@ object LstmAutoencoder {
                 d: LstmDims,
                 tanhAct: Double => Double = null,
                 sigAct: Double => Double = null): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     require(p.length == d.total,
       s"scoreWith: ${p.length} params, layout needs ${d.total}")
-    val spark = seqs.sparkSession
-    val bc = spark.sparkContext.broadcast(p)
-    val idx = seqs.schema.fieldIndex(seqCol)
-    val schema = StructType(seqs.schema.fields :+
-      StructField("recon_err", DoubleType))
-    spark.createDataFrame(
-      seqs.rdd.map { r =>
-        val x = r.getSeq[Double](idx).toArray
-        require(x.length == d.l * d.f,
-          s"scoreWith: window of ${x.length} values, need ${d.l * d.f}")
-        Row.fromSeq(r.toSeq :+ reconErrorWith(bc.value, x, d, tanhAct, sigAct))
-      }, schema)
+    DistributedSgd.withReconErr(seqs, seqCol, p)(p => { x =>
+      require(x.length == d.l * d.f,
+        s"scoreWith: window of ${x.length} values, need ${d.l * d.f}")
+      reconErrorWith(p, x, d, tanhAct, sigAct)
+    })
   }
 
   /** Train on the `seqCol` windows (array<double>, length d.l * d.f) via
@@ -705,10 +694,13 @@ object LstmAutoencoder {
     })
   }
 
-  /** Univariate detector — same surface and flagging contract as
-    * [[MlpAutoencoder.detect]]; see [[MlpAutoencoder.detect]] for the
-    * trainPartitions determinism<->parallelism trade, which applies here
-    * unchanged. `nLayers` selects the stack depth (reference
+  /** Detector over the reference's literal (L, F) input (main.py:183-195:
+    * LSTM input_dim = F): each step consumes that row's F-vector; windows
+    * are flattened time-major so step t reads x[t*F..(t+1)*F) (see
+    * [[TimeSeriesOps.featureWindows]]; one column is the univariate case).
+    * Same surface and flagging contract as [[MlpAutoencoder.detect]]; see
+    * there for the trainPartitions determinism<->parallelism trade, which
+    * applies here unchanged. `nLayers` selects the stack depth (reference
     * config.py:29 sets 2; the default here stays 1 — the single-layer
     * model converges to the same flags on this workload at half the
     * BPTT cost, and the stacked path is spec-covered).
@@ -718,62 +710,17 @@ object LstmAutoencoder {
     * normal-window error too high for the 4x-mean flag), and lr >= 0.15
     * oscillates where 0.1 converges monotonically at 6/8/10 epochs.
     */
-  def detect(df: DataFrame, keys: Seq[String], order: Seq[String], target: String,
+  def detect(df: DataFrame, keys: Seq[String], order: Seq[String],
+             featureCols: Seq[String],
              seqLen: Int = GraftConfig.SequenceLength, hidden: Int = 8,
              bottleneck: Int = 4, epochs: Int = 8, lr: Double = 0.1,
              seed: Long = 42L, flagFactor: Double = 4.0,
              trainPartitions: Int = 8, nLayers: Int = 1,
              optimizer: String = "sgd", dropout: Double = 0.0,
              referenceDecoder: Boolean = false): DataFrame = {
-    // Null targets dropped BEFORE windowing (collect_list silently skips
-    // nulls, which would misalign windows); fill first to impute instead.
-    val seqs = TimeSeriesOps.sequences(
-        df.filter(col(target).isNotNull)
-          .withColumn("__t", col(target).cast(DoubleType)),
-        keys, order, "__t", seqLen, "seq")
-      .drop("__t")
-    runDetect(seqs,
-      LstmDims(1, seqLen, hidden, bottleneck, nLayers, referenceDecoder),
-      keys, order, epochs, lr, seed, flagFactor, trainPartitions, optimizer,
-      dropout)
-  }
-
-  /** Multivariate detector over the reference's literal (L, F) input
-    * (main.py:183-195: LSTM input_dim = F): each step consumes that row's
-    * F-vector; windows are flattened time-major so step t reads
-    * x[t*F..(t+1)*F).
-    */
-  def detectMulti(df: DataFrame, keys: Seq[String], order: Seq[String],
-                  featureCols: Seq[String],
-                  seqLen: Int = GraftConfig.SequenceLength, hidden: Int = 8,
-                  bottleneck: Int = 4, epochs: Int = 8, lr: Double = 0.1,
-                  seed: Long = 42L, flagFactor: Double = 4.0,
-                  trainPartitions: Int = 8, nLayers: Int = 1,
-                  optimizer: String = "sgd", dropout: Double = 0.0,
-                  referenceDecoder: Boolean = false): DataFrame = {
-    require(featureCols.nonEmpty, "detectMulti needs at least one feature column")
-    // Rows with any null feature dropped before windowing (a null element
-    // would unbox to a silent 0.0); callers wanting imputation fill first.
-    val vec = array(featureCols.map(c => col(c).cast(DoubleType)): _*)
-    val seqs = TimeSeriesOps.sequences(
-        df.na.drop(featureCols).withColumn("__fv", vec),
-        keys, order, "__fv", seqLen, "seqv")
-      .drop("__fv")
-      .withColumn("seq", flatten(col("seqv")))
-      .drop("seqv")
-    runDetect(seqs,
-      LstmDims(featureCols.length, seqLen, hidden, bottleneck, nLayers,
-        referenceDecoder),
-      keys, order, epochs, lr, seed, flagFactor, trainPartitions, optimizer,
-      dropout)
-  }
-
-  private def runDetect(seqs: DataFrame, d: LstmDims,
-                        keys: Seq[String], order: Seq[String],
-                        epochs: Int, lr: Double, seed: Long,
-                        flagFactor: Double, trainPartitions: Int,
-                        optimizer: String, dropout: Double): DataFrame =
-    DistributedSgd.detectOnSequences(seqs, "seq", keys, order, d.l * d.f,
+    val d = LstmDims(featureCols.length, seqLen, hidden, bottleneck, nLayers,
+      referenceDecoder)
+    DistributedSgd.detect(df, keys, order, featureCols, seqLen,
       flagFactor, trainPartitions,
       fitOnCentered = train =>
         fit(train, "xc", d, epochs, lr, seed, optimizer = optimizer,
@@ -787,4 +734,5 @@ object LstmAutoencoder {
       // at step one. Errors are in standardized units; flagging is
       // relative, so detection semantics are unchanged.
       standardize = true)
+  }
 }

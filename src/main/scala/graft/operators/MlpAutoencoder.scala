@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.GraftConfig
 
@@ -176,21 +174,10 @@ object MlpAutoencoder {
   def scoreWith(seqs: DataFrame, seqCol: String, p: Params,
                 seqLen: Int, hidden: Int,
                 activation: Double => Double = null): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StructField, StructType}
     require(p.w.length == hidden * seqLen && p.b1.length == hidden &&
       p.b2.length == seqLen, "scoreWith: params do not match (seqLen, hidden)")
-    val spark = seqs.sparkSession
-    val bc = spark.sparkContext.broadcast(p)
-    val idx = seqs.schema.fieldIndex(seqCol)
-    val schema = StructType(seqs.schema.fields :+
-      StructField("recon_err", DoubleType))
-    spark.createDataFrame(
-      seqs.rdd.map { r =>
-        val xc = r.getSeq[Double](idx).toArray
-        Row.fromSeq(r.toSeq :+
-          meanError(bc.value, xc, seqLen, hidden, activation))
-      }, schema)
+    DistributedSgd.withReconErr(seqs, seqCol, p)(p =>
+      xc => meanError(p, xc, seqLen, hidden, activation))
   }
 
   /** Pack/unpack for the flat-vector [[DistributedSgd]] harness (layout:
@@ -243,8 +230,14 @@ object MlpAutoencoder {
       seqLen, hidden)
   }
 
-  /** Univariate detector: sequence the target, center, train, score every
-    * window, flag scores above `flagFactor` x the per-series mean error.
+  /** Detector over the reference's literal training input (main.py:
+    * 183-195: sequences over the FULL scaled feature matrix, shape (L, F)):
+    * each row's feature vector is windowed to (L, F) and flattened to an
+    * L*F input ([[TimeSeriesOps.featureWindows]]: rows with a null or NaN
+    * feature dropped, full windows only; one column is the univariate
+    * case), then center, train, score every window and flag scores above
+    * `flagFactor` x the per-series mean error, all on the shared
+    * [[DistributedSgd.detect]] path.
     *
     * Partitioning contract: training data is repartitioned by the series
     * key and sorted within partitions by (key, order) so per-partition SGD
@@ -259,61 +252,14 @@ object MlpAutoencoder {
     * ~2x the executor cores available for the fit — training parallelism
     * is capped by it.
     */
-  def detect(df: DataFrame, keys: Seq[String], order: Seq[String], target: String,
+  def detect(df: DataFrame, keys: Seq[String], order: Seq[String],
+             featureCols: Seq[String],
              seqLen: Int = GraftConfig.SequenceLength, hidden: Int = 8,
              epochs: Int = 3, lr: Double = 0.05, seed: Long = 42L,
              flagFactor: Double = 4.0, trainPartitions: Int = 8,
              optimizer: String = "sgd"): DataFrame = {
-    // Null targets are dropped BEFORE windowing (collect_list silently
-    // skips nulls, which would misalign windows); fill first if the
-    // series needs imputation rather than omission.
-    val seqs = TimeSeriesOps.sequences(
-        df.filter(col(target).isNotNull)
-          .withColumn("__t", col(target).cast(DoubleType)),
-        keys, order, "__t", seqLen, "seq")
-      .drop("__t")
-    detectOnSequences(seqs, "seq", keys, order, seqLen, hidden, epochs, lr,
-      seed, flagFactor, trainPartitions, optimizer)
-  }
-
-  /** Multivariate detector — the reference's literal training input
-    * (main.py:183-195: sequences over the FULL scaled feature matrix,
-    * shape (L, F), LSTM input_dim = F). Each row's feature vector is
-    * windowed to (L, F) and flattened to an L*F input; everything else
-    * (centering, SGD + averaging, scoring, flagging) is the shared path.
-    */
-  def detectMulti(df: DataFrame, keys: Seq[String], order: Seq[String],
-                  featureCols: Seq[String],
-                  seqLen: Int = GraftConfig.SequenceLength, hidden: Int = 8,
-                  epochs: Int = 3, lr: Double = 0.05, seed: Long = 42L,
-                  flagFactor: Double = 4.0, trainPartitions: Int = 8,
-                  optimizer: String = "sgd"): DataFrame = {
-    require(featureCols.nonEmpty, "detectMulti needs at least one feature column")
-    // Rows with any null feature are dropped before windowing: a null
-    // element would otherwise unbox to a silent 0.0 in training (the
-    // plausible-but-wrong failure FloatVectorDot's length guard exists
-    // to prevent). Callers wanting imputation fill first.
-    val vec = array(featureCols.map(c => col(c).cast(DoubleType)): _*)
-    val seqs = TimeSeriesOps.sequences(
-        df.na.drop(featureCols).withColumn("__fv", vec),
-        keys, order, "__fv", seqLen, "seqv")
-      .drop("__fv")
-      .withColumn("seq", flatten(col("seqv")))
-      .drop("seqv")
-    detectOnSequences(seqs, "seq", keys, order, seqLen * featureCols.length,
-      hidden, epochs, lr, seed, flagFactor, trainPartitions, optimizer)
-  }
-
-  /** Center + train + score + flag via the shared [[DistributedSgd]]
-    * shell; only the D-element mean vector and the model parameters ever
-    * touch the driver.
-    */
-  private def detectOnSequences(seqs: DataFrame, seqCol: String,
-                                keys: Seq[String], order: Seq[String], dim: Int,
-                                hidden: Int, epochs: Int, lr: Double, seed: Long,
-                                flagFactor: Double, trainPartitions: Int,
-                                optimizer: String): DataFrame =
-    DistributedSgd.detectOnSequences(seqs, seqCol, keys, order, dim,
+    val dim = seqLen * featureCols.length
+    DistributedSgd.detect(df, keys, order, featureCols, seqLen,
       flagFactor, trainPartitions,
       fitOnCentered = train =>
         toFlat(fit(train, "xc", dim, hidden, epochs, lr, seed, optimizer)),
@@ -321,4 +267,5 @@ object MlpAutoencoder {
         val p = fromFlat(flat, dim, hidden)
         xc => meanError(p, xc, dim, hidden)
       })
+  }
 }

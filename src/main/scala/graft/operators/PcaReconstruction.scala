@@ -32,9 +32,11 @@ object PcaReconstruction {
   private def dotArr(a: Column, b: Column): Column = aggregate(
     zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, p) => acc + p)
 
-  /** Sequence the series, fit a global K-component PCA on the sequence
-    * windows, score every window by reconstruction error, flag scores
-    * above `flagFactor` x the per-series mean error (the reference's
+  /** Sequence the series (the model windows of
+    * [[TimeSeriesOps.featureWindows]]: null and NaN targets dropped, full
+    * windows only), fit a global K-component PCA on the sequence windows,
+    * score every window by reconstruction error, flag scores above
+    * `flagFactor` x the per-series mean error (the reference's
     * threshold-on-error shape, config.py:23).
     */
   def detect(df: DataFrame, keys: Seq[String], order: Seq[String], target: String,
@@ -44,7 +46,7 @@ object PcaReconstruction {
     // Materialize the sequenced input BEFORE the mean pass: the mean
     // aggregate, the PCA fit, and the scoring pass all reread it, and
     // sequencing is the expensive window shuffle. An eager localCheckpoint,
-    // not cache() (as in DistributedSgd.detectOnSequences): a CacheManager
+    // not cache() (as in DistributedSgd.detect): a CacheManager
     // entry is keyed by plan and was never released, so a later call with
     // the same plan over rewritten input files got the first call's
     // sequences.
@@ -62,12 +64,14 @@ object PcaReconstruction {
     val aqe = "spark.sql.adaptive.enabled"
     val prev = spark.conf.getOption(aqe)
     spark.conf.set(aqe, "false")
-    val seqs = try TimeSeriesOps.sequences(df, keys, order, target, seqLen, "seq").localCheckpoint()
+    val seqs = try TimeSeriesOps.featureWindows(df, keys, order, Seq(target), seqLen).localCheckpoint()
       finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
 
     // Per-dimension mean: one aggregate, one L-element row to the driver.
     val meanRow = seqs.select(
       (0 until seqLen).map(i => avg(element_at(col("seq"), i + 1)).as(s"m$i")): _*).head()
+    require(!meanRow.isNullAt(0),
+      "pca detect: no complete windows to fit (all targets null, NaN or series shorter than seqLen)")
     val meanArr = Array.tabulate(seqLen)(meanRow.getDouble)
 
     val vecs = seqs
@@ -75,8 +79,7 @@ object PcaReconstruction {
       .withColumn("fv", array_to_vector(col("xc")))
     val model = new PCA().setInputCol("fv").setOutputCol("pv").setK(k).fit(vecs)
 
-    val keyW = if (keys.isEmpty) Window.partitionBy()
-               else Window.partitionBy(keys.map(col): _*)
+    val keyW = Window.partitionBy(keys.map(col): _*)
     model.transform(vecs)
       .withColumn("p", vector_to_array(col("pv")))
       .withColumn("recon_err",

@@ -22,10 +22,8 @@ import graft.functions.CleanFunctions.safeDiv
 object TimeSeriesOps {
 
   /** Window over one series ordered by event time (tie-broken). */
-  def seriesWindow(keys: Seq[String], order: Seq[String]): WindowSpec = {
-    val w = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
-    w.orderBy(order.map(col): _*)
-  }
+  def seriesWindow(keys: Seq[String], order: Seq[String]): WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy(order.map(col): _*)
 
   /** Calendar features from the time index (ref: preprocessing.py:175-196
     * add_time_features). `dayofweek` is Monday=0 like pandas; all outputs
@@ -109,10 +107,10 @@ object TimeSeriesOps {
         val w = seriesWindow(keys, order).rowsBetween(0, Window.unboundedFollowing)
         first(t, ignoreNulls = true).over(w)
       case "mean" =>
-        val w = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+        val w = Window.partitionBy(keys.map(col): _*)
         coalesce(t, graft.functions.CleanFunctions.exactMeanOver(t, w))
       case "median" =>
-        val w = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+        val w = Window.partitionBy(keys.map(col): _*)
         coalesce(t, median(t).over(w))
       case "zero" => coalesce(t, lit(0.0))
       case other  => throw new IllegalArgumentException(s"unknown fill strategy: $other")
@@ -322,7 +320,7 @@ object TimeSeriesOps {
     */
   def minMaxScale(df: DataFrame, keys: Seq[String], target: String,
                   outCol: String): DataFrame = {
-    val w = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+    val w = Window.partitionBy(keys.map(col): _*)
     val mn = min(col(target)).over(w)
     val mx = max(col(target)).over(w)
     df.withColumn(outCol, safeDiv(col(target) - mn, mx - mn))
@@ -338,7 +336,8 @@ object TimeSeriesOps {
     * Measured negative (kept here so it is not retried): the plain shape,
     * one stats `Window` and then one projection holding all scaled
     * expressions as aliases, ran out of memory on a 3 GB heap on the lstm
-    * path. `detectMulti`'s `na.drop` on the scaled columns is pushed below
+    * path. The model windows' `na.drop` on the scaled columns
+    * ([[featureWindows]]) is pushed below
     * that projection, and Catalyst's constraint propagation
     * (`UnaryNode.getAllValidConstraints`) then doubles the constraint set
     * once per alias: 2^23 constraints for the pipeline's 23 columns. A
@@ -349,7 +348,7 @@ object TimeSeriesOps {
     */
   def minMaxScaleAll(df: DataFrame, keys: Seq[String], cols: Seq[String],
                      suffix: String = "_scaled"): DataFrame = {
-    val w = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+    val w = Window.partitionBy(keys.map(col): _*)
     val (mn, mx) = (cols.indices.map(i => s"__mm_min_$i"), cols.indices.map(i => s"__mm_max_$i"))
     val stats = withColumnsInOrder(df, cols.indices.flatMap(i =>
       Seq(mn(i) -> min(col(cols(i))).over(w), mx(i) -> max(col(cols(i))).over(w))))
@@ -362,7 +361,7 @@ object TimeSeriesOps {
   /** Standard (z) scaling per series; sample stddev for oracle parity. */
   def standardScale(df: DataFrame, keys: Seq[String], target: String,
                     outCol: String): DataFrame = {
-    val w = if (keys.isEmpty) Window.partitionBy() else Window.partitionBy(keys.map(col): _*)
+    val w = Window.partitionBy(keys.map(col): _*)
     df.withColumn(outCol, safeDiv(col(target) - avg(col(target)).over(w),
       stddev_samp(col(target)).over(w)))
   }
@@ -379,6 +378,35 @@ object TimeSeriesOps {
     val coll = collect_list(col(target)).over(w.rowsBetween(-(seqLen - 1), 0))
     df.withColumn(outCol, coll)
       .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") >= seqLen)
+      .drop("__rn")
+  }
+
+  /** The model input of `Pipeline.run`'s three detectors (pca, mlp, lstm):
+    * the [[sequences]] window over each row's feature vector, flattened time-major
+    * into a `seq` column, so step t of a window reads [t*F, (t+1)*F) of its
+    * seqLen * F doubles (the reference's (L, F) input, main.py:183-195).
+    * Rows with a null or NaN in any feature are dropped first: a null
+    * would be skipped by the window collect (shifting every later step)
+    * or unbox to a silent 0.0, and one NaN would turn a whole fit into
+    * NaN. After the drop every kept window is full; a series with fewer
+    * than `seqLen` usable rows (e.g. a constant one, whose scaled values
+    * are all null) emits no row. Callers wanting imputation fill first.
+    */
+  private[operators] def featureWindows(df: DataFrame, keys: Seq[String], order: Seq[String],
+                                        featureCols: Seq[String], seqLen: Int): DataFrame = {
+    require(featureCols.nonEmpty, "model windows need at least one feature column")
+    // One projection for the window and its row number. Written as steps
+    // around [[sequences]] (array column, window, flatten, each its own
+    // withColumn/drop), the windowing checkpoint of a pca call over
+    // Pipeline.prepare took ~45 ms longer than the plain `sequences` it
+    // replaces; this form is no slower than that (paired medians over 45
+    // interleaved reps, 8 series x 480 h, local[4]).
+    val w = seriesWindow(keys, order)
+    val vec = array(featureCols.map(c => col(c).cast(DoubleType)): _*)
+    withColumnsInOrder(df.na.drop(featureCols), Seq(
+        "seq" -> flatten(collect_list(vec).over(w.rowsBetween(-(seqLen - 1), 0))),
+        "__rn" -> row_number().over(w)))
       .filter(col("__rn") >= seqLen)
       .drop("__rn")
   }

@@ -214,7 +214,7 @@ object PipelineQueries {
 
     "ts_ae_recon" -> { (s, d) =>
       graft.operators.MlpAutoencoder
-        .detect(Tables.events(s, d), K, Ord, "value", seqLen = 24, hidden = 8,
+        .detect(Tables.events(s, d), K, Ord, Seq("value"), seqLen = 24, hidden = 8,
           trainPartitions = s.sparkContext.defaultParallelism)
         .select(col("event_id"), graft.functions.CleanFunctions.round4(col("recon_err")).as("recon_err"),
           col("is_anomaly"))
@@ -230,7 +230,7 @@ object PipelineQueries {
     // recall-vs-MLP asserted in LstmAutoencoderSpec.
     "ts_lstm_recon" -> { (s, d) =>
       graft.operators.LstmAutoencoder
-        .detect(Tables.events(s, d), K, Ord, "value", seqLen = 24, hidden = 8,
+        .detect(Tables.events(s, d), K, Ord, Seq("value"), seqLen = 24, hidden = 8,
           bottleneck = 4, trainPartitions = s.sparkContext.defaultParallelism)
         .select(col("event_id"), graft.functions.CleanFunctions.round4(col("recon_err")).as("recon_err"),
           col("is_anomaly"))

@@ -25,8 +25,11 @@ case class Event(event_id: Long, ts: Timestamp, user_id: Long,
 case class ScoredEvent(event_id: Long, ts: Timestamp, user_id: Long,
                        value: Double, z: Option[Double], is_anomaly: Long)
 
-/** Per-series trailing buffer, oldest first, at most `win` values. */
-case class SeriesState(recent: Seq[Double])
+/** Per-series trailing buffer, oldest first, at most `win` values, and
+  * the z its last event was scored with (None during warm-up or at a
+  * zero trailing stddev).
+  */
+case class SeriesState(recent: Seq[Double], z: Option[Double])
 
 /** A detector-flagged event entering episode grouping. */
 case class FlaggedEvent(event_id: Long, ts: Timestamp, user_id: Long, flag: Long)
@@ -747,42 +750,34 @@ object StreamingAnomaly {
                     win: Int = GraftConfig.SequenceLength,
                     threshold: Double = GraftConfig.AnomalyThreshold): Dataset[ScoredEvent] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, it: Iterator[Event], state: GroupState[SeriesState]) =>
-          val buf = scala.collection.mutable.ArrayBuffer[Double]()
-          buf ++= state.getOption.map(_.recent).getOrElse(Seq.empty)
-          // (ts-in-microseconds, event_id) order — the batch operators'
-          // tie-break, so a single-batch replay scores identically.
-          val out = it.toIndexedSeq.sortBy(e => (tsUs(e.ts), e.event_id)).map { e =>
-            val n = buf.length
-            // Raw moments through the same DECIMAL(18,6) quantization as
-            // the batch exactSum (CleanFunctions.dec6): the trailing-buffer
-            // sums are order-independent and bit-match a SQL decimal
-            // window sum, so a replay of this fold is exact-hash
-            // comparable to a momentStd oracle — same clamp, same nulls.
-            val zOpt =
-              if (n < 2) None
-              else {
-                import graft.functions.CleanFunctions.dec6
-                val sx = buf.foldLeft(java.math.BigDecimal.ZERO)(
-                  (a, v) => a.add(dec6(v))).doubleValue
-                val sxx = buf.foldLeft(java.math.BigDecimal.ZERO)(
-                  (a, v) => a.add(dec6(v * v))).doubleValue
-                val mu = sx / n
-                val sd = math.sqrt(
-                  math.max((sxx - sx * sx / n) / (n - 1.0), 0.0))
-                if (sd == 0.0) None else Some((e.value - mu) / sd)
-              }
-            buf += e.value
-            if (buf.length > win) buf.remove(0, buf.length - win)
-            ScoredEvent(e.event_id, e.ts, e.user_id, e.value, zOpt,
-              if (zOpt.exists(z => math.abs(z) > threshold)) 1L else 0L)
-          }
-          state.update(SeriesState(buf.toVector))
-          out.iterator
-      }
+    // Same (ts-in-microseconds, event_id) order as the batch operators,
+    // so a single-batch replay scores identically.
+    keyedFold(events)(_.user_id, eventOrder) { (st: SeriesState, e) =>
+      val buf = if (st == null) Vector.empty[Double] else st.recent
+      val n = buf.length
+      // Raw moments through the same DECIMAL(18,6) quantization as the
+      // batch exactSum (CleanFunctions.dec6): the trailing-buffer sums
+      // are order-independent and bit-match a SQL decimal window sum, so
+      // a replay of this fold is exact-hash comparable to a momentStd
+      // oracle — same clamp, same nulls.
+      val z =
+        if (n < 2) None
+        else {
+          import graft.functions.CleanFunctions.dec6
+          val sx = buf.foldLeft(java.math.BigDecimal.ZERO)(
+            (a, v) => a.add(dec6(v))).doubleValue
+          val sxx = buf.foldLeft(java.math.BigDecimal.ZERO)(
+            (a, v) => a.add(dec6(v * v))).doubleValue
+          val mu = sx / n
+          val sd = math.sqrt(
+            math.max((sxx - sx * sx / n) / (n - 1.0), 0.0))
+          if (sd == 0.0) None else Some((e.value - mu) / sd)
+        }
+      SeriesState((buf :+ e.value).takeRight(win), z)
+    } { (e, st) =>
+      ScoredEvent(e.event_id, e.ts, e.user_id, e.value, st.z,
+        if (st.z.exists(z => math.abs(z) > threshold)) 1L else 0L)
+    }
   }
 
   /** Streaming mergeable bottom-k quantile sketch per event type with

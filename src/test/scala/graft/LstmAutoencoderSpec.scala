@@ -147,7 +147,7 @@ class LstmAutoencoderSpec extends AnyFunSuite {
 
   test("referenceDecoder detector is deterministic and keeps the recall bar") {
     def run() = LstmAutoencoder.detect(synthetic, Seq("user_id"),
-        Seq("ts", "event_id"), "value", seqLen = 24, hidden = 8,
+        Seq("ts", "event_id"), Seq("value"), seqLen = 24, hidden = 8,
         bottleneck = 4, nLayers = 2, referenceDecoder = true)
       .filter(col("is_anomaly") === 1L).select("event_id").as[Long].collect().toSet
     val a = run()
@@ -239,7 +239,7 @@ class LstmAutoencoderSpec extends AnyFunSuite {
     // End-to-end: the stacked detector with the reference's dropout 0.2
     // still clears the recall bar.
     val flagged = LstmAutoencoder.detect(synthetic, Seq("user_id"),
-        Seq("ts", "event_id"), "value", seqLen = 24, hidden = 8,
+        Seq("ts", "event_id"), Seq("value"), seqLen = 24, hidden = 8,
         bottleneck = 4, nLayers = 2, dropout = 0.2)
       .filter(col("is_anomaly") === 1L).select("event_id").as[Long].collect().toSet
     assert(recall(flagged) >= 0.9,
@@ -261,7 +261,7 @@ class LstmAutoencoderSpec extends AnyFunSuite {
 
   test("stacked detector keeps the recall bar (determinism + quality at nl=2)") {
     val flagged = LstmAutoencoder.detect(synthetic, Seq("user_id"),
-        Seq("ts", "event_id"), "value", seqLen = 24, hidden = 8,
+        Seq("ts", "event_id"), Seq("value"), seqLen = 24, hidden = 8,
         bottleneck = 4, nLayers = 2)
       .filter(col("is_anomaly") === 1L).select("event_id").as[Long].collect().toSet
     assert(recall(flagged) >= 0.9, s"stacked recall ${recall(flagged)} below the bar")
@@ -324,9 +324,9 @@ class LstmAutoencoderSpec extends AnyFunSuite {
 
   test("LSTM detector catches injected spikes with recall >= the MLP detector") {
     val lstm = LstmAutoencoder.detect(synthetic, Seq("user_id"), Seq("ts", "event_id"),
-      "value", seqLen = 24, hidden = 8, bottleneck = 4)
+      Seq("value"), seqLen = 24, hidden = 8, bottleneck = 4)
     val mlp = MlpAutoencoder.detect(synthetic, Seq("user_id"), Seq("ts", "event_id"),
-      "value", seqLen = 24, hidden = 8)
+      Seq("value"), seqLen = 24, hidden = 8)
     def flaggedAt(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.filter(col("is_anomaly") === 1L).select("event_id").as[Long].collect().toSet
     val lstmRecall = recall(flaggedAt(lstm))
@@ -344,7 +344,7 @@ class LstmAutoencoderSpec extends AnyFunSuite {
     // MLP spec; the model differs bitwise per P, the quality must not).
     def flaggedAt(p: Int): Set[Long] =
       LstmAutoencoder.detect(synthetic, Seq("user_id"), Seq("ts", "event_id"),
-        "value", seqLen = 24, hidden = 8, bottleneck = 4, trainPartitions = p)
+        Seq("value"), seqLen = 24, hidden = 8, bottleneck = 4, trainPartitions = p)
         .filter(col("is_anomaly") === 1L).select("event_id").as[Long].collect().toSet
     val r4 = recall(flaggedAt(4))
     val r16 = recall(flaggedAt(16))

@@ -71,7 +71,7 @@ class MlpAutoencoderSpec extends AnyFunSuite {
   }
 
   test("AE catches injected spikes with recall >= the PCA detector") {
-    val ae = MlpAutoencoder.detect(synthetic, Seq("user_id"), Seq("ts", "event_id"), "value",
+    val ae = MlpAutoencoder.detect(synthetic, Seq("user_id"), Seq("ts", "event_id"), Seq("value"),
       seqLen = 24, hidden = 8)
     val pca = PcaReconstruction.detect(synthetic, Seq("user_id"), Seq("ts", "event_id"), "value",
       seqLen = 24, k = 4)
@@ -92,7 +92,7 @@ class MlpAutoencoderSpec extends AnyFunSuite {
     // yields a DIFFERENT model bitwise (averaging order changes) but an
     // equally good detector (the recall bar must hold at any P).
     def run(p: Int) = MlpAutoencoder.detect(synthetic, Seq("user_id"),
-      Seq("ts", "event_id"), "value", seqLen = 24, hidden = 8, trainPartitions = p)
+      Seq("ts", "event_id"), Seq("value"), seqLen = 24, hidden = 8, trainPartitions = p)
     def flaggedAt(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.filter(col("is_anomaly") === 1L).select("event_id").as[Long].collect().toSet
     val r4  = recall(flaggedAt(run(4)))
@@ -157,7 +157,7 @@ class MlpAutoencoderSpec extends AnyFunSuite {
 
   test("adam detector keeps the recall bar") {
     val ae = MlpAutoencoder.detect(synthetic, Seq("user_id"), Seq("ts", "event_id"),
-      "value", seqLen = 24, hidden = 8, optimizer = "adam", lr = 0.01)
+      Seq("value"), seqLen = 24, hidden = 8, optimizer = "adam", lr = 0.01)
     val flagged = ae.filter(col("is_anomaly") === 1L)
       .select("event_id").as[Long].collect().toSet
     assert(recall(flagged) >= 0.9,
