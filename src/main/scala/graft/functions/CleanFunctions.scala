@@ -159,10 +159,6 @@ object CleanFunctions {
     sum(c.cast(org.apache.spark.sql.types.DecimalType(28, 6)))
       .cast(org.apache.spark.sql.types.DecimalType(38, 6))
 
-  /** DuckDB twin of [[exactSumDec]]. */
-  def exactSumDecSql(x: String): String =
-    s"CAST(sum(CAST(($x) AS DECIMAL(28,6))) AS DECIMAL(38,6))"
-
   /** JVM-side replica of the DECIMAL(18,6) quantization [[exactSum]]
     * applies per value — for executor-side folds (streaming state) whose
     * sums must hash-match SQL decimal sums. `valueOf` goes through the

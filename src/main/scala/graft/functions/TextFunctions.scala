@@ -243,12 +243,6 @@ object TextFunctions {
   def lshSignAt(emb: Column, plane: Int, threshold: Column): Column =
     when(lshProj(emb, plane) >= threshold, 1L).otherwise(0L)
 
-  /** DuckDB twin of [[lshSignAt]]: `thSql` must evaluate to the same
-    * double the Spark side joins in.
-    */
-  def lshSignAtSql(embSql: String, plane: Int, thSql: String): String =
-    s"(CASE WHEN ${lshProjSql(embSql, plane)} >= $thSql THEN 1 ELSE 0 END)"
-
   /** Pack `n` sign bits (columns of 0/1 long) into a bucket id. */
   def packBits(bits: Seq[Column]): Column =
     bits.zipWithIndex.map { case (b, i) => shiftleft(b, i) }

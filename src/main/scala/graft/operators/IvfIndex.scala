@@ -56,12 +56,6 @@ object IvfIndex {
     array_min(array(scored: _*)).getField("cell")
   }
 
-  /** Same -2*dot+cc ranking score as a column (for nprobe cell probing —
-    * ||q||^2 is constant per query, so this orders like true distance).
-    */
-  def centerScore(emb: Column, center: Array[Float]): Column =
-    lit(-2.0) * TextFunctions.dot(emb, lit(center)) + lit(selfDot(center))
-
   /** Fit `iters` Lloyd rounds over `e` (columns: idCol long, embCol
     * array<float> of length `dim`). Returns surviving (cellId, center)
     * pairs, original ids, ascending.
