@@ -31,23 +31,24 @@ object GraftSession {
       // warm calls compile nothing.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
 
-  /** Builder for streaming jobs with large state: RocksDB state store
-    * (spills keyed state to local disk instead of executor heap) +
-    * changelog checkpointing for fast recovery. At 100 TB/day of events,
-    * dedup/session state outgrows the in-memory HDFS-backed store.
-    */
-  def streamingBuilder(master: String = "local[*]",
-                       shufflePartitions: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder =
-    builder(master, shufflePartitions)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-
   def local(cores: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 4))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` with the session conf `key` set to `value`, then restores
+    * it: an earlier explicit setting (one in `spark.conf.getAll`) is set
+    * back, a key that had none is unset again, also when `body` throws.
+    * Frames materialized inside `body` keep the plans they were built
+    * with; lazy frames returned from it plan under the restored conf.
+    */
+  def withConf[T](spark: SparkSession, kv: (String, String))(body: => T): T = {
+    val (key, value) = kv
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -37,23 +37,27 @@ private[operators] object DistributedSgd {
     * moments, dropout mask counters) keys off it.
     *
     * `epochScorer` (when given) enables BEST-EPOCH CHECKPOINTING — the
-    * reference's torch.save-on-best-loss loop (main.py:44-56): after each
-    * epoch's averaging, the mean training loss of the AVERAGED parameters
-    * is evaluated in one extra pass over the cached RDD, and the epoch
-    * with the lowest loss is what [[fit]] returns (strict `<`, so the
-    * EARLIEST best epoch wins ties, matching the reference's `<` compare).
-    * On a noisy loss curve the last epoch is routinely not the best one.
+    * reference's torch.save-on-best-loss loop (main.py:44-56): the mean
+    * training loss of each epoch's AVERAGED parameters is evaluated, and
+    * the epoch with the lowest loss is what [[fit]] returns (strict `<`,
+    * so the EARLIEST best epoch wins ties, matching the reference's `<`
+    * compare). On a noisy loss curve the last epoch is routinely not the
+    * best one. Cost: no extra pass per epoch. Epoch e's averaged
+    * parameters are the broadcast start of epoch e+1, so that epoch's
+    * training pass also sums their loss as it reads each row; one
+    * forward-only pass after the last epoch scores the last epoch's
+    * parameters. E epochs run E + 1 jobs with a scorer, E without.
     * Determinism: per-window losses are summed per partition as exact
     * BigDecimals (every double is exactly representable; exact addition
     * is order-blind), partials merged in partition order, one DECIMAL128
     * rounding at the final divide — so the selected epoch is identical on
-    * any cluster. Cost: one forward-only pass per epoch over data already
-    * cached unboxed; no extra shuffles, no extra comm rounds.
+    * any cluster.
     */
   def fit(seqs: DataFrame, seqCol: String, epochs: Int, init: Array[Double],
           partitionFit: (Int, Array[Double], Iterator[Array[Double]]) => Array[Double],
           epochScorer: Option[Array[Double] => (Array[Double] => Double)] = None)
       : Array[Double] = {
+    import java.math.{BigDecimal => JBD, MathContext}
     val spark = seqs.sparkSession
     val idx = seqs.schema.fieldIndex(seqCol)
     // Materialize the training RDD ONCE, already unboxed: each epoch
@@ -64,60 +68,53 @@ private[operators] object DistributedSgd {
     var params = init
     var best: Array[Double] = null
     var bestLoss = Double.PositiveInfinity
-    for (epoch <- 1 to epochs) {
+    // Pass e (1-based) trains epoch e from `params` when e <= epochs and,
+    // when e > 1, scores `params`, which are epoch e-1's average.
+    val passes = if (epochScorer.isDefined && epochs > 0) epochs + 1 else epochs
+    for (pass <- 1 to passes) {
+      val train = pass <= epochs
+      val mkErr = if (pass > 1) epochScorer.orNull else null
       val bc = spark.sparkContext.broadcast(params)
       val partResults = trainRdd.mapPartitionsWithIndex { (pid, rows) =>
         if (rows.isEmpty) Iterator.empty
         else {
+          val err = if (mkErr == null) null else mkErr(bc.value)
           var n = 0L
-          val windows = rows.map { x => n += 1; x }
-          val p = partitionFit(epoch, bc.value.clone(), windows)
-          Iterator.single((pid, p, n))
+          var loss = JBD.ZERO
+          val windows = rows.map { x =>
+            n += 1
+            if (err != null) loss = loss.add(new JBD(err(x)))
+            x
+          }
+          val p = if (train) partitionFit(pass, bc.value.clone(), windows) else null
+          windows.foreach(_ => ()) // the count and the loss cover every row
+          Iterator.single((pid, p, n, loss))
         }
       }.collect().sortBy(_._1) // fixed accumulation order => deterministic
-      bc.destroy() // params rebroadcast next epoch; don't accumulate blocks
+      bc.destroy() // params rebroadcast next pass; don't accumulate blocks
       // An empty training set would otherwise average to an all-zero
       // parameter vector — a degenerate model with no signal that scores
       // everything identically. Fail loudly instead.
       require(partResults.nonEmpty,
         "DistributedSgd.fit: training set is empty (no rows reached any partition)")
-      val total = partResults.map(_._3).sum.toDouble
-      val acc = new Array[Double](params.length)
-      partResults.foreach { case (_, p, n) =>
-        val wgt = n / total
-        var k = 0
-        while (k < acc.length) { acc(k) += wgt * p(k); k += 1 }
-      }
-      params = acc
-      epochScorer.foreach { mk =>
-        val loss = meanLoss(trainRdd, spark, params, mk)
+      val total = partResults.map(_._3).sum
+      if (mkErr != null) {
+        val loss = partResults.map(_._4).foldLeft(JBD.ZERO)(_.add(_))
+          .divide(JBD.valueOf(total), MathContext.DECIMAL128).doubleValue
         if (loss < bestLoss) { bestLoss = loss; best = params }
+      }
+      if (train) {
+        val acc = new Array[Double](params.length)
+        partResults.foreach { case (_, p, n, _) =>
+          val wgt = n / total.toDouble
+          var k = 0
+          while (k < acc.length) { acc(k) += wgt * p(k); k += 1 }
+        }
+        params = acc
       }
     }
     trainRdd.unpersist(blocking = false)
     if (best != null) best else params
-  }
-
-  /** Deterministic mean training loss of `params`: exact BigDecimal
-    * per-partition sums, partition-ordered merge, one DECIMAL128 divide.
-    */
-  private def meanLoss(trainRdd: org.apache.spark.rdd.RDD[Array[Double]],
-                       spark: org.apache.spark.sql.SparkSession,
-                       params: Array[Double],
-                       mkErr: Array[Double] => (Array[Double] => Double)): Double = {
-    import java.math.{BigDecimal => JBD, MathContext}
-    val bc = spark.sparkContext.broadcast(params)
-    val parts = trainRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val err = mkErr(bc.value)
-      var s = JBD.ZERO
-      var n = 0L
-      rows.foreach { x => s = s.add(new JBD(err(x))); n += 1 }
-      if (n == 0) Iterator.empty else Iterator.single((pid, s, n))
-    }.collect().sortBy(_._1)
-    bc.destroy()
-    val total = parts.map(_._3).sum
-    val sum = parts.map(_._2).foldLeft(JBD.ZERO)(_.add(_))
-    sum.divide(JBD.valueOf(total), MathContext.DECIMAL128).doubleValue
   }
 
   /** Deterministic Adam (reference main.py:24 `optim.Adam`): the standard

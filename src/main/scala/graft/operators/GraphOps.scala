@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Small-graph primitives for near-duplicate clustering
   * (SURVEY.md §2.8: near-dup cluster ids over simhash/minhash pair edges).
@@ -10,26 +12,26 @@ object GraphOps {
 
   /** Min-label propagation to FIXPOINT: connected components where the
     * cluster id is the minimum node id in the component. Each round is one
-    * shuffled join + grouped min over the edges PLUS a pointer-jumping
-    * step (lbl <- lbl(lbl), the classic doubling trick), so label distance
-    * doubles per round and convergence needs O(log diameter) rounds —
-    * maxRounds=10 covers diameter ~2^10, where edge-only propagation needs
-    * diameter rounds and silently mislabels longer chains at the cap
-    * (observed at sf0.1: a >10-hop near-dup chain). Convergence is a
+    * shuffled join + grouped min over the edges PLUS two pointer-jumping
+    * steps (lbl <- lbl(lbl)). Where ids rise along a path, label distance
+    * grows geometrically per round, so convergence needs O(log diameter)
+    * rounds (edge-only propagation needs diameter rounds and mislabeled a
+    * >10-hop near-dup chain at sf0.1 at the cap). On a path with shuffled
+    * ids the rounds grow linearly (a 60-node path: median 23 over 20
+    * seeded shuffles, past the default cap). Convergence is a
     * changed-label count hitting zero; the fixpoint is unique (min
     * reachable id), so the oracle's recursive closure matches exactly.
     * Pointer jumping is sound because labels only ever move to ids
     * reachable over the symmetrized edges: lbl(v) is reachable from v,
     * hence lbl(lbl(v)) is too.
     *
-    * Scale: per-round state is one (id, lbl) row per node — tiny next to
-    * the corpus. Each round `localCheckpoint()`s its labels: the round-t
-    * plan references round t-1 THREE times (nb join + least + changed
-    * check), so without lineage truncation the logical plan grows 3^t —
-    * a gigabyte-scale plan string by round 10 (observed: a 2 GB plan blew
-    * the driver heap). Checkpointing collapses each round to a LogicalRDD.
-    * On a cluster, swap localCheckpoint for reliable `checkpoint` if
-    * executor loss during the loop must be survivable.
+    * Scale: per-round state is one (id, lbl) row per node. Each round is
+    * ONE materialization: it `localCheckpoint()`s its labels, and the same
+    * job counts the changed ones ([[checkpointCounting]]). The round-t
+    * plan references round t-1 THREE times, so without the checkpoint the
+    * plan grows 3^t (observed: a 2 GB plan blew the driver heap). On a
+    * cluster, swap localCheckpoint for reliable `checkpoint` if executor
+    * loss during the loop must be survivable.
     *
     * @param edges DataFrame with long columns `x`, `y` (undirected pairs;
     *              symmetrized internally).
@@ -38,22 +40,20 @@ object GraphOps {
     */
   def minLabelPropagate(edges: DataFrame, maxRounds: Int = 10): DataFrame = {
     val spark = edges.sparkSession
-    val sym0 = edges.select(col("x"), col("y"))
-      .union(edges.select(col("y").as("x"), col("x").as("y")))
-      .localCheckpoint()
-    // Size the ROUND shuffles to the materialized edge volume, not the
-    // session's batch width: each round schedules `shuffle.partitions`
-    // tasks per exchange regardless of data size — on a few-thousand-edge
-    // graph that is pure scheduling overhead x rounds. ~50k edges per
-    // partition keeps tasks meaningfully sized; a 100 TB corpus's edge
-    // set sizes this straight back up to the session width. The conf is
-    // restored in `finally`; every returned frame is localCheckpoint'ed
-    // inside the window, so callers never recompile under the wrong
-    // width.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    // No pre-partition by x: under AQE a checkpoint of repartition(x)
+    // reports UnknownPartitioning(0), so every round re-exchanged it anyway.
+    val (sym, nEdges) = checkpointCounting(
+      edges.select(col("x"), col("y"))
+        .union(edges.select(col("y").as("x"), col("x").as("y"))),
+      lit(true))
+    // Size the ROUND shuffles to the edge volume, not the session's batch
+    // width: each round schedules `shuffle.partitions` tasks per exchange
+    // regardless of data size. ~50k edges per partition keeps tasks
+    // meaningfully sized; a 100 TB corpus's edge set sizes this straight
+    // back up to the session width. Every returned frame is checkpointed
+    // inside the `withConf` scope, so callers never recompile under it.
     val parts = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
-      sym0.count() / 50000L + 1L))
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      nEdges / 50000L + 1L))
     // MEASURED NEGATIVE (r17, kept so it isn't re-tried): disabling AQE
     // inside the loop to collapse the ~6 stage-jobs per round into one
     // job made dedup_canonical 4.9 s -> 7.3 s (7-rep medians) — AQE's
@@ -61,23 +61,11 @@ object GraphOps {
     // into runtime broadcasts; without it the rounds pay real exchanges.
     // The scheduling overhead the extra jobs cost is smaller than the
     // join re-planning they buy, even at 1 shuffle partition.
-    try {
-      // Pre-partition the symmetrized edges by x ONCE (r16 optimization,
-      // guide §2.4), meant to let the seed aggregation (groupBy x) and
-      // every round's neighbor-min join (on x) reuse the layout. MEASURED:
-      // with AQE on (the default), localCheckpoint of this plan reports
-      // UnknownPartitioning(0), so every round's executed plan still has
-      // an Exchange hashpartitioning(x) directly over the sym scan — the
-      // EDGE table is re-exchanged once per round (sf0.001,
-      // customer_components and dedup_clusters, every round). The old
-      // shape re-shuffled sym TWICE per round (the prop subtree was
-      // duplicated under the pointer-jump self-join).
-      val sym = sym0.repartition(parts.toInt, col("x")).localCheckpoint()
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString) {
       // Seed with min(id, min neighbor) — the result of the first
       // identity-label round, folded into one aggregate. groupBy(x) over
-      // the symmetrized edges is the same relation as the old groupBy(y)
-      // (every (a,b) has its mirror (b,a)) and is exchange-free on the
-      // x-partitioned layout.
+      // the symmetrized edges is the same relation as groupBy(y) (every
+      // (a,b) has its mirror (b,a)).
       var labels: DataFrame = sym.groupBy(col("x").as("id")).agg(min(col("y")).as("nbl"))
         .select(col("id"), least(col("id"), col("nbl")).as("lbl"))
         .localCheckpoint()
@@ -87,7 +75,7 @@ object GraphOps {
         val nb = sym.join(labels, sym("x") === labels("id"))
           .groupBy(sym("y").as("id")).agg(min(col("lbl")).as("nbl"))
         // Carry the PREVIOUS label through the round so convergence is a
-        // checkpoint-local filter+count instead of a per-round join of
+        // count over the round's own rows instead of a per-round join of
         // two label tables (one fewer shuffle per round).
         val prop = labels.join(nb, Seq("id"), "left")
           .select(col("id"), least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"),
@@ -110,12 +98,12 @@ object GraphOps {
             least(col("lbl"), coalesce(col("j1lbl"), col("lbl"))).as("lbl"),
             col("prev"))
         val jt2 = labels.select(col("id").as("j2id"), col("lbl").as("j2lbl"))
-        val next = j1.join(jt2, col("lbl") === col("j2id"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("j2lbl"), col("lbl"))).as("lbl"),
-            col("prev"))
-          .localCheckpoint()
-        val changed = next.filter(col("lbl") =!= col("prev")).count()
+        val (next, changed) = checkpointCounting(
+          j1.join(jt2, col("lbl") === col("j2id"), "left")
+            .select(col("id"),
+              least(col("lbl"), coalesce(col("j2lbl"), col("lbl"))).as("lbl"),
+              col("prev")),
+          col("lbl") =!= col("prev"))
         labels = next.select(col("id"), col("lbl"))
         converged = changed == 0
         round += 1
@@ -123,10 +111,19 @@ object GraphOps {
       if (!converged)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"minLabelPropagate hit maxRounds=$maxRounds before the fixpoint: " +
-            "returned labels may split components (raise maxRounds; " +
-            "pointer jumping covers diameter ~3^rounds)")
+            "returned labels may split components (raise maxRounds)")
       labels
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+  }
+
+  /** Eager `localCheckpoint` of `df` and the number of its rows where
+    * `pred` holds, counted by the checkpoint's own job (`Dataset.observe`):
+    * the iterative operators' per-round metric without a second action.
+    */
+  private[graft] def checkpointCounting(df: DataFrame, pred: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val cp = df.observe(obs, count_if(pred).as("n")).localCheckpoint()
+    (cp, obs.get("n").asInstanceOf[Long])
   }
 
   /** Component-size histogram DERIVED from an already-computed

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GraftConfig
+import graft.{GraftConfig, GraftSession}
 
 /** Linear-autoencoder anomaly detection = PCA reconstruction error.
   *
@@ -82,8 +82,8 @@ object PcaReconstruction {
     // never released, so a later call with the same plan over rewritten
     // input files got the first call's sequences.
     //
-    // AQE is off for the checkpoint (restored in `finally`; nothing of this
-    // plan runs outside the window). Under AQE the checkpoint coalesced the
+    // AQE is off for the checkpoint (nothing of this plan runs outside
+    // the `withConf` scope). Under AQE the checkpoint coalesced the
     // final shuffle, so the fit's partition-ordered merge ran over other
     // partitions and the scores changed bits; and an AQE plan reports
     // UnknownPartitioning, so the flag window below shuffled the scored rows
@@ -91,12 +91,9 @@ object PcaReconstruction {
     // layout, the one cache() gave (Spark plans cached data without
     // final-stage coalescing): same bits, no exchange for the flag window.
     // The trade: joins inside `df` are planned statically here.
-    val spark = df.sparkSession
-    val aqe = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(aqe)
-    spark.conf.set(aqe, "false")
-    val seqs = try TimeSeriesOps.featureWindows(df, keys, order, Seq(target), seqLen).localCheckpoint()
-      finally prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    val seqs = GraftSession.withConf(df.sparkSession, "spark.sql.adaptive.enabled" -> "false") {
+      TimeSeriesOps.featureWindows(df, keys, order, Seq(target), seqLen).localCheckpoint()
+    }
 
     // One job: per-partition moments, merged on the driver in partition-id
     // order, so the fit's bits depend only on the checkpoint's layout. The

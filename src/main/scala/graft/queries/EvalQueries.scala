@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.functions.CleanFunctions
 import graft.functions.CleanFunctions.{exactSum, exactSumSql, round4, round4Sql, round6, round6Sql}
-import graft.operators.StatsOps
+import graft.operators.{GraphOps, StatsOps}
 import graft.sources.Tables
 import graft.streaming.StreamingAnomaly
 
@@ -1517,26 +1517,26 @@ object EvalQueries {
     // dedup_clusters fixpoint discipline.
     "nation_kcore" -> { (s, d) =>
       val e = tradeEdges(s, d).where(col("src") =!= col("dst"))
-      var und = e.select(col("src").as("a"), col("dst").as("b"))
-        .union(e.select(col("dst").as("a"), col("src").as("b"))).distinct()
-        .localCheckpoint()
-      // Early exit when a round removes no edge (r16 optimization):
-      // peeling only ever deletes rows, so an unchanged count is the
-      // fixpoint and every remaining round is a no-op — same result as
-      // the full 8-round unroll (the defined quantity), typically in 2-3
-      // rounds. The count is a cheap scan of the just-checkpointed
-      // blocks.
-      var remaining = und.count()
+      // Early exit when a round removes no edge: peeling only ever
+      // deletes rows, so an unchanged count is the fixpoint and every
+      // remaining round is a no-op — same result as the full 8-round
+      // unroll (the defined quantity), typically in 2-3 rounds. Each
+      // round's edge count is observed by the job that checkpoints it.
+      var (und, remaining) = GraphOps.checkpointCounting(
+        e.select(col("src").as("a"), col("dst").as("b"))
+          .union(e.select(col("dst").as("a"), col("src").as("b"))).distinct(),
+        lit(true))
       var stable = false
       for (_ <- 1 to 8 if !stable) {
         val surv = und.groupBy("a").agg(count(lit(1)).as("deg"))
           .where(col("deg") >= 3L).select(col("a").as("keep"))
-        und = und
-          .join(surv, col("a") === col("keep")).drop("keep")
-          .join(surv.withColumnRenamed("keep", "keepb"), col("b") === col("keepb"))
-          .drop("keepb")
-          .localCheckpoint()
-        val n = und.count()
+        val (next, n) = GraphOps.checkpointCounting(
+          und
+            .join(surv, col("a") === col("keep")).drop("keep")
+            .join(surv.withColumnRenamed("keep", "keepb"), col("b") === col("keepb"))
+            .drop("keepb"),
+          lit(true))
+        und = next
         stable = n == remaining
         remaining = n
       }

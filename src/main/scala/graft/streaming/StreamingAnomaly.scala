@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.GraftConfig
+import graft.{GraftConfig, GraftSession}
 import graft.operators.TimeSeriesOps
 import graft.operators.TimeSeriesOps.{BucketState, BurstState, CrostonState, CusumState,
   EwmaState, GarchState, HawkesState, HoltState, HwState, HystState, KalmanState}
@@ -388,15 +388,13 @@ object StreamingAnomaly {
     // while quartering the fixed state overhead; at production volume the
     // same knob is sized UP to keys x state-bytes / executor-memory. The
     // first micro-batch pins the width into the checkpoint, so restoring
-    // the session conf in `finally` cannot re-plan a running stream.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    // the session conf after the scope cannot re-plan a running stream.
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
       val q = out.writeStream.format("memory").queryName(queryName)
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", replayTempDir("graft-replay-ckpt")).start()
       try feed(q) finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
   }
 

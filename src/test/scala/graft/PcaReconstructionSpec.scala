@@ -1,8 +1,6 @@
 package graft
 
 import breeze.linalg.{eigSym, DenseMatrix => BDM}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,20 +108,10 @@ class PcaReconstructionSpec extends AnyFunSuite {
   }
 
   test("a warm detect runs at most 3 jobs: checkpoint, fit, result") {
-    val sc = spark.sparkContext
     def call() = PcaReconstruction.detect(
       mkEvents(150), Seq("user_id"), Seq("t"), "value", seqLen = 24, k = 4).collect()
     call()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      call()
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 3, s"${jobs.get} jobs")
+    val jobs = SparkTestSession.countJobs(call())
+    assert(jobs <= 3, s"$jobs jobs")
   }
 }

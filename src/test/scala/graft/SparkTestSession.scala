@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
@@ -19,10 +23,24 @@ object SparkTestSession {
 
   /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` on the
     * shared session, restoring the previous value afterwards. */
-  def withShufflePartitions[T](n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toLong)
-    try body finally spark.conf.set(key, prev)
+  def withShufflePartitions[T](n: Int)(body: => T): T =
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
+
+  /** Number of Spark jobs started while `body` runs. The listener bus is
+    * drained before and after, so jobs of earlier calls are not counted
+    * and every job of `body` is. */
+  def countJobs(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +22,7 @@ class DistributedSgdSpec extends AnyFunSuite {
 
   // Closures live in a top-level object so Spark's closure cleaner never
   // drags the (non-serializable) suite instance over the wire.
-  import DistributedSgdSpec.{divergingStep, lossOf}
+  import DistributedSgdSpec.{adamStep, divergingStep, lossOf, twoPassFit}
 
   test("epochScorer returns the BEST epoch, not the last (diverging curve)") {
     val last = DistributedSgd.fit(seqs, "xc", 4, Array(0.5), divergingStep)
@@ -78,6 +79,30 @@ class DistributedSgdSpec extends AnyFunSuite {
     assert(math.abs(adamP(1) - 1.0) < 0.5,
       s"Adam should make real progress on the tiny-gradient dim; p1=${adamP(1)}")
   }
+
+  test("the fused fit matches the two-pass loop bit for bit and selects the same epoch") {
+    for ((name, init, step) <- Seq(("diverging", 0.5, divergingStep _), ("adam", 8.0, adamStep _))) {
+      val (refBest, refEpoch, perEpoch) = twoPassFit(seqs, "xc", 5, Array(init), step, lossOf)
+      val got = DistributedSgd.fit(seqs, "xc", 5, Array(init), step, epochScorer = Some(lossOf))
+      assert(java.util.Arrays.equals(got, refBest), s"$name: ${got.toSeq} vs ${refBest.toSeq}")
+      val epochs = perEpoch.indices.filter(i => java.util.Arrays.equals(perEpoch(i), got)).map(_ + 1)
+      assert(epochs == Seq(refEpoch), s"$name: selected epochs $epochs, reference $refEpoch")
+      val last = DistributedSgd.fit(seqs, "xc", 5, Array(init), step)
+      assert(java.util.Arrays.equals(last, perEpoch.last), s"$name: last epoch without a scorer")
+    }
+  }
+
+  test("E epochs run E + 1 jobs with a scorer and E without") {
+    DistributedSgd.fit(seqs, "xc", 1, Array(0.5), divergingStep, epochScorer = Some(lossOf))
+    for (e <- Seq(1, 4)) {
+      val scored = graft.SparkTestSession.countJobs(
+        DistributedSgd.fit(seqs, "xc", e, Array(0.5), divergingStep, epochScorer = Some(lossOf)))
+      assert(scored == e + 1, s"$e epochs with a scorer: $scored jobs")
+      val plain = graft.SparkTestSession.countJobs(
+        DistributedSgd.fit(seqs, "xc", e, Array(0.5), divergingStep))
+      assert(plain == e, s"$e epochs without a scorer: $plain jobs")
+    }
+  }
 }
 
 private object DistributedSgdSpec {
@@ -90,4 +115,64 @@ private object DistributedSgdSpec {
   }
   val lossOf: Array[Double] => (Array[Double] => Double) =
     p => x => { val d = p(0) - x(0); d * d }
+
+  def adamStep(ep: Int, p: Array[Double], ws: Iterator[Array[Double]]): Array[Double] = {
+    val adam = new DistributedSgd.Adam(1, lr = 0.3)
+    val g = new Array[Double](1)
+    ws.foreach { x => g(0) = 2.0 * (p(0) - x(0)); adam.step(p, g) }
+    p
+  }
+
+  /** The best-epoch loop as a training pass and a separate loss pass per
+    * epoch: exact BigDecimal loss sums per partition, merged in partition
+    * order. Returns the best parameters, their 1-based epoch and every
+    * epoch's averaged parameters. */
+  def twoPassFit(seqs: DataFrame, seqCol: String, epochs: Int, init: Array[Double],
+                 partitionFit: (Int, Array[Double], Iterator[Array[Double]]) => Array[Double],
+                 mkErr: Array[Double] => (Array[Double] => Double))
+      : (Array[Double], Int, IndexedSeq[Array[Double]]) = {
+    import java.math.{BigDecimal => JBD, MathContext}
+    val sc = seqs.sparkSession.sparkContext
+    val idx = seqs.schema.fieldIndex(seqCol)
+    val trainRdd = seqs.rdd.map(_.getSeq[Double](idx).toArray).cache()
+    var params = init
+    var best: Array[Double] = null
+    var bestEpoch = 0
+    var bestLoss = Double.PositiveInfinity
+    val perEpoch = (1 to epochs).map { epoch =>
+      val bc = sc.broadcast(params)
+      val partResults = trainRdd.mapPartitionsWithIndex { (pid, rows) =>
+        if (rows.isEmpty) Iterator.empty
+        else {
+          var n = 0L
+          val p = partitionFit(epoch, bc.value.clone(), rows.map { x => n += 1; x })
+          Iterator.single((pid, p, n))
+        }
+      }.collect().sortBy(_._1)
+      bc.destroy()
+      val total = partResults.map(_._3).sum.toDouble
+      val acc = new Array[Double](params.length)
+      partResults.foreach { case (_, p, n) =>
+        val wgt = n / total
+        var k = 0
+        while (k < acc.length) { acc(k) += wgt * p(k); k += 1 }
+      }
+      params = acc
+      val bcl = sc.broadcast(params)
+      val parts = trainRdd.mapPartitionsWithIndex { (pid, rows) =>
+        val err = mkErr(bcl.value)
+        var s = JBD.ZERO
+        var n = 0L
+        rows.foreach { x => s = s.add(new JBD(err(x))); n += 1 }
+        if (n == 0) Iterator.empty else Iterator.single((pid, s, n))
+      }.collect().sortBy(_._1)
+      bcl.destroy()
+      val loss = parts.map(_._2).foldLeft(JBD.ZERO)(_.add(_))
+        .divide(JBD.valueOf(parts.map(_._3).sum), MathContext.DECIMAL128).doubleValue
+      if (loss < bestLoss) { bestLoss = loss; best = params; bestEpoch = epoch }
+      params
+    }
+    trainRdd.unpersist(blocking = false)
+    (best, bestEpoch, perEpoch)
+  }
 }
