@@ -125,6 +125,26 @@ object PlanAudit {
     // promotes at runtime when a measured side is genuinely small.
     "ann_ivf_nprobe_sweep")
 
+  /** Queries that may hash-exchange their rows at most this many times.
+    * `Pipeline.prepare` (run_pipeline) and the keep-first/last dedup
+    * shuffle and sort the events once, on the series key, and every later
+    * window reuses that layout: a second hash exchange means some window
+    * stopped sharing the series partitioning (a dedup partitioned by
+    * `(keys, tsExpr)` would cost run_pipeline a second one). The final
+    * `orderBy`'s range exchange is not counted.
+    */
+  val HashExchangeBudget: Map[String, Int] =
+    Map("run_pipeline" -> 1, "ts_dedup_first" -> 1, "ts_dedup_last" -> 1)
+
+  /** Hash-partitioned shuffle exchanges in a physical plan. */
+  def hashExchanges(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    plan.collect {
+      case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }.size
+  }
+
   /** Corpus tables scanned with NO Aggregate/GlobalLimit on the path from
     * the scan up to this subtree's root. The walk stops at any node that
     * structurally bounds cardinality — everything below it is reduced
@@ -211,12 +231,15 @@ object PlanAudit {
       "CartesianProduct (unbounded pair blow-up)" ->
         planStr.contains("CartesianProduct")
     ).collect { case (msg, true) => msg }
+    val overBudget = HashExchangeBudget.get(name).map(b => b -> hashExchanges(plan)).collect {
+      case (b, n) if n > b => s"$n hash exchanges, budget $b (a window left the series layout?)"
+    }
     val allowed = BroadcastContract.getOrElse(name, Set.empty)
     val cb = corpusBroadcasts(qe.optimizedPlan)
       .filterNot(t => allowed.exists(t.contains))
       .map(t =>
         s"hint-forced broadcast of unreduced corpus-proportional table '$t' (OOM at 100x scale)")
-    base ++ cb
+    base ++ overBudget ++ cb
   }
 
   def main(args: Array[String]): Unit = {

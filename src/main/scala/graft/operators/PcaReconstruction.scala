@@ -91,6 +91,9 @@ object PcaReconstruction {
     // layout, the one cache() gave (Spark plans cached data without
     // final-stage coalescing): same bits, no exchange for the flag window.
     // The trade: joins inside `df` are planned statically here.
+    // Measured: a lazy `localCheckpoint(eager = false)`, materialized by the
+    // moment fold's own job, was no faster (ts_batch pca call medians
+    // 316/315 ms lazy vs 310/320 ms eager, two alternating batches, local[4]).
     val seqs = GraftSession.withConf(df.sparkSession, "spark.sql.adaptive.enabled" -> "false") {
       TimeSeriesOps.featureWindows(df, keys, order, Seq(target), seqLen).localCheckpoint()
     }

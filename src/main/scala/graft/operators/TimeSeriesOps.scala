@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, FloatType, LongType, StructField, StructType}
 
 import graft.functions.CleanFunctions.safeDiv
 
@@ -94,11 +94,16 @@ object TimeSeriesOps {
   /** Missing-value strategies (ref: preprocessing.py:125-173
     * handle_missing_values). ffill/bfill leave leading/trailing nulls ->
     * the reference then zero-fills the residue (preprocessing.py:170-171),
-    * controlled here by `residualZero`.
+    * controlled here by `residualZero`. A NaN target is missing, as in
+    * pandas: it is filled like a null (a kept NaN would turn the series'
+    * mean and its min-max scale into NaN).
     */
   def fill(df: DataFrame, keys: Seq[String], order: Seq[String],
            target: String, strategy: String, residualZero: Boolean = true): DataFrame = {
-    val t = col(target)
+    val t = df.schema(target).dataType match {
+      case dt @ (DoubleType | FloatType) => nanvl(col(target), lit(null).cast(dt))
+      case _ => col(target)
+    }
     val filled: Column = strategy match {
       case "ffill" =>
         val w = seriesWindow(keys, order).rowsBetween(Window.unboundedPreceding, 0)
@@ -208,18 +213,34 @@ object TimeSeriesOps {
   }
 
   /** Duplicate-timestamp resolution keep=first/keep=last (ref:
-    * preprocessing.py:76-81). `tie` breaks ordering among duplicates so the
-    * result is deterministic under any partitioning.
+    * preprocessing.py:76-81): of each run of rows with the same `keys` and
+    * `tsExpr` (nulls form one run), keep the first (or last) row in
+    * `tie` order. `tie` breaks ordering among duplicates so the result is
+    * deterministic under any partitioning.
+    *
+    * Scale shape: the series window, partitioned by `keys` alone and
+    * ordered by `tsExpr` then `tie` (a tie column equal to `tsExpr`
+    * dropped), so with the default `PipelineConfig` it is the
+    * `(user_id, ts, event_id)` sort that [[fill]], the lags, the rolling
+    * stats and the scaling reuse: `Pipeline.prepare` shuffles and sorts
+    * its events once. `first` keeps a run's first row (`lag`), `last` its
+    * last (`lead`, plus the partition's last row); `DESC NULLS LAST` on
+    * `tie` is the exact reverse of this ascending order, so this keeps
+    * the row a per-`(keys, tsExpr)` `row_number` over `tie` descending
+    * kept.
     */
   def dedupIndex(df: DataFrame, keys: Seq[String], tsExpr: Column,
                  tie: Seq[String], keep: String): DataFrame = {
-    val ord = keep match {
-      case "first" => tie.map(col)
-      case "last"  => tie.map(c => col(c).desc)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(tsExpr +: tie.map(col).filterNot(_ == tsExpr): _*)
+    val (edge, next) = keep match {
+      case "first" => (row_number().over(w) === 1, lag(tsExpr, 1).over(w))
+      case "last"  => (lead(lit(true), 1).over(w).isNull, lead(tsExpr, 1).over(w))
       case other   => throw new IllegalArgumentException(s"unknown keep: $other")
     }
-    val w = Window.partitionBy(keys.map(col) :+ tsExpr: _*).orderBy(ord: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    df.withColumns(Map("__edge" -> edge, "__next" -> next))
+      .filter(col("__edge") || !(col("__next") <=> tsExpr))
+      .drop("__edge", "__next")
   }
 
   /** Duplicate-timestamp resolution by MEAN of numeric columns, first of

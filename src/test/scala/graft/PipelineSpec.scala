@@ -94,38 +94,53 @@ class PipelineSpec extends AnyFunSuite {
     dir.toFile.delete()
   }
 
-  // Two sine series with a spike, plus one degenerate series (user 3): a
-  // constant one (its scaled values are all null), or one with a null and
-  // a NaN target. Every model must finish, emit nothing for user 3 and give
-  // users 1 and 2 the rows of a run without user 3, bit for bit. With
-  // nothing left to fit, the model fails with a message.
+  // Two sine series with a spike, plus a third series (user 3).
+  private val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+  private def series(u: Long, v: Int => java.lang.Double) = (0 until 120).map(i =>
+    (u * 1000 + i, u, new java.sql.Timestamp(t0.getTime + i * 3600000L), v(i)))
+  private val base = Seq(1L, 2L).flatMap(u => series(u, i =>
+    10.0 + 5.0 * math.sin(2 * math.Pi * (i % 24) / 24.0) +
+      u * 0.3 * math.cos(i / 7.0) + (if (u == 1 && i == 90) 40.0 else 0.0)))
+  private def rows(cfg: PipelineConfig,
+                   data: Seq[(Long, Long, java.sql.Timestamp, java.lang.Double)]) = {
+    import spark.implicits._
+    Pipeline.run(data.toDF("event_id", "user_id", "ts", "value"), cfg)
+      .select("user_id", "event_id", "recon_err", "is_anomaly")
+      .collect().map(_.mkString(",")).sorted.toSeq
+  }
+  private def modelCfg(model: String) = PipelineConfig(lags = Seq(1, 2), rollingWindows = Seq(3),
+    seqLen = 12, pcaComponents = 2, model = model)
+
+  // A constant user 3 (its scaled values are all null) is degenerate: every
+  // model must finish, emit nothing for user 3 and give users 1 and 2 the
+  // rows of a run without user 3, bit for bit. With nothing left to fit,
+  // the model fails with a message.
   for (model <- Seq("pca", "mlp", "lstm")) {
     test(s"$model run drops a degenerate series and leaves the other series' rows unchanged") {
-      import spark.implicits._
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      def series(u: Long, v: Int => java.lang.Double) = (0 until 120).map(i =>
-        (u * 1000 + i, u, new java.sql.Timestamp(t0.getTime + i * 3600000L), v(i)))
-      val sine = (u: Long) => series(u, i => 10.0 + 5.0 * math.sin(2 * math.Pi * (i % 24) / 24.0) +
-        u * 0.3 * math.cos(i / 7.0) + (if (u == 1 && i == 90) 40.0 else 0.0))
-      val base = sine(1) ++ sine(2)
+      val cfg = modelCfg(model)
       val constant = series(3, _ => 7.0)
-      val nullNan = series(3, i => if (i == 40) null else if (i == 70) Double.NaN
-                                   else 10.0 + math.sin(i / 5.0))
-      val cfg = PipelineConfig(lags = Seq(1, 2), rollingWindows = Seq(3), seqLen = 12,
-        pcaComponents = 2, model = model)
-      def rows(data: Seq[(Long, Long, java.sql.Timestamp, java.lang.Double)]) =
-        Pipeline.run(data.toDF("event_id", "user_id", "ts", "value"), cfg)
-          .select("user_id", "event_id", "recon_err", "is_anomaly")
-          .collect().map(_.mkString(",")).sorted.toSeq
-      val expected = rows(base)
+      val expected = rows(cfg, base)
       assert(expected.nonEmpty)
-      for ((name, degenerate) <- Seq("constant" -> constant, "null and NaN" -> nullNan)) {
-        val got = rows(base ++ degenerate)
-        assert(!got.exists(_.startsWith("3,")), s"$name series emitted rows")
-        assert(got == expected, s"$name series changed the other series' rows")
-      }
-      val e = intercept[IllegalArgumentException](rows(constant))
+      val got = rows(cfg, base ++ constant)
+      assert(!got.exists(_.startsWith("3,")), "constant series emitted rows")
+      assert(got == expected, "constant series changed the other series' rows")
+      val e = intercept[IllegalArgumentException](rows(cfg, constant))
       assert(e.getMessage.contains("no complete windows"))
+    }
+  }
+
+  // A NaN target is missing, like a null: user 3 with a NaN at hour 70
+  // gives the rows of the same series with a null there, its own included
+  // (a kept NaN would turn its min-max scale NaN and drop all 120 rows).
+  for (model <- Seq("pca", "mlp", "lstm")) {
+    test(s"$model run fills a NaN target like a null") {
+      val cfg = modelCfg(model)
+      def user3(at70: java.lang.Double) = series(3, i =>
+        if (i == 40) null else if (i == 70) at70 else 10.0 + math.sin(i / 5.0))
+      val expected = rows(cfg, base ++ user3(null))
+      assert(expected.exists(_.startsWith("3,")), "the series with nulls emitted no rows")
+      assert(rows(cfg, base ++ user3(Double.NaN)) == expected,
+        "a NaN target gave other rows than a null there")
     }
   }
 
