@@ -70,14 +70,6 @@ object PlanAudit {
 
   /** Queries whose SortMergeJoin-without-any-broadcast plan is the
     * CORRECT scale shape, not a missed broadcast:
-    *  - text_split_nodup: joins all docs against the label-propagation
-    *    fixpoint output — a corpus-proportional side (cluster membership
-    *    grows with the corpus) behind a localCheckpoint whose stats are
-    *    unknown. Forcing a broadcast would be the exact 100x-scale OOM
-    *    the corpus-broadcast rule exists to prevent; AQE still promotes
-    *    at runtime when the measured side is genuinely small.
-    *  - dedup_canonical: same shape — docs left-join the label-propagation
-    *    fixpoint output (corpus-proportional, checkpointed, unknown stats).
     *  - events_attribution: FULL OUTER join of the first-touch and
     *    last-touch per-channel aggregates. Spark's BroadcastHashJoin
     *    cannot execute a full-outer join from either side, so SMJ is the
@@ -88,14 +80,15 @@ object PlanAudit {
     *    only physical choice, both sides O(#event_types).
     * (emb_lof left this list when its candidate stage became the
     * multi-probe LSH bucket equi-join: nothing is hint-forced, so the
-    * planner is free to pick BHJ for the small sides it measures.)
+    * planner is free to pick BHJ for the small sides it measures.
+    * text_split_nodup, dedup_canonical and dedup_cluster_sizes left it
+    * when GraphOps.minLabelPropagate's result started carrying its exact
+    * row count as its size estimate: the docs-vs-labels join is planned
+    * as a broadcast only while the measured label side is under the
+    * broadcast threshold, and as a SortMergeJoin above it.)
     */
-  val SmjContract: Set[String] = Set("text_split_nodup", "dedup_canonical",
+  val SmjContract: Set[String] = Set(
     "events_attribution", "events_incremental_agg",
-    // dedup_cluster_sizes: composes clusterLabels — the same docs-vs-
-    // label-propagation-fixpoint left join as dedup_canonical above
-    // (corpus-proportional, checkpointed, unknown stats).
-    "dedup_cluster_sizes",
     // dedup_semantic: the SemDeDup pairwise stage equi-joins the corpus
     // against ITSELF on cluster id — both sides corpus-proportional by
     // definition, so SMJ/shuffled-hash on cluster is the scale shape;
@@ -113,8 +106,8 @@ object PlanAudit {
     "dedup_method_agreement",
     // emb_dbscan_stability: joins the loose-level and tight-level
     // cluster-label frames — both corpus-proportional label-propagation
-    // outputs behind localCheckpoints (unknown stats), the exact
-    // dedup_canonical shape. The vec_id equi-join is the scale shape;
+    // outputs, joined after further local checkpoints whose stats are
+    // the plans' estimates. The vec_id equi-join is the scale shape;
     // AQE promotes at runtime when a side is measured small.
     "emb_dbscan_stability",
     // ann_ivf_nprobe_sweep: the recall join intersects the IVF top-k

@@ -344,12 +344,12 @@ object DedupQueries {
     },
 
     // Near-duplicate GROUPS: simhash pairs as edges, cluster id = min
-    // doc_id in the connected component, computed by min-label propagation
-    // iterated to FIXPOINT (GraphOps.minLabelPropagate — convergence is a
-    // changed-label count, capped at 10 rounds). A fixed round count would
-    // silently split chains longer than the round count; the fixpoint is
-    // the unique min-reachable-id labeling, which the oracle replicates
-    // with a recursive transitive-closure CTE.
+    // doc_id in the connected component (GraphOps.minLabelPropagate: a
+    // one-task union-find below 50,000 symmetrized edges, min-label
+    // propagation to FIXPOINT above). A fixed round count would silently
+    // split chains longer than the round count; the labeling is the
+    // unique min-reachable-id fixpoint, which the oracle replicates with a
+    // recursive transitive-closure CTE.
     "dedup_clusters" -> { (s, d) =>
       val pairs = graft.operators.CorpusDedup
         .nearDupPairs(Tables.documents(s, d), "doc_id", "text")

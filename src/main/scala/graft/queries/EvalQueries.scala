@@ -1522,7 +1522,7 @@ object EvalQueries {
       // remaining round is a no-op — same result as the full 8-round
       // unroll (the defined quantity), typically in 2-3 rounds. Each
       // round's edge count is observed by the job that checkpoints it.
-      var (und, remaining) = GraphOps.checkpointCounting(
+      var (und, Seq(remaining)) = GraphOps.checkpointCounting(
         e.select(col("src").as("a"), col("dst").as("b"))
           .union(e.select(col("dst").as("a"), col("src").as("b"))).distinct(),
         lit(true))
@@ -1530,7 +1530,7 @@ object EvalQueries {
       for (_ <- 1 to 8 if !stable) {
         val surv = und.groupBy("a").agg(count(lit(1)).as("deg"))
           .where(col("deg") >= 3L).select(col("a").as("keep"))
-        val (next, n) = GraphOps.checkpointCounting(
+        val (next, Seq(n)) = GraphOps.checkpointCounting(
           und
             .join(surv, col("a") === col("keep")).drop("keep")
             .join(surv.withColumnRenamed("keep", "keepb"), col("b") === col("keepb"))
@@ -1553,9 +1553,9 @@ object EvalQueries {
     // BLOCKED equi-join — block key (part, week), df fence (2 ≤ block
     // size ≤ CoPurchaseMaxBlock distinct customers), so pairs per block
     // are O(fence²) and block count scales with the corpus; nothing is
-    // corpus². Components from GraphOps.minLabelPropagate (min-label
-    // fixpoint + pointer jumping, O(log diameter) rounds, per-round
-    // localCheckpoint); component id = min customer key, so the oracle's
+    // corpus². Components from GraphOps.minLabelPropagate (one-task
+    // union-find below 50,000 symmetrized edges, min-label fixpoint rounds
+    // above); component id = min customer key, so the oracle's
     // recursive-CTE closure matches exactly.
     "customer_components" -> { (s, d) =>
       coPurchaseComponents(s, d)

@@ -96,4 +96,23 @@ class CorpusDedupSpec extends AnyFunSuite {
       assert(split(1L) == split(3L), s"near-dups split apart at trainPct=$pct")
     }
   }
+
+  test("a warm leakageSafeSplit on a small corpus runs at most 12 jobs") {
+    // Three near-dup chains of 8 (each member substitutes one more token
+    // than the previous one), an exact copy and 20 unrelated docs: far
+    // below the one-task gate, so label propagation runs no rounds.
+    val chains = (0 until 3).flatMap { c =>
+      val toks = (1 to 60).map(i => s"c${c}t$i")
+      (0 until 8).map(k => (100L * c + k, toks.zipWithIndex.map { case (t, i) => if (i < k) s"sub$i" else t }.mkString(" ")))
+    }
+    val singles = (1 to 20).map(d => (1000L + d, (1 to 60).map(i => s"s${d}w$i").mkString(" ")))
+    val docs = (chains ++ singles :+ (2000L -> chains.head._2)).toDF("doc_id", "text")
+    def call() = CorpusDedup.leakageSafeSplit(docs).collect()
+    val cluster = call().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cluster.size == docs.count() && cluster(2000L) == 0L)
+    val chainClusters = chains.map(d => cluster(d._1)).distinct.size
+    assert(chainClusters < chains.size / 2, s"$chainClusters clusters over the chains")
+    val jobs = SparkTestSession.countJobs(call())
+    assert(jobs <= 12, s"$jobs jobs")
+  }
 }

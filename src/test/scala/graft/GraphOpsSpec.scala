@@ -19,6 +19,33 @@ class GraphOpsSpec extends AnyFunSuite with TimeLimits {
   private def labelsOf(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** Labels from the distributed round loop, whatever the graph's size. */
+  private def viaLoop(edges: DataFrame, maxRounds: Int = 10): Map[Long, Long] = {
+    val (sym, nEdges) = GraphOps.symmetrized(edges)
+    labelsOf(GraphOps.labelRounds(sym, nEdges, maxRounds))
+  }
+
+  /** Driver-side union-find reference: component label = min id. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(v: Long): Long = {
+      var r = parent.getOrElseUpdate(v, v)
+      while (parent(r) != r) r = parent(r)
+      r
+    }
+    edges.foreach { case (x, y) =>
+      val (rx, ry) = (find(x), find(y))
+      if (rx != ry) { parent(math.max(rx, ry)) = math.min(rx, ry) }
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  /** A path over `n` ids in random order. */
+  private def shuffledPath(n: Int, seed: Long): Seq[(Long, Long)] = {
+    val order = new scala.util.Random(seed).shuffle((1L to n.toLong).toVector)
+    order.zip(order.tail)
+  }
+
   test("chain cluster gets ONE label at fixpoint (fixed-round would split it)") {
     // A 5-hop chain: diameter > 2, so two fixed propagation rounds would
     // leave split labels; the fixpoint must label every node 1.
@@ -40,10 +67,12 @@ class GraphOpsSpec extends AnyFunSuite with TimeLimits {
   test("round cap bounds the iteration count") {
     // A 30-hop path with maxRounds=3: must terminate (no hang) even though
     // 3 rounds cannot reach the fixpoint; labels are monotone non-increasing.
+    // Below the one-task gate the public call never runs rounds, so the
+    // cap is driven through the round loop itself.
     val edges = (1L until 30L).map(i => (i, i + 1)).toDF("x", "y")
-    val labels = GraphOps.minLabelPropagate(edges, maxRounds = 3)
-    assert(labels.count() == 30)
-    assert(labels.filter(col("lbl") > col("id")).count() == 0)
+    val labels = viaLoop(edges, maxRounds = 3)
+    assert(labels.size == 30)
+    assert(labels.forall { case (id, lbl) => lbl <= id })
   }
 
   test("df-pruning bounds hot-shingle candidate pairs") {
@@ -64,18 +93,18 @@ class GraphOpsSpec extends AnyFunSuite with TimeLimits {
 
   test("checkpointCounting observes the count on the checkpoint's own job") {
     failAfter(2.minutes) {
-      val (r, n) = GraphOps.checkpointCounting(spark.range(0, 1000).toDF("v"), col("v") % 3 === 0)
+      val (r, Seq(n)) = GraphOps.checkpointCounting(spark.range(0, 1000).toDF("v"), col("v") % 3 === 0)
       assert(n == 334 && r.count() == 1000)
       // An AQE join + aggregate, and inputs that are empty before and at
       // run time.
       val a = spark.range(0, 500).select((col("id") % 50).as("k"), col("id").as("v"))
       val b = spark.range(0, 50).select(col("id").as("k"), (col("id") * 2).as("w"))
       val agg = a.join(b, "k").groupBy("k").agg(sum("w").as("s"))
-      val (aggCp, nBig) = GraphOps.checkpointCounting(agg, col("s") >= 500)
+      val (aggCp, Seq(nBig)) = GraphOps.checkpointCounting(agg, col("s") >= 500)
       assert(nBig == aggCp.filter(col("s") >= 500).count() && nBig == 25)
-      val (_, nEmpty) = GraphOps.checkpointCounting(Seq.empty[(Long, Long)].toDF("x", "y"), lit(true))
+      val (_, Seq(nEmpty)) = GraphOps.checkpointCounting(Seq.empty[(Long, Long)].toDF("x", "y"), lit(true))
       assert(nEmpty == 0)
-      val (_, nJoinEmpty) = GraphOps.checkpointCounting(
+      val (_, Seq(nJoinEmpty)) = GraphOps.checkpointCounting(
         a.join(b.where(col("w") < 0), "k").groupBy("k").count(), lit(true))
       assert(nJoinEmpty == 0)
     }
@@ -103,19 +132,14 @@ class GraphOpsSpec extends AnyFunSuite with TimeLimits {
     val pairs = Seq(2, 2, 2).map(take).map(p => p(0) -> p(1))
     val loop = take(1).map(v => v -> v)
     val all = rng.shuffle(chains ++ stars ++ blobs ++ pairs ++ loop ++ chains.take(5))
-    // driver-side union-find, component label = min id
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(v: Long): Long = { val p = parent.getOrElseUpdate(v, v); if (p == v) v else { val r = find(p); parent(v) = r; r } }
-    all.foreach { case (x, y) =>
-      val (rx, ry) = (find(x), find(y))
-      if (rx != ry) { parent(math.max(rx, ry)) = math.min(rx, ry) }
-    }
-    val expected = parent.keys.map(v => v -> find(v)).toMap
+    val expected = unionFind(all)
     for (n <- Seq(1, 13)) {
-      val got = SparkTestSession.withShufflePartitions(n) {
-        labelsOf(GraphOps.minLabelPropagate(all.toDF("x", "y").repartition(3)))
+      val (got, loop) = SparkTestSession.withShufflePartitions(n) {
+        val edges = all.toDF("x", "y").repartition(3)
+        (labelsOf(GraphOps.minLabelPropagate(edges)), viaLoop(edges))
       }
       assert(got == expected, s"at $n shuffle partitions")
+      assert(loop == expected, s"round loop at $n shuffle partitions")
     }
   }
 
@@ -128,11 +152,87 @@ class GraphOpsSpec extends AnyFunSuite with TimeLimits {
   }
 
   test("a warm call on a fixed chain runs at most 30 jobs") {
-    // The edge and changed-label counts come off the checkpoint jobs.
+    // The edge and changed-label counts come off the checkpoint jobs. The
+    // chain is below the one-task gate, so the rounds are driven through
+    // the round loop: the bound is the loop's.
+    val edges = (1L until 40L).map(i => (i, i + 1)).toDF("x", "y")
+    def call() = viaLoop(edges)
+    assert(call().values.toSet == Set(1L))
+    val jobs = SparkTestSession.countJobs(call())
+    assert(jobs <= 30, s"$jobs jobs")
+  }
+
+  test("below the gate a warm call runs 3 jobs: edges, one-task labels, collect") {
     val edges = (1L until 40L).map(i => (i, i + 1)).toDF("x", "y")
     def call() = labelsOf(GraphOps.minLabelPropagate(edges))
     assert(call().values.toSet == Set(1L))
     val jobs = SparkTestSession.countJobs(call())
-    assert(jobs <= 30, s"$jobs jobs")
+    assert(jobs == 3, s"$jobs jobs")
+  }
+
+  test("shuffled-id chains of 60/35/29 nodes get one label each at the default maxRounds") {
+    // The round loop needs rounds linear in such a chain's length (a
+    // 60-node one: ~23), past the default cap; one task has no cap.
+    val chains = Seq(60, 35, 29).zipWithIndex.flatMap { case (n, i) =>
+      shuffledPath(n, 31L + i).map { case (x, y) => (x + 1000L * i, y + 1000L * i) }
+    }
+    val labels = labelsOf(GraphOps.minLabelPropagate(chains.toDF("x", "y")))
+    assert(labels == unionFind(chains))
+    assert(labels.values.toSet == Set(1L, 1001L, 2001L))
+  }
+
+  test("a 20,000-node path with shuffled ids is labeled in one task") {
+    failAfter(3.minutes) {
+      val path = shuffledPath(20000, 7L)
+      assert(2L * path.size < GraphOps.EdgesPerRoundPartition)
+      val edges = path.toDF("x", "y")
+      var labels = Map.empty[Long, Long]
+      val jobs = SparkTestSession.countJobs { labels = labelsOf(GraphOps.minLabelPropagate(edges)) }
+      assert(labels.size == 20000 && labels.values.toSet == Set(1L))
+      assert(jobs <= 4, s"$jobs jobs")
+    }
+  }
+
+  test("one-task labels equal the round loop's and a union-find's on 30 seeded random graphs") {
+    failAfter(5.minutes) {
+      val rng = new scala.util.Random(9090)
+      for (g <- 1 to 30) {
+        val n = 2 + rng.nextInt(24)
+        val ids = rng.shuffle((1L to 500L).toVector).take(n)
+        // a random forest (some nodes start a new tree), plus extra edges,
+        // self-loops and repeats
+        val forest = (1 until n).filter(_ => rng.nextInt(5) > 0).map(i => ids(i) -> ids(rng.nextInt(i)))
+        val extra = Seq.fill(rng.nextInt(n))(ids(rng.nextInt(n)) -> ids(rng.nextInt(n)))
+        val all = rng.shuffle(forest ++ extra ++ Seq(ids.head -> ids.head))
+        val edges = all.toDF("x", "y")
+        val expected = unionFind(all)
+        assert(labelsOf(GraphOps.minLabelPropagate(edges)) == expected, s"graph $g one task")
+        assert(viaLoop(edges, maxRounds = n + 1) == expected, s"graph $g round loop")
+      }
+    }
+  }
+
+  test("the round loop reaches a 60-node shuffled-id path's fixpoint at maxRounds = 60") {
+    // Each round's checkpoint carries its exact row count as its size
+    // estimate; with the estimate of the plan it materialized, the join
+    // estimates compounded round over round and planning stalled past ~12
+    // rounds.
+    failAfter(3.minutes) {
+      val path = shuffledPath(60, 23L)
+      assert(viaLoop(path.toDF("x", "y"), maxRounds = 60) == unionFind(path))
+    }
+  }
+
+  test("an edge with a null endpoint fails the call, counted on the edge job") {
+    failAfter(2.minutes) {
+      for (edges <- Seq(Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null)),
+                        Seq[(java.lang.Long, java.lang.Long)]((null, 5L), (5L, 6L)))) {
+        val e = intercept[IllegalArgumentException](GraphOps.minLabelPropagate(edges.toDF("x", "y")))
+        assert(e.getMessage.contains("minLabelPropagate: 1 null endpoint"), e.getMessage)
+      }
+      val clean = Seq((1L, 2L), (2L, 3L)).toDF("x", "y")
+      GraphOps.symmetrized(clean)
+      assert(SparkTestSession.countJobs(GraphOps.symmetrized(clean)) == 1)
+    }
   }
 }
