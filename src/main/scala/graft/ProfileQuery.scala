@@ -11,6 +11,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: sbt "runMain graft.ProfileQuery <name> [<name>...]"
   *        SPARK_GRAFT_PROFILE_REPS=2 to repeat (first rep pays codegen).
+  * Each rep ends with one `{"profile": name, "rep", "wall_s", "jobs",
+  * "job_s", "gap_s"}` JSON line.
   */
 object ProfileQuery {
 
@@ -75,6 +77,11 @@ object ProfileQuery {
         }
         val tailGap = t1 - prevEnd
         if (tailGap > 50) println(f"  [tail gap ${tailGap / 1000.0}%.3f s]")
+        // One JSON line per rep, so two runs' dumps diff mechanically
+        // (grep '^{"profile"').
+        println(f"""{"profile":"$name","rep":$rep,"wall_s":${(t1 - t0) / 1000.0}%.3f,""" +
+          f""""jobs":${recs.length},"job_s":${jobSum / 1000.0}%.3f,""" +
+          f""""gap_s":${(t1 - t0 - jobSum) / 1000.0}%.3f}""")
       }
     }
     spark.stop()

@@ -19,15 +19,20 @@ import graft.functions.{CleanFunctions, TextFunctions}
   *    cosine re-rank inside probed buckets. The 100 TB path: buckets
   *    partition the corpus.
   *  - IVF (coarse-quantizer cells + nprobe): see [[IvfIndex]] — fit,
-  *    assign with `IvfIndex.cellExpr`, probe nearest cells, re-rank, as
-  *    composed by the `ann_ivf_topk` query.
+  *    assign with `IvfIndex.cellExpr`; the nprobe probe and the re-rank
+  *    are SimilarityQueries' `ivfProbe` / `ivfScored`, ranked by
+  *    [[ranked]] under the `ann_ivf_topk` query.
   *
   * The `ann_topk_cosine` / `ann_lsh_topk` driver entries delegate here,
   * so this surface is DuckDB-oracle-checked.
   */
 object AnnSearch {
 
-  private def ranked(scored: DataFrame, k: Int): DataFrame = {
+  /** Per-query top-k of (q_id, n_id, score) rows: rank `rk` by score
+    * descending, ties on n_id, sorted by (q_id, rk) — the one output
+    * contract of every top-k search here and of the IVF queries.
+    */
+  private[graft] def ranked(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(desc("score"), col("n_id"))
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
@@ -87,6 +92,18 @@ object AnnSearch {
   def twoBitFlipPairs(np: Int): Seq[(Int, Int)] =
     (for { p <- 0 until np; q <- p + 1 until np } yield (p, q))
       .take(MaxTwoBitProbes)
+
+  /** The probe list of a `bucket` column over `np` planes: the bucket
+    * itself, its `np` 1-bit flips and the capped 2-bit flips
+    * ([[twoBitFlipPairs]]), as one array to explode. Shared by
+    * [[lshTopK]] and the blocked kNN candidate stage.
+    */
+  private[graft] def probeBuckets(np: Int): Column = {
+    val flips = (0 until np).map(p => col("bucket").bitwiseXOR(lit(1L << p))) ++
+      twoBitFlipPairs(np).map { case (p, q) =>
+        col("bucket").bitwiseXOR(lit((1L << p) | (1L << q))) }
+    array(col("bucket") +: flips: _*)
+  }
 
   /** DuckDB twin of [[twoBitFlipPairs]]'s cap, as a predicate over plane
     * columns `a.p < b.p` with `np` in scope: lex-rank(a, b) =
@@ -152,14 +169,10 @@ object AnnSearch {
       TextFunctions.vecNorm(col(embCol)).as("nrm"),
       TextFunctions.packBits((0 until np).map(p =>
         TextFunctions.lshSign(col(embCol), p))).as("bucket"))
-    val flips: Seq[Column] =
-      (0 until np).map(p => col("bucket").bitwiseXOR(lit(1L << p))) ++
-        twoBitFlipPairs(np).map { case (p, q) =>
-          col("bucket").bitwiseXOR(lit((1L << p) | (1L << q))) }
     val probes = sb.filter(queryPred)
       .select(col(idCol).as("q_id"), col(embCol).as("q_emb"),
         col("nrm").as("q_nrm"),
-        explode(array(col("bucket") +: flips: _*)).as("pbucket"))
+        explode(probeBuckets(np)).as("pbucket"))
     // No broadcast hint on the probe side: it is corpus-proportional
     // (|queries| x (1 + np + np(np-1)/2) rows), so a forced broadcast
     // would OOM once the corpus — and with it the query batch — grows

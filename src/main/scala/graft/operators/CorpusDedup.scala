@@ -38,19 +38,16 @@ object CorpusDedup {
       .drop("__canonical")
   }
 
-  /** (id, chunk index, chunk value, full signature) for banded matching —
-    * the single home of the 6 x 10-bit banding used by CorpusDedup AND
-    * the dedup_simhash / dedup_clusters queries.
+  /** (id, chunk index, chunk value, full signature) for banded matching:
+    * spread + per-doc simhash + [[simhashBands]], checkpointed. Shared by
+    * [[run]], [[nearDupPairs]] and the `dedup_simhash` query.
     */
   def simhashChunks(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // Per-doc simhash is the expensive map work of the whole family;
     // spread guards the single-file case where the scan gives one task.
     val sim = graft.sources.Tables.spread(docs, col(idCol)).select(col(idCol),
       TextFunctions.simhash60(TextFunctions.tokens(col(textCol))).as("sig"))
-    sim.select(col(idCol), col("sig"), explode(array(
-      (0 until SimhashChunks).map(c =>
-        struct(lit(c).as("c"), shiftright(col("sig"), c * 10).bitwiseAND(lit(1023L)).as("v"))): _*)).as("ck"))
-      .select(col(idCol), col("sig"), col("ck.c").as("c"), col("ck.v").as("v"))
+    simhashBands(sim, idCol)
       // localCheckpoint (r17): every consumer self-joins this table, and
       // the per-doc tokenize+simhash sits ABOVE the spread exchange, so
       // both join branches recomputed it (profiled as parallel ~0.9 s
@@ -62,23 +59,31 @@ object CorpusDedup {
       .localCheckpoint()
   }
 
-  /** Ids dropped by near-dup stage: the larger id of every candidate pair
-    * within `maxHamming` (<= SimhashMaxHamming for guaranteed recall).
+  /** The single home of the 6 x 10-bit banding: (id, sig) rows to lazy
+    * (id, sig, c, v) rows, one per chunk. Text simhash ([[simhashChunks]])
+    * and the `mm_phash_dedup` frame signatures both band through here.
     */
-  def nearDupDropped(docs: DataFrame, idCol: String, textCol: String,
-                     maxHamming: Int = SimhashMaxHamming): DataFrame = {
-    require(maxHamming <= SimhashMaxHamming,
-      s"maxHamming=$maxHamming exceeds the $SimhashChunks-chunk banding's guaranteed recall bound $SimhashMaxHamming")
-    val chunks = simhashChunks(docs, idCol, textCol)
+  private[graft] def simhashBands(sigs: DataFrame, idCol: String): DataFrame =
+    sigs.select(col(idCol), col("sig"), explode(array(
+      (0 until SimhashChunks).map(c =>
+        struct(lit(c).as("c"), shiftright(col("sig"), c * 10).bitwiseAND(lit(1023L)).as("v"))): _*)).as("ck"))
+      .select(col(idCol), col("sig"), col("ck.c").as("c"), col("ck.v").as("v"))
+
+  /** The single home of the chunk self-join: distinct (x < y, hd) pairs
+    * sharing a chunk, hamming distance `hd` <= `maxHamming`. Lazy.
+    */
+  private[graft] def simhashPairs(chunks: DataFrame, idCol: String, maxHamming: Int): DataFrame =
     chunks.as("a").join(chunks.as("b"),
-        col(s"a.$idCol") < col(s"b.$idCol") &&
-          col("a.c") === col("b.c") && col("a.v") === col("b.v"))
-      .filter(bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= maxHamming)
-      .select(col(s"b.$idCol").as(idCol)).distinct()
-  }
+        col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
+          col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as("x"), col(s"b.$idCol").as("y"),
+        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hd"))
+      .distinct()
+      .filter(col("hd") <= maxHamming)
 
   /** Full composition: rows of `docs` surviving exact then near-dup
-    * dedup, original columns preserved.
+    * dedup (the larger id `y` of every near-dup pair drops), original
+    * columns preserved.
     */
   def run(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
           maxHamming: Int = SimhashMaxHamming): DataFrame = {
@@ -88,26 +93,19 @@ object CorpusDedup {
     // twice (once per branch). One materialization replaces the second
     // full pass; same rows, values unchanged.
     val kept = exactSurvivors(docs, idCol, textCol).localCheckpoint()
-    kept.join(nearDupDropped(kept, idCol, textCol, maxHamming), Seq(idCol), "left_anti")
+    val dropped = nearDupPairs(kept, idCol, textCol, maxHamming).select(col("y").as(idCol))
+    kept.join(dropped, Seq(idCol), "left_anti")
   }
 
-  /** Undirected near-dup candidate edges (x < y) within `maxHamming` —
-    * the single home of the pair-building join shared by the cluster
-    * queries and [[clusterLabels]].
+  /** Undirected near-dup candidate edges (x < y) within `maxHamming`
+    * (<= SimhashMaxHamming for guaranteed recall) — the edges of
+    * [[run]]'s drop set, [[clusterLabels]] and the cluster queries.
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = SimhashMaxHamming): DataFrame = {
     require(maxHamming <= SimhashMaxHamming,
       s"maxHamming=$maxHamming exceeds the $SimhashChunks-chunk banding's guaranteed recall bound $SimhashMaxHamming")
-    val chunks = simhashChunks(docs, idCol, textCol)
-    chunks.as("a").join(chunks.as("b"),
-        col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("x"), col(s"b.$idCol").as("y"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hd"))
-      .distinct()
-      .filter(col("hd") <= maxHamming)
-      .select("x", "y")
+    simhashPairs(simhashChunks(docs, idCol, textCol), idCol, maxHamming).select("x", "y")
   }
 
   /** Near-dup cluster label for EVERY doc: the minimum reachable id of

@@ -36,9 +36,9 @@ object IvfIndex {
 
   /** Sequential self-dot in double — same fold order as FloatVectorDot
     * and DuckDB list_sum, so center norms agree bitwise. Shared with
-    * [[ProductQuantizer]].
+    * [[ProductQuantizer]] and the IVF probes of SimilarityQueries.
     */
-  private[operators] def selfDot(c: Array[Float]): Double = {
+  private[graft] def selfDot(c: Array[Float]): Double = {
     var acc = 0.0
     var i = 0
     while (i < c.length) { acc += c(i).toDouble * c(i).toDouble; i += 1 }

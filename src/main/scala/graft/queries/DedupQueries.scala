@@ -146,34 +146,100 @@ object DedupQueries {
   private def jaccardSql(a: String, b: String): String =
     s"(CAST(len(list_intersect($a, $b)) AS DOUBLE) / CAST(len($a) + len($b) - len(list_intersect($a, $b)) AS DOUBLE))"
 
+  /** (doc_id, n, s): every shingle of `sets` as its 60-bit md5 hash `s`,
+    * with its doc's distinct-shingle count `n`. The one explode + md5
+    * pass under the shingle-pair and MinHash stages.
+    */
+  private def shingleHashes(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("sh_s"))
+      .select(col("doc_id"), col("n"), CleanFunctions.md5Hash64(col("sh_s")).as("s"))
+
+  /** df-pruned shingle-hash self-join: (doc_id_a < doc_id_b, na, nb,
+    * common) for every pair sharing a shingle of document frequency <=
+    * MaxShingleDf. A shingle in df docs generates O(df^2) pairs, so one
+    * corpus-boilerplate shingle (df=100k at 100 TB) would explode the
+    * join; shingles past the bound carry no near-dup signal and drop on
+    * BOTH engines. The set sizes na/nb stay unpruned, and the shingle
+    * arrays are distinct, so `common` is |A∩B| over the pruned index.
+    */
+  private def shinglePairs(hashed: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ex = hashed
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
+      .filter(col("df") <= MaxShingleDf)
+      .drop("df")
+    ex.as("a").join(ex.as("b"),
+        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"),
+        col("a.n").as("na"), col("b.n").as("nb"))
+      .agg(count(lit(1)).cast(DoubleType).as("common"))
+  }
+
+  /** MinHash signature per doc: (doc_id, h0..h{MinHashK-1}), the min of
+    * each permutation of the shingle hash — one map-side-combinable
+    * aggregation.
+    */
+  private[graft] def minhashSignatures(hashed: DataFrame): DataFrame = {
+    val mhCols = (0 until GraftConfig.MinHashK).map(i =>
+      min(TextFunctions.minhashPerm(col("s"), i)).as(s"h$i"))
+    hashed.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
+  }
+
+  /** MinHash-LSH candidates: distinct (doc_id_a < doc_id_b) pairs whose
+    * md5 band key agrees on at least one of `bands` bands of
+    * `rowsPerBand` signature rows (band-key equi-join, never a cross join).
+    */
+  private[graft] def minhashCandidates(mh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
+    val bd = mh.select(col("doc_id"), explode(array((0 until bands).map { b =>
+      val ks = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
+      struct(lit(b).as("band"), md5(concat_ws(",", ks: _*)).as("key"))
+    }: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    bd.as("a").join(bd.as("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"))
+      .distinct()
+  }
+
+  /** Candidate pairs with their exact shingle-set Jaccard (`jaccard`). */
+  private def withJaccard(cand: DataFrame, sets: DataFrame): DataFrame =
+    cand
+      .join(sets.as("sa"), col("doc_id_a") === col("sa.doc_id"))
+      .join(sets.as("sb"), col("doc_id_b") === col("sb.doc_id"))
+      .withColumn("jaccard", jaccard(col("sa.sh"), col("sb.sh")))
+
+  /** The production MinHash-LSH pairs (MinHashK / MinHashRowsPerBand
+    * bands, Jaccard-verified): (doc_id_a, doc_id_b, jaccard, ...).
+    */
+  private def minhashPairs(sets: DataFrame): DataFrame = {
+    val mh = minhashSignatures(shingleHashes(sets))
+    withJaccard(minhashCandidates(mh, GraftConfig.MinHashK / GraftConfig.MinHashRowsPerBand,
+        GraftConfig.MinHashRowsPerBand), sets)
+      .filter(col("jaccard") >= MinhashVerifyThreshold)
+  }
+
+  /** The production simhash pairs of the corpus (CorpusDedup's chunk
+    * self-join over `documents`): (x, y, hd).
+    */
+  private def simhashPairs(s: SparkSession, d: String): DataFrame = {
+    val cd = graft.operators.CorpusDedup
+    cd.simhashPairs(cd.simhashChunks(Tables.documents(s, d), "doc_id", "text"),
+      "doc_id", SimhashMaxHamming)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // N-gram Jaccard: explode shingles, equi-join on the 60-bit shingle
     // hash — an 8-byte join key instead of the shingle text, so the
     // shuffle moves a fraction of the bytes — then Jaccard from per-doc
-    // set sizes. Document-frequency pruning BEFORE the self-join: a
-    // shingle in df docs generates O(df^2) candidate pairs, so a single
-    // corpus-boilerplate shingle (df=100k at 100 TB) would explode the
-    // join; shingles with df > MaxShingleDf carry no near-dup signal and
-    // are dropped on BOTH engines (standard practice — the set sizes na/nb
-    // stay unpruned, so common/(na+nb-common) underestimates only for
-    // boilerplate-heavy pairs). The oracle joins on the same md5-derived
-    // hash with the same pruning, so parity is exact.
+    // set sizes, with document-frequency pruning BEFORE the self-join
+    // (see [[shinglePairs]]; common/(na+nb-common) underestimates only
+    // for boilerplate-heavy pairs). The oracle joins on the same
+    // md5-derived hash with the same pruning, so parity is exact.
     "dedup_ngram_jaccard" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val sets = shingleSets(s, d).cache()
-      val ex = sets
-        .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("sh_s"))
-        .select(col("doc_id"), col("n"), CleanFunctions.md5Hash64(col("sh_s")).as("s"))
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
-        .filter(col("df") <= MaxShingleDf)
-        .drop("df")
-      val pairs = ex.as("a").join(ex.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"),
-          col("a.n").as("na"), col("b.n").as("nb"))
-        .agg(count(lit(1)).cast(DoubleType).as("common"))
-      pairs
+      shinglePairs(shingleHashes(sets))
         .withColumn("jaccard", col("common") / (col("na") + col("nb") - col("common")))
         .filter(col("jaccard") >= JaccardThreshold)
         .select(col("doc_id_a"), col("doc_id_b"), graft.functions.CleanFunctions.round4(col("jaccard")).as("jaccard"))
@@ -190,20 +256,8 @@ object DedupQueries {
     // unordered pair carries BOTH directions, kept when either clears
     // the threshold.
     "dedup_containment" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val sets = shingleSets(s, d).cache()
-      val ex = sets
-        .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("sh_s"))
-        .select(col("doc_id"), col("n"), CleanFunctions.md5Hash64(col("sh_s")).as("s"))
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
-        .filter(col("df") <= MaxShingleDf)
-        .drop("df")
-      val pairs = ex.as("a").join(ex.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"),
-          col("a.n").as("na"), col("b.n").as("nb"))
-        .agg(count(lit(1)).cast(DoubleType).as("common"))
-      pairs
+      shinglePairs(shingleHashes(sets))
         .filter(col("common") / col("na") >= ContainmentThreshold ||
           col("common") / col("nb") >= ContainmentThreshold)
         .select(col("doc_id_a"), col("doc_id_b"),
@@ -216,30 +270,7 @@ object DedupQueries {
     // permutation (single map-side-combinable aggregation), 4 bands of 4
     // rows -> band-key equi-join for candidates, exact Jaccard verify.
     "dedup_minhash_lsh" -> { (s, d) =>
-      val sets = shingleSets(s, d).cache()
-      val hashed = sets.select(col("doc_id"),
-        explode(col("sh")).as("s")).select(col("doc_id"),
-        CleanFunctions.md5Hash64(col("s")).as("x"))
-      val mhCols = (0 until GraftConfig.MinHashK).map(i =>
-        min(TextFunctions.minhashPerm(col("x"), i)).as(s"h$i"))
-      val mh = hashed.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
-      val bands = mh.select(col("doc_id"), explode(array(
-        (0 until GraftConfig.MinHashK / GraftConfig.MinHashRowsPerBand).map { b =>
-          val ks = (0 until GraftConfig.MinHashRowsPerBand)
-            .map(r => col(s"h${b * GraftConfig.MinHashRowsPerBand + r}"))
-          struct(lit(b).as("band"), md5(concat_ws(",", ks: _*)).as("key"))
-        }: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"))
-        .distinct()
-      cand
-        .join(sets.as("sa"), col("doc_id_a") === col("sa.doc_id"))
-        .join(sets.as("sb"), col("doc_id_b") === col("sb.doc_id"))
-        .withColumn("jaccard", jaccard(col("sa.sh"), col("sb.sh")))
-        .filter(col("jaccard") >= MinhashVerifyThreshold)
+      minhashPairs(shingleSets(s, d).cache())
         .select(col("doc_id_a"), col("doc_id_b"), graft.functions.CleanFunctions.round4(col("jaccard")).as("jaccard"))
         .orderBy("doc_id_a", "doc_id_b")
     },
@@ -247,15 +278,8 @@ object DedupQueries {
     // SimHash: 60-bit signature per doc (array-fold, no explosion), banded
     // into 6 chunks of 10 bits for the candidate join, exact hamming <= 5.
     "dedup_simhash" -> { (s, d) =>
-      val chunks = graft.operators.CorpusDedup
-        .simhashChunks(Tables.documents(s, d), "doc_id", "text")
-      chunks.as("a").join(chunks.as("b"),
-          col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"),
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast(LongType).as("hamming"))
-        .distinct()
-        .filter(col("hamming") <= SimhashMaxHamming)
+      simhashPairs(s, d)
+        .select(col("x").as("doc_id_a"), col("y").as("doc_id_b"), col("hd").cast(LongType).as("hamming"))
         .orderBy("doc_id_a", "doc_id_b")
     },
 
@@ -269,29 +293,11 @@ object DedupQueries {
     // band-bucket equi-join + exact Jaccard verify.
     "dedup_lsh_tuning" -> { (s, d) =>
       val sets = shingleSets(s, d).cache()
-      val hashed = sets.select(col("doc_id"), explode(col("sh")).as("sh_s"))
-        .select(col("doc_id"), CleanFunctions.md5Hash64(col("sh_s")).as("x"))
-      val mhCols = (0 until GraftConfig.MinHashK).map(i =>
-        min(TextFunctions.minhashPerm(col("x"), i)).as(s"h$i"))
-      val mh = hashed.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
-        .localCheckpoint()
+      val mh = minhashSignatures(shingleHashes(sets)).localCheckpoint()
       val arms = LshTuningConfigs.map { case (nb, rpb) =>
-        val bd = mh.select(col("doc_id"), explode(array((0 until nb).map { b =>
-          val ks = (0 until rpb).map(r => col(s"h${b * rpb + r}"))
-          struct(lit(b).as("band"), md5(concat_ws(",", ks: _*)).as("key"))
-        }: _*)).as("bk"))
-          .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-        val cand = bd.as("a").join(bd.as("b"),
-            col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"))
-          .distinct()
-        cand
-          .join(sets.as("sa"), col("doc_id_a") === col("sa.doc_id"))
-          .join(sets.as("sb"), col("doc_id_b") === col("sb.doc_id"))
-          .withColumn("j", jaccard(col("sa.sh"), col("sb.sh")))
+        withJaccard(minhashCandidates(mh, nb, rpb), sets)
           .agg(count(lit(1)).as("n_candidates"),
-            count(when(col("j") >= MinhashVerifyThreshold, 1)).as("n_verified"))
+            count(when(col("jaccard") >= MinhashVerifyThreshold, 1)).as("n_verified"))
           .select(lit(nb.toLong).as("bands"), lit(rpb.toLong).as("rows_per_band"),
             col("n_candidates"), col("n_verified"),
             CleanFunctions.round4(col("n_verified").cast(DoubleType) /
@@ -304,19 +310,20 @@ object DedupQueries {
     // MinHash-LSH and SimHash detectors discover — the dedup analogue
     // of ts_detector_agreement (two methods agreeing on few pairs means
     // the corpus has near-dups only one lens can see; a method choice
-    // should be made on this number, not on folklore). Reuses both
-    // production entries verbatim (so this measures exactly what ships)
-    // and joins the two O(pairs) outputs on the pair key — no new
+    // should be made on this number, not on folklore). Takes both pair
+    // sets from the stages the two production entries are built from
+    // (so this measures exactly what ships, without their final sorts)
+    // and joins the two O(pairs) sets on the pair key — no new
     // corpus-scale stage.
     "dedup_method_agreement" -> { (s, d) =>
       // Each pair set feeds two consumers (the intersection join AND its
       // own count), so without a cut both corpus-scale pipelines would
       // execute twice inside one action. localCheckpoint materializes
       // the O(pairs) outputs once (SURVEY §5 multi-consumer rule).
-      val ma = queries("dedup_minhash_lsh")(s, d)
+      val ma = minhashPairs(shingleSets(s, d).cache())
         .select("doc_id_a", "doc_id_b").localCheckpoint()
-      val sa = queries("dedup_simhash")(s, d)
-        .select("doc_id_a", "doc_id_b").localCheckpoint()
+      val sa = simhashPairs(s, d)
+        .select(col("x").as("doc_id_a"), col("y").as("doc_id_b")).localCheckpoint()
       val both = ma.join(sa, Seq("doc_id_a", "doc_id_b"))
         .agg(count(lit(1)).as("n_both"))
       val nm = ma.agg(count(lit(1)).as("n_minhash"))
@@ -328,10 +335,6 @@ object DedupQueries {
               .cast(DoubleType), lit(0.0))).as("pair_jaccard"))
     },
 
-    // Embedding near-dup: banded random-hyperplane LSH (4 bands x 4
-    // deterministic +-1 planes) -> bucket equi-join -> exact cosine.
-    // Probabilistic recall (~50% at cos=0.4); the oracle replicates the
-    // identical banding so parity is exact.
     // End-to-end corpus dedup: drop exact duplicates (keep min doc_id
     // per content hash), then drop the larger id of every simhash
     // near-dup pair among the survivors. Delegates to the user-facing
@@ -358,35 +361,17 @@ object DedupQueries {
         .orderBy("doc_id")
     },
 
-    // Candidate ids go through distinct BEFORE scoring (a pair colliding in
-    // k bands would otherwise be cosine-scored k times), and each side's
-    // norm is computed once per vector in the scan, not per pair.
+    // Embedding near-dup: banded random-hyperplane LSH (4 bands x 4
+    // deterministic +-1 planes) -> bucket equi-join -> exact cosine.
+    // Probabilistic recall (~50% at cos=0.4); the oracle replicates the
+    // identical banding so parity is exact.
+    // SimilarityQueries.hyperplaneBandPairs is the band join, shared with
+    // the DBSCAN family.
     "dedup_embedding" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          TextFunctions.vecNorm(col("embedding")).as("nrm"))
-      val bands = e.select(col("vec_id"), explode(array(
-        (0 until EmbBands).map { b =>
-          val key = TextFunctions.packBits(
-            (0 until EmbRowsPerBand).map(r =>
-              TextFunctions.lshSign(col("embedding"), b * EmbRowsPerBand + r)))
-          struct(lit(b).as("band"), key.as("key"))
-        }: _*)).as("bk"))
-        .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id_a"), col("b.vec_id").as("vec_id_b"))
-        .distinct()
-      cand
-        .join(e.as("ea"), col("vec_id_a") === col("ea.vec_id"))
-        .join(e.as("eb"), col("vec_id_b") === col("eb.vec_id"))
-        .select(col("vec_id_a"), col("vec_id_b"),
-          TextFunctions.cosineFromNorms(
-            TextFunctions.dot(col("ea.embedding"), col("eb.embedding")),
-            col("ea.nrm"), col("eb.nrm")).as("cos"))
+      SimilarityQueries.hyperplaneBandPairs(Tables.embeddings(s, d), EmbBands, EmbRowsPerBand)
         .filter(col("cos") >= CosineThreshold)
-        .select(col("vec_id_a"), col("vec_id_b"), graft.functions.CleanFunctions.round4(col("cos")).as("cosine"))
+        .select(col("x").as("vec_id_a"), col("y").as("vec_id_b"),
+          graft.functions.CleanFunctions.round4(col("cos")).as("cosine"))
         .orderBy("vec_id_a", "vec_id_b")
     },
 
@@ -463,47 +448,23 @@ object DedupQueries {
     // stays 100 TB-shaped — and every count is an integer, so parity
     // is exact.
     "dedup_recall_eval" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val sets = shingleSets(s, d).cache()
       // One explode+md5 pass feeds BOTH the ground-truth index and the
       // minhash signatures (the digest is the expensive part — computing
       // it twice doubled the scan cost).
-      val hashed = sets
-        .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("sh_s"))
-        .select(col("doc_id"), col("n"), CleanFunctions.md5Hash64(col("sh_s")).as("s"))
-        .cache()
+      val hashed = shingleHashes(sets).cache()
       // Ground truth: the df-pruned shingle equi-join discovers AND
       // scores in one grouped pass (common = matched-hash count).
-      val ex = hashed
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
-        .filter(col("df") <= MaxShingleDf)
       // truth and cand are each consumed TWICE (their count + the hit
       // join) — cache the tiny pair sets so the expensive discovery
       // lineage doesn't execute twice.
-      val truth = ex.as("a").join(ex.as("b"),
-          col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"),
-          col("a.n").as("na"), col("b.n").as("nb"))
-        .agg(count(lit(1)).cast(DoubleType).as("common"))
+      val truth = shinglePairs(hashed)
         .filter(col("common") / (col("na") + col("nb") - col("common")) >= MinhashVerifyThreshold)
         .select(col("doc_id_a"), col("doc_id_b"))
         .cache()
       // Candidates: the production MinHash band join (same constants).
-      val mhCols = (0 until GraftConfig.MinHashK).map(i =>
-        min(TextFunctions.minhashPerm(col("s"), i)).as(s"h$i"))
-      val mh = hashed.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
-      val bands = mh.select(col("doc_id"), explode(array(
-        (0 until GraftConfig.MinHashK / GraftConfig.MinHashRowsPerBand).map { b =>
-          val ks = (0 until GraftConfig.MinHashRowsPerBand)
-            .map(r => col(s"h${b * GraftConfig.MinHashRowsPerBand + r}"))
-          struct(lit(b).as("band"), md5(concat_ws(",", ks: _*)).as("key"))
-        }: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"))
-        .distinct()
+      val cand = minhashCandidates(minhashSignatures(hashed),
+          GraftConfig.MinHashK / GraftConfig.MinHashRowsPerBand, GraftConfig.MinHashRowsPerBand)
         .cache()
       val hit = cand.join(truth, Seq("doc_id_a", "doc_id_b"))
       val nT = truth.agg(count(lit(1)).as("n_truth"))

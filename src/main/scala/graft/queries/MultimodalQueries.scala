@@ -183,17 +183,9 @@ object MultimodalQueries {
         .filter(length(col("text")) >= F)
         .select(col("doc_id"),
           graft.functions.TextFunctions.simhash60(frames).as("sig"))
-      val chunks = sigs.select(col("doc_id"), col("sig"), explode(array(
-          (0 until 6).map(c => struct(lit(c).as("c"),
-            shiftright(col("sig"), c * 10).bitwiseAND(lit(1023L)).as("v"))): _*)).as("ck"))
-        .select(col("doc_id"), col("sig"), col("ck.c").as("c"), col("ck.v").as("v"))
-      chunks.as("a").join(chunks.as("b"),
-          col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_id_a"), col("b.doc_id").as("doc_id_b"),
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).cast(LongType).as("hamming"))
-        .distinct()
-        .filter(col("hamming") <= 5)
+      val CD = graft.operators.CorpusDedup
+      CD.simhashPairs(CD.simhashBands(sigs, "doc_id"), "doc_id", CD.SimhashMaxHamming)
+        .select(col("x").as("doc_id_a"), col("y").as("doc_id_b"), col("hd").cast(LongType).as("hamming"))
         .orderBy("doc_id_a", "doc_id_b")
     },
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.operators.IvfIndex
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over `embeddings`
@@ -111,6 +112,55 @@ object SimilarityQueries {
        |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, n_id) AS rk FROM sc)
        |WHERE rk <= $TopK ORDER BY q_id, rk""".stripMargin
 
+  /** `embeddings` as (vec_id, embedding, nrm): the corpus every IVF
+    * entry fits, assigns and re-ranks.
+    */
+  private def ivfCorpus(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
+      TextFunctions.vecNorm(col("embedding")).as("nrm"))
+
+  /** The nprobe probe of the IVF entries: each query row of `q` (q_id,
+    * q_emb, ...) against the broadcast centers (16 x 64 floats of model
+    * parameters), cells ranked by the shared -2*dot+cc score (|q|^2 is
+    * constant per query, so the order matches true euclidean distance),
+    * cell ties on id; the nearest `nprobe` cells survive as `cell` with
+    * their rank `crk`.
+    */
+  private def ivfProbe(q: DataFrame, centers: Seq[(Int, Array[Float])], nprobe: Int): DataFrame = {
+    import q.sparkSession.implicits._
+    val centersDf = centers.map { case (cid, c) => (cid, c, IvfIndex.selfDot(c)) }
+      .toDF("cell", "center", "cc")
+    q.crossJoin(broadcast(centersDf))
+      .withColumn("score_c",
+        lit(-2.0) * TextFunctions.dot(col("q_emb"), col("center")) + col("cc"))
+      .withColumn("crk", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("score_c"), col("cell"))))
+      .filter(col("crk") <= nprobe)
+      .select(q.columns.map(col) :+ col("cell") :+ col("crk"): _*)
+  }
+
+  /** IVF search over a cell table (`ivfCorpus` rows + `cell`): the
+    * `vec_id % 50` queries probe their `nprobe` nearest cells and every
+    * other vector in a probed cell is scored by exact round4 cosine —
+    * (q_id, crk, n_id, score), unranked.
+    */
+  private def ivfScored(cells: DataFrame, centers: Seq[(Int, Array[Float])], nprobe: Int): DataFrame = {
+    val probe = ivfProbe(cells.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("nrm").as("q_nrm")), centers, nprobe)
+    // No broadcast hint: the probe side is corpus-proportional (2% of
+    // the corpus x nprobe cells) — a forced broadcast would OOM at
+    // 100x scale. The cell equi-join shuffles on `cell`; AQE promotes
+    // it to a broadcast at runtime only when the measured probe side
+    // is genuinely small.
+    cells.join(probe,
+        cells("cell") === probe("cell") && col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("crk"), col("vec_id").as("n_id"),
+        graft.functions.CleanFunctions.round4(TextFunctions.cosineFromNorms(
+          TextFunctions.dot(col("q_emb"), col("embedding")),
+          col("q_nrm"), col("nrm"))).as("score"))
+  }
+
   /** χ²(EmbDim) upper flag threshold for emb_mahalanobis:
     * dim + 3·√(2·dim), the normal approximation's 3σ point.
     */
@@ -152,18 +202,29 @@ object SimilarityQueries {
     * corpus-scale stage of the DBSCAN family, factored so the two-level
     * stability sweep pays for it once (threshold filters are free).
     */
-  private def dbscanCandCos(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"),
-        TextFunctions.vecNorm(col("embedding")).as("nrm"))
-    val bands = e.select(col("vec_id"), explode(array(
-      (0 until DbscanBands).map { b =>
-        val key = TextFunctions.packBits((0 until DbscanRowsPerBand).map(r =>
-          TextFunctions.lshSign(col("embedding"), b * DbscanRowsPerBand + r)))
+  private def dbscanCandCos(s: SparkSession, d: String): DataFrame =
+    hyperplaneBandPairs(Tables.embeddings(s, d), DbscanBands, DbscanRowsPerBand)
+
+  /** The single home of banded random-hyperplane LSH pairs over an
+    * (vec_id, embedding) frame: `bands` band keys of `rowsPerBand`
+    * deterministic +-1 planes each, band-key equi-join, distinct
+    * (x < y) pairs, exact cosine `cos`. Candidate ids go through distinct
+    * BEFORE scoring (a pair colliding in k bands would otherwise be
+    * scored k times), and each side's norm is computed once per vector
+    * in the scan, not per pair. Shared by the DBSCAN family and
+    * `dedup_embedding`.
+    */
+  private[graft] def hyperplaneBandPairs(emb: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
+    val e = emb.select(col("vec_id"), col("embedding"),
+      TextFunctions.vecNorm(col("embedding")).as("nrm"))
+    val bd = e.select(col("vec_id"), explode(array(
+      (0 until bands).map { b =>
+        val key = TextFunctions.packBits((0 until rowsPerBand).map(r =>
+          TextFunctions.lshSign(col("embedding"), b * rowsPerBand + r)))
         struct(lit(b).as("band"), key.as("key"))
       }: _*)).as("bk"))
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    bands.as("a").join(bands.as("b"),
+    bd.as("a").join(bd.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("x"), col("b.vec_id").as("y")).distinct()
@@ -289,14 +350,10 @@ object SimilarityQueries {
       .select(col("vec_id"), col("embedding"), col("nrm"), col("bucket"),
         when(col("np2").isNotNull, subBits).as("subkey")) // null = unsplit home
     // Level-1 probe set (own bucket + 1-flips + capped 2-flips).
-    val flips: Seq[org.apache.spark.sql.Column] =
-      (0 until np).map(p => col("bucket").bitwiseXOR(lit(1L << p))) ++
-        A.twoBitFlipPairs(np).map { case (p, q) =>
-          col("bucket").bitwiseXOR(lit((1L << p) | (1L << q))) }
     val probes = sb.select(Seq(col("vec_id").as("a_id"),
       col("embedding").as("a_emb"), col("nrm").as("a_nrm")) ++
       (0 until A.MaxSubPlanes).map(j => col(s"pj$j").as(s"qpj$j")) :+
-      explode(array(col("bucket") +: flips: _*)).as("pbucket"): _*)
+      explode(A.probeBuckets(np)).as("pbucket"): _*)
     val pbthr = bthr.withColumnRenamed("bucket", "pbucket")
     // Probes into UNSPLIT buckets: plain bucket equi-join.
     val candU = mem.where(col("subkey").isNull)
@@ -738,48 +795,10 @@ object SimilarityQueries {
     "ann_ivf_topk" -> { (s, d) =>
       // Cached: the fit re-scans it per Lloyd round (count, init join,
       // assignment aggregates) and the probe/score passes read it again.
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          TextFunctions.vecNorm(col("embedding")).as("nrm"))
-        .cache()
-      val centers = graft.operators.IvfIndex.fit(
-        e, "vec_id", "embedding", IvfCentroids, EmbDim, IvfIters)
-      val cells = e.withColumn("cell",
-        graft.operators.IvfIndex.cellExpr(col("embedding"), centers)).cache()
-
-      // Model parameters (16 x 64 floats) as a broadcast table; queries
-      // rank cells by the shared -2*dot+cc score (|q|^2 is constant per
-      // query, so ordering matches true euclidean distance).
-      import s.implicits._
-      val centersDf = centers.map { case (cid, c) =>
-        (cid, c, c.foldLeft(0.0)((a, v) => a + v.toDouble * v.toDouble))
-      }.toDF("cell", "center", "cc")
-      val probe = cells.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"))
-        .crossJoin(broadcast(centersDf))
-        .withColumn("score_c",
-          lit(-2.0) * TextFunctions.dot(col("q_emb"), col("center")) + col("cc"))
-        .withColumn("crk", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("score_c"), col("cell"))))
-        .filter(col("crk") <= IvfProbes)
-        .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cell"))
-
-      // No broadcast hint: the probe side is corpus-proportional (2% of
-      // the corpus x IvfProbes cells) — a forced broadcast would OOM at
-      // 100x scale. The cell equi-join shuffles on `cell`; AQE promotes
-      // it to a broadcast at runtime only when the measured probe side
-      // is genuinely small.
-      val scored = cells.join(probe,
-          cells("cell") === probe("cell") && col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          graft.functions.CleanFunctions.round4(TextFunctions.cosineFromNorms(
-            TextFunctions.dot(col("q_emb"), col("embedding")),
-            col("q_nrm"), col("nrm"))).as("score"))
-      val w = Window.partitionBy("q_id").orderBy(desc("score"), col("n_id"))
-      scored.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= TopK)
-        .orderBy("q_id", "rk")
+      val e = ivfCorpus(s, d).cache()
+      val centers = IvfIndex.fit(e, "vec_id", "embedding", IvfCentroids, EmbDim, IvfIters)
+      val cells = e.withColumn("cell", IvfIndex.cellExpr(col("embedding"), centers)).cache()
+      graft.operators.AnnSearch.ranked(ivfScored(cells, centers, IvfProbes).drop("crk"), TopK)
     },
 
     // STREAMING vector search against the static IVF index — the live
@@ -797,21 +816,14 @@ object SimilarityQueries {
     "streaming_ann_topk" -> { (s, d) =>
       import s.implicits._
       import graft.streaming.{AnnCand, AnnQuery, StreamingAnomaly}
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          TextFunctions.vecNorm(col("embedding")).as("nrm"))
-        .cache()
-      val centers = graft.operators.IvfIndex.fit(
-        e, "vec_id", "embedding", IvfCentroids, EmbDim, IvfIters)
-      val cells = e.withColumn("cell",
-        graft.operators.IvfIndex.cellExpr(col("embedding"), centers)).cache()
-      // Router replica: cc via the same foldLeft as the batch centersDf,
+      val e = ivfCorpus(s, d).cache()
+      val centers = IvfIndex.fit(e, "vec_id", "embedding", IvfCentroids, EmbDim, IvfIters)
+      val cells = e.withColumn("cell", IvfIndex.cellExpr(col("embedding"), centers)).cache()
+      // Router replica: cc via the same selfDot as the batch probe,
       // dot via the same sequential double accumulation as FloatVectorDot,
       // pick = ascending (-2·dot + cc, cell) — the batch probe window's
       // exact ordering on the exact doubles.
-      val ccs = centers.map { case (cid, c) =>
-        (cid, c, c.foldLeft(0.0)((a, v) => a + v.toDouble * v.toDouble))
-      }
+      val ccs = centers.map { case (cid, c) => (cid, c, IvfIndex.selfDot(c)) }
       def dotF(a: Seq[Float], b: Array[Float]): Double = {
         var acc = 0.0; var i = 0
         while (i < b.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
@@ -876,34 +888,11 @@ object SimilarityQueries {
     // The truth side is the bounded-query-batch brute force (broadcast
     // contract shared with ann_topk_cosine).
     "ann_ivf_nprobe_sweep" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          TextFunctions.vecNorm(col("embedding")).as("nrm"))
-        .cache()
-      val centers = graft.operators.IvfIndex.fit(
-        e, "vec_id", "embedding", IvfCentroids, EmbDim, IvfIters)
-      val cells = e.withColumn("cell",
-        graft.operators.IvfIndex.cellExpr(col("embedding"), centers)).cache()
+      val e = ivfCorpus(s, d).cache()
+      val centers = IvfIndex.fit(e, "vec_id", "embedding", IvfCentroids, EmbDim, IvfIters)
+      val cells = e.withColumn("cell", IvfIndex.cellExpr(col("embedding"), centers)).cache()
       import s.implicits._
-      val centersDf = centers.map { case (cid, c) =>
-        (cid, c, c.foldLeft(0.0)((a, v) => a + v.toDouble * v.toDouble))
-      }.toDF("cell", "center", "cc")
-      val probe = cells.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"))
-        .crossJoin(broadcast(centersDf))
-        .withColumn("score_c",
-          lit(-2.0) * TextFunctions.dot(col("q_emb"), col("center")) + col("cc"))
-        .withColumn("crk", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("score_c"), col("cell"))))
-        .filter(col("crk") <= SweepProbes.max)
-        .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cell"), col("crk"))
-      val scored = cells.join(probe,
-          cells("cell") === probe("cell") && col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("crk"), col("vec_id").as("n_id"),
-          graft.functions.CleanFunctions.round4(TextFunctions.cosineFromNorms(
-            TextFunctions.dot(col("q_emb"), col("embedding")),
-            col("q_nrm"), col("nrm"))).as("score"))
+      val scored = ivfScored(cells, centers, SweepProbes.max)
         .localCheckpoint() // consumed once per sweep point
       val ivk = SweepProbes.map { np =>
         val w = Window.partitionBy("q_id").orderBy(desc("score"), col("n_id"))
@@ -1020,12 +1009,7 @@ object SimilarityQueries {
       import s.implicits._
       import org.apache.spark.sql.types.{DecimalType, LongType}
       import graft.functions.CleanFunctions.{round4, round6}
-      def cc(c: Array[Float]): Double =
-        c.foldLeft(0.0)((a, v) => a + v.toDouble * v.toDouble)
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          TextFunctions.vecNorm(col("embedding")).as("nrm"))
-        .cache()
+      val e = ivfCorpus(s, d).cache()
       // IVF k == PQ k (both 16) and both fits seed from the identical
       // hash-order picks, so ONE init scan feeds both (r17 — the two
       // separate fit() calls ran byte-identical init jobs twice).
@@ -1046,20 +1030,12 @@ object SimilarityQueries {
       val q = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
           col("nrm").as("q_nrm")).cache()
-      val centersDf = centers.map { case (cid, c) => (cid, c, cc(c)) }
-        .toDF("cell", "center", "ccc")
-      val probe = q.crossJoin(broadcast(centersDf))
-        .withColumn("score_c",
-          lit(-2.0) * TextFunctions.dot(col("q_emb"), col("center")) + col("ccc"))
-        .withColumn("crk", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("score_c"), col("cell"))))
-        .filter(col("crk") <= IvfProbes)
-        .select(col("q_id"), col("cell"))
+      val probe = ivfProbe(q, centers, IvfProbes).select(col("q_id"), col("cell"))
       // Per-query ADC lookup table: ||q_j - codebook_j[k]||^2 minus the
       // per-query constant |q_j|^2 (dropping it shifts every candidate
       // of a query equally, so ranking is unchanged).
       val bookDf = books.zipWithIndex.flatMap { case (book, j) =>
-        book.map { case (code, c) => (j, code, c, cc(c)) }
+        book.map { case (code, c) => (j, code, c, IvfIndex.selfDot(c)) }
       }.toDF("j", "code", "bcent", "bcc")
       val lut = q.crossJoin(broadcast(bookDf))
         .select(col("q_id"), col("j"), col("code"),
@@ -1099,10 +1075,7 @@ object SimilarityQueries {
         .select(col("q_id"), col("n_id"), round4(TextFunctions.cosineFromNorms(
           TextFunctions.dot(col("q_emb"), col("embedding")),
           col("q_nrm"), col("nrm"))).as("score"))
-      sc.withColumn("rk", row_number().over(
-          Window.partitionBy("q_id").orderBy(desc("score"), col("n_id"))).cast(LongType))
-        .filter(col("rk") <= TopK)
-        .orderBy("q_id", "rk")
+      graft.operators.AnnSearch.ranked(sc, TopK)
     },
 
     // Simplified (centroid-based) silhouette of the k-means assignment:
@@ -1375,16 +1348,12 @@ object SimilarityQueries {
           TextFunctions.vecNorm(col("embedding")).as("q_nrm"))
       val c = e.select(col("vec_id"), col("embedding"), col("label"),
         TextFunctions.vecNorm(col("embedding")).as("nrm"))
-      val w = Window.partitionBy("q_id").orderBy(desc("score"), col("n_id"))
-      c.join(broadcast(q),
+      graft.operators.AnnSearch.ranked(c.join(broadcast(q),
           col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("n_id"),
           round4(TextFunctions.cosineFromNorms(
             TextFunctions.dot(col("q_emb"), col("embedding")),
-            col("q_nrm"), col("nrm"))).as("score"))
-        .withColumn("rk", row_number().over(w).cast(LongType))
-        .where(col("rk") <= K)
-        .orderBy("q_id", "rk")
+            col("q_nrm"), col("nrm"))).as("score")), K)
     },
 
     // Embedding-distribution drift PSI — the ML-monitoring gate between

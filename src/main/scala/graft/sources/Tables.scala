@@ -70,7 +70,25 @@ object Tables {
     */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p, key) else df
+    if (plannedWidth(df) < p) df.repartition(p, key) else df
+  }
+
+  /** `df`'s output partition count, decided without running a job. A
+    * plan that holds an exchange reports the width it plans (0 when its
+    * top is unknown-partitioned): reading `df.rdd` there would run the
+    * exchange — under AQE, a whole shuffle the action then runs again —
+    * just to learn a count. Scans, cached frames and checkpoints report
+    * their RDD's count, which costs no job.
+    */
+  private def plannedWidth(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    if (plan.exists(_.isInstanceOf[Exchange])) plan.outputPartitioning.numPartitions
+    else df.rdd.getNumPartitions
   }
 
   /** Pin a compute-dense per-key stage to the session's configured

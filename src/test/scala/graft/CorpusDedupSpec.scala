@@ -115,4 +115,33 @@ class CorpusDedupSpec extends AnyFunSuite {
     val jobs = SparkTestSession.countJobs(call())
     assert(jobs <= 12, s"$jobs jobs")
   }
+
+  test("run = exact survivors minus the larger id of every near-dup pair") {
+    val rnd = new scala.util.Random(41)
+    val docs = (0 until 25).flatMap { b =>
+      val toks = Vector.fill(60)(s"w${rnd.nextInt(300)}")
+      val near = toks.updated(rnd.nextInt(60), "sub")
+      Seq((10L * b, toks.mkString(" ")), (10L * b + 1, near.mkString(" ")),
+        (10L * b + 2, toks.mkString(" ")))
+    }.toDF("doc_id", "text")
+    val kept = CorpusDedup.exactSurvivors(docs, "doc_id", "text").cache()
+    val survivors = kept.select("doc_id").as[Long].collect().toSet
+    val dropped = CorpusDedup.nearDupPairs(kept, "doc_id", "text").select("y").as[Long].collect().toSet
+    val out = CorpusDedup.run(docs).select("doc_id").as[Long].collect()
+    assert(out.length == out.distinct.length)
+    assert(dropped.nonEmpty && out.toSet == survivors -- dropped)
+    kept.unpersist()
+  }
+
+  test("an empty or one-doc corpus gives empty or one-row results, no error") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(CorpusDedup.run(empty).count() == 0)
+    assert(CorpusDedup.nearDupPairs(empty, "doc_id", "text").count() == 0)
+    assert(CorpusDedup.leakageSafeSplit(empty).count() == 0)
+    val one = Seq((7L, base)).toDF("doc_id", "text")
+    assert(CorpusDedup.run(one).select("doc_id").as[Long].collect().toSeq == Seq(7L))
+    assert(CorpusDedup.nearDupPairs(one, "doc_id", "text").count() == 0)
+    val split = CorpusDedup.leakageSafeSplit(one).collect()
+    assert(split.length == 1 && split.head.getLong(0) == 7L && split.head.getLong(1) == 7L)
+  }
 }
